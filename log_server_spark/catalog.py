@@ -13,11 +13,69 @@ from __future__ import annotations
 
 import contextlib
 import glob
+import json
 import os
 import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# footer key where Spark's parquet writer stores the exact data StructType
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _visible(name: str) -> bool:
+    """Spark's hidden-path rule for file discovery: names starting with
+    ``.`` (checksums, staging) or ``_`` (``_SUCCESS``, ``_torn-*`` sweeps,
+    ``_temporary``) are invisible to reads, unless a ``k=v`` partition dir."""
+    return not (name.startswith(".") or (name.startswith("_") and "=" not in name))
+
+
+def first_parquet_file(path: str) -> str | None:
+    """``path`` itself if it is a file, else the first visible ``*.parquet``
+    file of a sorted top-down walk — O(depth) directory listings, not
+    O(files)."""
+    if os.path.isfile(path):
+        return path
+    for d, dirs, files in os.walk(path):
+        dirs[:] = sorted(x for x in dirs if _visible(x))
+        for f in sorted(files):
+            if f.endswith(".parquet") and _visible(f):
+                return os.path.join(d, f)
+    return None
+
+
+def footer_schema(path: str) -> StructType | None:
+    """Data-column schema of the parquet table at ``path``, from ONE footer
+    read driver-side — the same single-file choice Spark's non-merging
+    inference makes, without the Spark job it submits to read that footer.
+    Spark-written files carry their exact ``StructType`` in the row-metadata
+    key; pyarrow-written files convert from the arrow schema. Partition
+    columns are absent from data files, so Spark still types them from the
+    ``k=v`` directory names, driver-side, exactly as an unpinned read does.
+    None when ``path`` holds no visible parquet file."""
+    import pyarrow.parquet as pq
+
+    f = first_parquet_file(path)
+    if f is None:
+        return None
+    schema = pq.read_schema(f)
+    meta = schema.metadata or {}
+    if _SPARK_ROW_METADATA in meta:
+        return StructType.fromJson(json.loads(meta[_SPARK_ROW_METADATA]))
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(schema)
+
+
+def read_parquet(spark: SparkSession, path: str, *more: str) -> DataFrame:
+    """``spark.read.parquet(path, *more)`` with the schema pinned from the
+    first path's footer (see ``footer_schema``). A path with no parquet
+    file keeps the plain read and its error."""
+    schema = footer_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path, *more)
 
 
 class WarehouseLockTimeout(TimeoutError):
@@ -136,15 +194,10 @@ class Warehouse:
 
     def exists(self, name: str) -> bool:
         p = self.path(name)
-        if not os.path.isdir(p):
-            return False
-        for _dirpath, _dirs, files in os.walk(p):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
+        return os.path.isdir(p) and first_parquet_file(p) is not None
 
     def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(name))
+        return read_parquet(self.spark, self.path(name))
 
     def write(
         self,

@@ -57,18 +57,20 @@ def cmd_update(args) -> int:
 def cmd_get(args) -> int:
     """Point lookup; repeat --warehouse for the reference's multi-year
     fan-out (GetCommand.scala:29-36: years.map(get).reduce(++) — a bag
-    union across databases, results globally ts-sorted)."""
+    union across databases, results globally ts-sorted): the records
+    frames are unioned first, so the one lookup sorts the whole answer."""
     from functools import reduce
 
+    from log_server_spark.catalog import Warehouse
     from log_server_spark.operators.lookup import get_records, to_json_records
+    from log_server_spark.plans.pipeline import RECORDS
 
     spark, owned = _session(args.master)
-    parts = [
-        get_records(spark.read.parquet(os.path.join(w, "records")), args.table, args.id)
-        for w in args.warehouse
-    ]
-    unioned = reduce(lambda a, b: a.unionByName(b), parts).orderBy("ts_millis")
-    for row in to_json_records(unioned).collect():
+    records = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [Warehouse(w, spark).read(RECORDS) for w in args.warehouse],
+    )
+    for row in to_json_records(get_records(records, args.table, args.id)).collect():
         print(row["json"])
     if owned:
         spark.stop()
@@ -76,10 +78,12 @@ def cmd_get(args) -> int:
 
 
 def cmd_info(args) -> int:
+    from log_server_spark.catalog import Warehouse
     from log_server_spark.operators.aggregate import info
+    from log_server_spark.plans.pipeline import RECORDS
 
     spark, owned = _session(args.master)
-    records = spark.read.parquet(os.path.join(args.warehouse, "records"))
+    records = Warehouse(args.warehouse, spark).read(RECORDS)
     total = 0
     for row in info(records).collect():
         total += row["records"]
@@ -103,7 +107,13 @@ def cmd_archive(args) -> int:
 
     from pyspark.sql import functions as F
 
-    from log_server_spark.catalog import Warehouse
+    from log_server_spark.catalog import Warehouse, read_parquet
+    from log_server_spark.plans.pipeline import (
+        RECORDS,
+        compact_bookkeeping,
+        compact_keys,
+        sweep_torn_batches,
+    )
 
     spark, owned = _session(args.master)
     wh = Warehouse(args.warehouse, spark)  # also recovers a crashed prior swap
@@ -114,7 +124,7 @@ def cmd_archive(args) -> int:
         if owned:
             spark.stop()
         return 0
-    records_dir = os.path.join(args.warehouse, "records")
+    records_dir = wh.path(RECORDS)
     old_dir = records_dir + ".old"
     tmp_dir = records_dir + ".compact"
     # archive is where compression strength belongs (the reference keeps
@@ -130,11 +140,9 @@ def cmd_archive(args) -> int:
         # must never be compacted into batch=archived or marked read-only —
         # its orphaned keys would anti-join the reprocessed records away
         # while the torn records themselves get deleted (data loss)
-        from log_server_spark.plans.pipeline import sweep_torn_batches
-
         swept = sweep_torn_batches(wh)
         shutil.rmtree(tmp_dir, ignore_errors=True)
-        df = spark.read.parquet(records_dir)
+        df = wh.read(RECORDS)
         n_before = len(glob.glob(os.path.join(records_dir, "**", "*.parquet"), recursive=True))
         rows_before = df.count()
         (
@@ -143,7 +151,7 @@ def cmd_archive(args) -> int:
             .partitionBy("batch", "sink", *(["day"] if "day" in df.columns and args.by_day else []))
             .parquet(tmp_dir)
         )
-        rows_after = spark.read.parquet(tmp_dir).count()
+        rows_after = read_parquet(spark, tmp_dir).count()
         if rows_after != rows_before:
             shutil.rmtree(tmp_dir)
             print(f"ABORT: row count mismatch {rows_before} -> {rows_after}", file=sys.stderr)
@@ -172,8 +180,6 @@ def cmd_archive(args) -> int:
             # one file per (day, bucket) and their bookkeeping to one file
             # per table. Skipped under --no-mark: merging erases per-batch
             # attribution, which is only sound for read-only batches.
-            from log_server_spark.plans.pipeline import compact_bookkeeping, compact_keys
-
             keys_stats = compact_keys(wh)
             book_stats = compact_bookkeeping(wh, set(archived))
     n_after = len(glob.glob(os.path.join(records_dir, "**", "*.parquet"), recursive=True))

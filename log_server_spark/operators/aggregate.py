@@ -91,7 +91,9 @@ def combined_stats(records: DataFrame, window: str = "1 day"):
 
 def info(records: DataFrame) -> DataFrame:
     """`info`-command analogue over the stored records table (A3, §3.3):
-    one row per (sink, day) "segment" sorted by name."""
+    one row per (sink, day) "segment" sorted by name. The O(sinks x days)
+    result is sorted in one partition, not range-partitioned: a global
+    ``orderBy`` would add a sampling job to order a few dozen rows."""
     return (
         records.groupBy("sink", "day")
         .agg(
@@ -100,5 +102,6 @@ def info(records: DataFrame) -> DataFrame:
             F.min("ts_millis").alias("min_ts"),
             F.max("ts_millis").alias("max_ts"),
         )
-        .orderBy("sink", "day")
+        .repartition(1)
+        .sortWithinPartitions("sink", "day")
     )

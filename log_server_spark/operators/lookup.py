@@ -1,10 +1,18 @@
 """Point lookup — the reference `get <table> <id>` command (SURVEY.md §3.2).
 
-``get(table, id)`` ≡ filter on the key + orderBy(ts) (F1, O1) with id
+``get(table, id)`` ≡ filter on the key + sort by ts (F1, O1) with id
 coercion (F7: RecordId.parse tries Int first — "123" and 123 are the same
 id, RecordId.scala:61-62). Catalyst pushes the equality predicates into the
-parquet/Iceberg scan, so file/partition stats do the pruning the reference's
-sorted-array header index did; no index code is needed.
+parquet scan, where row-group min/max stats skip the row groups that cannot
+hold the key. That is NOT file pruning: ``table`` and ``record_id`` are not
+partition columns, so in the ``(batch, sink)`` layout a get still lists and
+opens every records file (``lookup.files_listed`` was 42 after 4 benchmark
+batches) — the reference's sorted-array header index went straight to the
+segment. A key-sorted or key-bucketed layout is what would prune files.
+
+The answer is 0-3 rows, so it is ordered by a single-partition
+``sortWithinPartitions`` rather than a global ``orderBy``: the global sort
+would add a range-partition sampling job for a result that fits one task.
 
 Output shape mirrors JsRecord JSON (S8: GetCommand.scala:38-40).
 """
@@ -30,7 +38,8 @@ def get_records(records: DataFrame, table: str, record_id: str | int) -> DataFra
         records.filter(
             (F.col("table") == table) & (F.col("record_id") == rid)
         )
-        .orderBy("ts_millis")
+        .repartition(1)
+        .sortWithinPartitions("ts_millis")
         .select("table", "record_id", "ts_millis", "text", "url")
     )
 

@@ -42,7 +42,13 @@ Scale properties:
 - per-batch driver actions are collapsed to: one stats aggregation on the
   persisted parse output, the records write (ingest counters ride it as
   ``df.observe`` metrics — zero extra jobs), and two small read-backs of
-  the just-written batch partition (keys projection + partial aggregates);
+  the just-written batch partition (keys projection + partial aggregates),
+  plus the one partials merge of ``refresh_aggregates``. That is ~18 jobs
+  for a steady update of ~1k pages, AQE shuffle-map jobs included, and
+  none of them is planning or bookkeeping: every parquet read pins its
+  schema from one footer read driver-side (``catalog.read_parquet``, no
+  schema-inference job), and lineage plus the partials' batch ids are read
+  with pyarrow;
 - aggregates refresh by MERGING per-batch partials (counts/min/max/sums and
   HLL sketch registers via ``hll_union_agg``) — O(batches x sinks x days)
   rows, never a rescan of the records table (ROADMAP #2);
@@ -62,7 +68,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from log_server_spark.catalog import ArchivedBatchError, Warehouse
+from log_server_spark.catalog import ArchivedBatchError, Warehouse, read_parquet
 from log_server_spark.functions.parse import parse_pages
 from log_server_spark.operators.dedup import DEDUP_KEY, anti_join_committed, split_duplicates
 from log_server_spark.operators.enrich import enrich
@@ -113,7 +119,7 @@ def _saved_records(spark: SparkSession, files: list[str]) -> DataFrame:
 
 def _opt_lookup(spark: SparkSession, path: str, schema: str) -> DataFrame:
     if os.path.exists(path):
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     return spark.createDataFrame([], schema)
 
 
@@ -123,30 +129,36 @@ def _committed_batches(wh: Warehouse) -> dict[str, frozenset]:
     so a changed batching or a newly landed early-sorting file silently
     remaps ids to different file sets.
 
-    CEILING: this collects the whole lineage table driver-side — O(batches
+    Read driver-side with pyarrow (hidden ``_``/``.`` files skipped, as a
+    Spark read skips them): the table is one tiny file per batch, and a
+    Spark read would spend a schema-inference job plus a collect job on it.
+
+    CEILING: this reads the whole lineage table driver-side — O(batches
     x units/batch) small rows per run. Fine for years of daily batches
     (10^4 rows); at ~10^5+ rows (high-frequency micro-batching) the right
     structure is a snapshot log keyed by batch with only the planned window
     read back — what an Iceberg catalog's snapshot/manifest list gives for
     free. The count guard below makes the ceiling loud instead of silent.
     """
+    import pyarrow.parquet as pq
+
     if not wh.exists(LINEAGE):
         return {}
     out: dict[str, set] = {}
-    rows = (
-        wh.read(LINEAGE).filter(F.col("status") == "committed").select("batch", "unit").collect()
+    t = pq.read_table(
+        wh.path(LINEAGE), columns=["batch", "unit"], filters=[("status", "==", "committed")]
     )
-    if len(rows) > 100_000:
+    if t.num_rows > 100_000:
         import warnings
 
         warnings.warn(
-            f"lineage has {len(rows)} committed rows; driver-side resume "
+            f"lineage has {t.num_rows} committed rows; driver-side resume "
             "bookkeeping is past its design ceiling — switch to a snapshot-"
             "log catalog (e.g. Iceberg) for this ingest frequency",
             stacklevel=2,
         )
-    for r in rows:
-        out.setdefault(r["batch"], set()).add(r["unit"])
+    for b, u in zip(t.column("batch").to_pylist(), t.column("unit").to_pylist()):
+        out.setdefault(b, set()).add(u)
     return {b: frozenset(u) for b, u in out.items()}
 
 
@@ -425,7 +437,7 @@ def compact_keys(wh: Warehouse) -> dict | None:
         spark.sql(f"DROP TABLE {tmp_name}")  # external: files stay
     else:  # legacy plain layout: one file per day
         merged.repartition("day").write.partitionBy("batch", "day").parquet(tmp)
-    rows_after = None if skip_verify else spark.read.parquet(tmp).count()
+    rows_after = None if skip_verify else read_parquet(spark, tmp).count()
     if not skip_verify and rows_after != rows_before:
         shutil.rmtree(tmp)
         raise RuntimeError(
@@ -723,7 +735,7 @@ def _run_batch_inner(
     if source_format == "saved":
         parsed = _saved_records(spark, files).withColumn("day", F.to_date("warc_ts"))
     else:
-        pages = spark.read.parquet(*files)
+        pages = read_parquet(spark, *files)
         parsed = parse_pages(pages).withColumn("day", F.to_date("warc_ts"))
     parsed.persist(getattr(StorageLevel, os.environ.get("LSS_PERSIST_LEVEL", "MEMORY_AND_DISK")))
 
@@ -824,7 +836,7 @@ def _run_batch_inner(
     # without this, keys and partials each re-open every file in the
     # partition. The cache is O(batch x 9 thin cols), spill-safe.
     written = (
-        spark.read.parquet(batch_dir)
+        read_parquet(spark, batch_dir)
         .select(
             "table", "record_id", "record_hash", "ts_millis", "status",
             "sink", "warc_ts", "n_bytes", "url",
@@ -945,11 +957,11 @@ def refresh_aggregates(spark: SparkSession, wh: Warehouse, exact: bool = False) 
         # merged results are only complete if EVERY committed batch with
         # data contributed partials — a legacy (round-1) warehouse has
         # committed batches that predate the partials table; merging would
-        # silently drop their rows from the published aggregates
-        have = {
-            r["batch"]
-            for r in wh.read(METRICS_PARTIALS).select("batch").distinct().collect()
-        }
+        # silently drop their rows from the published aggregates. The batch
+        # ids are O(batches) tiny rows: read them driver-side, no Spark job
+        import pyarrow.parquet as pq
+
+        have = set(pq.read_table(wh.path(METRICS_PARTIALS), columns=["batch"])["batch"].to_pylist())
         with_data = {
             os.path.basename(d).split("=", 1)[1]
             for d in glob.glob(os.path.join(wh.path(RECORDS), "batch=*"))
