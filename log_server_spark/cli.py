@@ -111,30 +111,30 @@ def cmd_archive(args) -> int:
     from log_server_spark.plans.pipeline import (
         RECORDS,
         compact_bookkeeping,
-        compact_keys,
+        rebuild_keys,
         sweep_torn_batches,
     )
 
     spark, owned = _session(args.master)
-    wh = Warehouse(args.warehouse, spark)  # also recovers a crashed prior swap
+    wh = Warehouse(args.warehouse, spark)
     if getattr(args, "unmark", None) is not None:
-        ids = args.unmark or sorted(wh.archived_batches())
-        left = wh.mark_archived(ids, unmark=True)
+        with wh.lock():
+            ids = args.unmark or sorted(wh.archived_batches())
+            left = wh.mark_archived(ids, unmark=True)
+            # the unmarked batches get their per-batch keys partitions back,
+            # so a later drop or rebuild of one removes its keys too
+            rebuild_keys(wh)
         print(json.dumps({"unmarked": sorted(ids), "still_archived": sorted(left)}))
         if owned:
             spark.stop()
         return 0
     records_dir = wh.path(RECORDS)
-    old_dir = records_dir + ".old"
     tmp_dir = records_dir + ".compact"
     # archive is where compression strength belongs (the reference keeps
     # live segments uncompressed and gzips at archive time,
     # BigStorage.scala:338-350): the ingest write uses zstd level 1 for
     # wall speed, the compaction rewrite pays for density once
-    spark.sparkContext._jsc.hadoopConfiguration().set(
-        "parquet.compression.codec.zstd.level",
-        os.environ.get("LSS_ARCHIVE_ZSTD_LEVEL", "6"),
-    )
+    spark.sparkContext._jsc.hadoopConfiguration().set("parquet.compression.codec.zstd.level", "6")
     with wh.lock():
         # sweep TORN batches FIRST: a crashed run's lineage-less batch dir
         # must never be compacted into batch=archived or marked read-only —
@@ -158,12 +158,10 @@ def cmd_archive(args) -> int:
             if owned:
                 spark.stop()
             return 1
-        # atomic-enough swap: records is never absent without records.old
-        # present, so a crash at any point is recoverable (Warehouse.__init__
-        # restores or discards records.old)
-        os.rename(records_dir, old_dir)
-        os.rename(tmp_dir, records_dir)
-        shutil.rmtree(old_dir)
+        # crash-recoverable swap: records is never absent without
+        # records.old present, and the next lock acquisition restores or
+        # discards records.old
+        wh.swap_in(RECORDS, tmp_dir)
         # compacted layout is history: flip every batch read-only so a later
         # update with remapped ids fails loudly instead of rewriting it
         # (the reference's archive gzips segments AND marks them readOnly)
@@ -180,7 +178,7 @@ def cmd_archive(args) -> int:
             # one file per (day, bucket) and their bookkeeping to one file
             # per table. Skipped under --no-mark: merging erases per-batch
             # attribution, which is only sound for read-only batches.
-            keys_stats = compact_keys(wh)
+            keys_stats = rebuild_keys(wh)
             book_stats = compact_bookkeeping(wh, set(archived))
     n_after = len(glob.glob(os.path.join(records_dir, "**", "*.parquet"), recursive=True))
     print(

@@ -122,9 +122,8 @@ def native_murmur3_rows():
     global _LIB, _TRIED
     if not _TRIED:
         _TRIED = True
-        if os.environ.get("LSS_NO_NATIVE", "0") != "1":
-            try:
-                _LIB = _build()
-            except Exception:
-                _LIB = None
+        try:
+            _LIB = _build()
+        except Exception:
+            _LIB = None
     return _LIB.murmur3_32_rows if _LIB is not None else None

@@ -29,7 +29,6 @@ cross-batch left-anti join needs no null-safe equality.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -108,17 +107,15 @@ def _parse_batches_arrow(batches):
         yield from parse_record_batch(batch).to_batches()
 
 
-def parse_pages(pages: DataFrame, fast: bool | None = None) -> DataFrame:
+def parse_pages(pages: DataFrame, fast: bool = True) -> DataFrame:
     """pages(url, warc_ts, html, lang, ...) -> one row per parsed record.
 
-    ``fast=None`` (default) enables the vectorized Arrow path unless env
-    ``LSS_PARSE_FAST=0`` (kept for A/B benchmarks and the parity suite).
+    ``fast=True`` (default) takes the vectorized Arrow path; ``fast=False``
+    is the per-record reference path the parity suite compares against.
 
     Also derives ``domain`` JVM-side (regexp over url — stays in codegen,
     never enters Python).
     """
-    if fast is None:
-        fast = os.environ.get("LSS_PARSE_FAST", "1") != "0"
     base = pages.select("url", "warc_ts", "lang", "html")
     if fast:
         parsed = base.mapInArrow(_parse_batches_arrow, schema=PARSED_SCHEMA)

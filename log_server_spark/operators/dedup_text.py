@@ -57,20 +57,6 @@ def _shingle_frame(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFra
     )
 
 
-def _shingle_sizes(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """|distinct shingles| per doc via count-after-explode.
-
-    Counter-intuitively this beats the "obvious"
-    ``size(array_distinct(ngrams))`` projection by ~10x: the filter on the
-    aliased size gets pushed below the projection, duplicating the whole
-    interpreted higher-order ngram expression per row, while the explode
-    path evaluates it once. Measured, not guessed (see git history).
-    """
-    return _shingle_frame(df, id_col, text_col, n).groupBy("id").agg(
-        F.count("*").alias("sz")
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame, id_col: str, text_col: str, n: int = 3, threshold: float = 0.5
 ) -> DataFrame:
@@ -142,61 +128,15 @@ def ngram_jaccard_pairs(
     return out
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 16, shingle_n: int = 3
-) -> DataFrame:
-    """k-permutation MinHash signature per doc.
-
-    h_i(x) = (a_i * (xxhash64(x) mod p) + b_i) mod p over a Mersenne prime —
-    the classic universal-hash family; coefficients are fixed constants so
-    signatures are stable across runs/clusters. Docs with no shingles are
-    dropped (too short to near-dup meaningfully).
-    """
-    sh = _shingle_frame(df, id_col, text_col, shingle_n).withColumn(
-        "b", F.pmod(F.xxhash64("shingle"), F.lit(MERSENNE_P))
-    )
-    # the base hash is materialized ONCE per shingle row ("b"); inlining it
-    # into the k min-aggregates would evaluate it k times per row
-    aggs = [
-        F.min(F.pmod(F.lit(a) * F.col("b") + F.lit(b), F.lit(MERSENNE_P))).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(minhash_coefficients(num_hashes))
-    ]
-    return sh.groupBy("id").agg(*aggs)
-
-
 def minhash_coefficients(num_hashes: int) -> list[tuple[int, int]]:
     """The fixed universal-hash family (a_i odd, b_i) shared by both the
-    xxhash64 production path and the md5 oracle path."""
+    xxhash64 production base and the md5 oracle base."""
     out = []
     for i in range(num_hashes):
         a = 2 * (1103515245 * (i + 1) % MERSENNE_P) + 1
         b = (12345 + 987_654_321 * i) % MERSENNE_P
         out.append((a, b))
     return out
-
-
-def minhash_signatures_md5(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 16, shingle_n: int = 3
-) -> DataFrame:
-    """MinHash signatures with an md5-based base hash.
-
-    Same semantics as :func:`minhash_signatures` but the base hash is the
-    first 15 hex chars of md5(shingle) read as an integer — computable
-    identically in any engine with md5 (the SQL-oracle-checkable variant).
-    The production path keeps xxhash64 (one JVM op vs md5+substring+radix
-    conversion); use this one when cross-engine verifiability matters more
-    than the ~2x base-hash cost.
-    """
-    sh = _shingle_frame(df, id_col, text_col, shingle_n)
-    hex15 = F.substring(F.md5(F.encode(F.col("shingle"), "UTF-8")), 1, 15)
-    # materialize the (expensive) md5-derived base ONCE per shingle row —
-    # inlined, each of the k min-aggregates would recompute the md5
-    sh = sh.withColumn("b", F.pmod(F.conv(hex15, 16, 10).cast("long"), F.lit(MERSENNE_P)))
-    aggs = [
-        F.min(F.pmod(F.lit(a) * F.col("b") + F.lit(b), F.lit(MERSENNE_P))).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(minhash_coefficients(num_hashes))
-    ]
-    return sh.groupBy("id").agg(*aggs)
 
 
 def minhash_lsh_pairs(
@@ -233,8 +173,8 @@ def minhash_lsh_pairs(
     against the corpus AND itself without re-pairing committed docs, so
     the band join is O(corpus x delta) band rows, not O(corpus^2). At the
     100 TB point the committed side's signatures come from a stored
-    signatures table (`minhash_signatures` written at ingest, the same
-    lifecycle as records_keys) instead of the recompute this
+    signatures table (a ``minhash_signature_frame`` written at ingest, the
+    same lifecycle as records_keys) instead of the recompute this
     reference-twin form does; the band join and verify are unchanged.
     """
     # threshold validation lives in minhash_lsh_pairs_from_signatures (the
@@ -544,9 +484,9 @@ def components_from_pairs(
 
 
 def _base_hash_mod_p(col, base: str):
-    """Per-shingle universal-hash base ``b`` in [0, P): matches
-    minhash_signatures (xxhash64) / minhash_signatures_md5 (md5) exactly so
-    the combined sig+size aggregation yields identical signatures."""
+    """Per-shingle universal-hash base ``b`` in [0, P): ``xxhash64`` (one
+    JVM op, the production base) or ``md5`` (first 15 hex chars of md5 as
+    an integer — the same math the SQL oracles compute)."""
     if base == "xxhash64":
         return F.pmod(F.xxhash64(col), F.lit(MERSENNE_P))
     if base == "md5":

@@ -17,6 +17,12 @@ never delete the immutable input, we record completion):
   dedup-key projection under ``records_keys/batch=bNNNNN/day=…`` — the
   ``.record`` / ``.hash`` file split of the reference's segment layout
   (RecordStorage vs HeaderStorage);
+- there is ONE keys layout: ``records_keys`` bucketed by ``record_hash``,
+  its bucket count pinned by the ``records_keys.bucketed`` marker, which
+  an empty warehouse gets before its first write. A warehouse that holds
+  records or keys but no marker predates this layout (its keys files carry
+  no bucket ids, so a bucketed read over them would silently miss
+  duplicates): ``run_pipeline`` refuses it before writing anything;
 - per-batch bookkeeping (partial aggregates, ingest counters, lineage) is
   written driver-side as ONE file per batch named by batch id, so a
   reprocessed batch overwrites its own rows — idempotent by construction;
@@ -68,7 +74,12 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from log_server_spark.catalog import ArchivedBatchError, Warehouse, read_parquet
+from log_server_spark.catalog import (
+    ArchivedBatchError,
+    Warehouse,
+    first_parquet_file,
+    read_parquet,
+)
 from log_server_spark.functions.parse import parse_pages
 from log_server_spark.operators.dedup import DEDUP_KEY, anti_join_committed, split_duplicates
 from log_server_spark.operators.enrich import enrich
@@ -90,6 +101,12 @@ PARTIALS_SCHEMA = (
     "batch string, sink string, window_start timestamp, n_rows long, n_ok long, "
     "min_ts long, max_ts long, total_bytes long, url_sketch binary"
 )
+
+# Target output-file size the salt aims for (pre-compression record bytes
+# roughly track input page bytes at this schema); salting past the point
+# where each shard holds ~this much data buys no skew protection and costs
+# files + open/seek overhead on every downstream scan.
+TARGET_FILE_BYTES = 96 << 20
 
 
 @dataclass
@@ -163,11 +180,15 @@ def _committed_batches(wh: Warehouse) -> dict[str, frozenset]:
 
 
 def _rewrite_without_batch(wh: Warehouse, table: str, batch_id: str) -> None:
-    """Drop one batch's rows from a tiny bookkeeping table whose files are
-    NOT named by batch id (legacy timestamp-named files from round 1).
+    """Drop one batch's rows from the bookkeeping files NOT named by batch
+    id — in practice ``archive``'s merged ``part-archive-*`` file. A batch
+    made writable again by ``archive --unmark`` still has its lineage,
+    ingest and partials rows in that merged file; dropping the batch must
+    remove them there, or a rebuilt batch would count twice and its stale
+    lineage would fail unit-list validation on every later resume.
     Driver-side pyarrow rewrite — these tables are O(batches) rows.
 
-    Only LEGACY-named files (not ``part-b*.parquet``) are read and rewritten:
+    Only merged files (not ``part-b*.parquet``) are read and rewritten:
     folding per-batch files into the merged rewrite file would break
     ``write_small``'s overwrite-idempotence — a reprocessed batch would
     overwrite its own per-batch file while its old rows also lived on in the
@@ -190,10 +211,10 @@ def _rewrite_without_batch(wh: Warehouse, table: str, batch_id: str) -> None:
     d = wh.path(table)
     files = sorted(glob.glob(os.path.join(d, "*.parquet")))
     per_batch_re = re.compile(r"part-b\d{5}\.parquet$")
-    legacy = [f for f in files if not per_batch_re.search(os.path.basename(f))]
-    if not legacy:
+    merged = [f for f in files if not per_batch_re.search(os.path.basename(f))]
+    if not merged:
         return
-    t = pq.read_table(legacy)
+    t = pq.read_table(merged)
     kept = t.filter(pc.field("batch") != batch_id)
     if kept.num_rows == t.num_rows:
         return
@@ -201,9 +222,9 @@ def _rewrite_without_batch(wh: Warehouse, table: str, batch_id: str) -> None:
     shutil.rmtree(tmp, ignore_errors=True)
     os.makedirs(tmp)
     for f in files:
-        if f not in legacy:
+        if f not in merged:
             os.link(f, os.path.join(tmp, os.path.basename(f)))
-    if kept.num_rows or len(legacy) == len(files):
+    if kept.num_rows or len(merged) == len(files):
         # an empty filtered table still gets a (0-row, schema-bearing) file
         # when it would otherwise leave the dir empty, so readers see a
         # valid parquet dir rather than a vanished table
@@ -234,25 +255,77 @@ def _drop_batch(wh: Warehouse, batch_id: str) -> None:
         if os.path.isfile(f):
             os.remove(f)
         if os.path.isdir(wh.path(table)):
-            # ALSO sweep legacy timestamp-named bookkeeping rows (round-1
-            # layout): a batch reprocessed once after the per-batch-file
-            # upgrade has BOTH a part-<batch>.parquet and stale legacy rows,
-            # and the stale rows would re-poison unit-list validation (and
+            # ALSO sweep the batch's rows out of merged bookkeeping files
+            # (an unmarked archived batch lives in archive's merged file):
+            # stale rows would re-poison unit-list validation (and
             # double-count ingest metrics) on every subsequent resume
             _rewrite_without_batch(wh, table, batch_id)
 
 
 KEYS_BUCKETS_DEFAULT = 32
+KEYS_MARKER = "records_keys.bucketed"
+KEYS_COLUMNS = ("table", "record_id", "record_hash", "ts_millis", "batch", "day")
 
 # partition value holding the cross-batch-merged keys written by `archive`'s
-# keys compaction; can never collide with real ids (they match b\d{5})
+# keys rebuild; can never collide with real ids (they match b\d{5})
 ARCHIVED_KEYS_BATCH = "archived"
 
 
-def _keys_table(wh: Warehouse) -> str | None:
+def _keys_buckets(wh: Warehouse) -> int:
+    """The warehouse's keys bucket count, read from its layout marker. An
+    empty warehouse gets the marker here, before its first write, so a
+    batch that crashes mid-write still leaves a marked warehouse. One that
+    holds records or keys without a marker predates the bucketed layout —
+    its keys files carry no bucket ids, and a bucketed read over them would
+    silently miss committed duplicates — so it is refused."""
+    marker = os.path.join(wh.root, KEYS_MARKER)
+    if not os.path.isfile(marker):
+        if wh.exists(RECORDS) or wh.exists(RECORDS_KEYS):
+            raise RuntimeError(
+                f"warehouse {wh.root} holds data but no {KEYS_MARKER} marker: its "
+                "records_keys layout predates bucketing and is not supported; "
+                "re-ingest its inputs into a new warehouse"
+            )
+        with open(marker, "w") as f:
+            f.write(os.environ.get("LSS_KEYS_BUCKETS", str(KEYS_BUCKETS_DEFAULT)))
+    with open(marker) as f:
+        return int(f.read().strip())
+
+
+def _keys_table_name(wh: Warehouse) -> str:
+    """Session-catalog name of the warehouse's bucketed keys table."""
+    import hashlib
+
+    return f"records_keys_{hashlib.md5(wh.root.encode()).hexdigest()[:10]}"
+
+
+def _create_keys_table(spark: SparkSession, name: str, location: str, buckets: int) -> None:
+    spark.sql(
+        f"""CREATE TABLE IF NOT EXISTS {name} (
+              `table` STRING, record_id STRING, record_hash INT,
+              ts_millis BIGINT, batch STRING, day DATE)
+            USING PARQUET
+            PARTITIONED BY (batch, day)
+            CLUSTERED BY (record_hash) INTO {buckets} BUCKETS
+            LOCATION '{location}'"""
+    )
+
+
+def _insert_keys(keys: DataFrame, name: str, buckets: int) -> None:
+    """Bucketed insert of ``KEYS_COLUMNS`` rows: pre-cluster reducers on
+    (day, bucket id) — pmod(hash(col), B) IS Spark's bucket-id function
+    (HashPartitioning.partitionIdExpression), so each reducer holds every
+    row of its (day, bucket) and writes ONE file per batch into it."""
+    (
+        keys.select(*KEYS_COLUMNS)
+        .repartition(F.col("day"), F.pmod(F.hash("record_hash"), F.lit(buckets)))
+        .write.insertInto(name)
+    )
+
+
+def _keys_table(wh: Warehouse) -> str:
     """Register (or re-register) the warehouse's ``records_keys`` as a
-    BUCKETED external table and return its session-catalog name — or None
-    for legacy warehouses whose keys files predate bucketing.
+    BUCKETED external table and return its session-catalog name.
 
     Bucketing by ``record_hash`` makes the committed side of the per-batch
     anti-join Exchange-free: the bucketed scan reports
@@ -266,43 +339,22 @@ def _keys_table(wh: Warehouse) -> str | None:
     The catalog entry is session-scoped (in-memory catalog): CREATE TABLE
     IF NOT EXISTS + ``MSCK REPAIR ... SYNC PARTITIONS`` re-derives it from
     the files on every call, so any session — and any filesystem-level
-    batch drop — self-heals. A marker file pins the bucket count; a keys
-    dir WITHOUT the marker is a legacy layout and reads through the plain
-    path (bucket-named files are required for a correct bucketed scan).
+    batch drop — self-heals. The marker file pins the bucket count.
     """
-    import hashlib
-
-    marker = os.path.join(wh.root, "records_keys.bucketed")
+    buckets = _keys_buckets(wh)
     keys_dir = wh.path(RECORDS_KEYS)
-    if not os.path.isfile(marker):
-        if wh.exists(RECORDS_KEYS):
-            return None  # legacy plain layout: files lack bucket ids
-        buckets = int(os.environ.get("LSS_KEYS_BUCKETS", str(KEYS_BUCKETS_DEFAULT)))
-        with open(marker, "w") as f:
-            f.write(str(buckets))
-    else:
-        with open(marker) as f:
-            buckets = int(f.read().strip())
-    name = f"records_keys_{hashlib.md5(wh.root.encode()).hexdigest()[:10]}"
+    name = _keys_table_name(wh)
     spark = wh.spark
     # registration + partition sync are driver-side catalog commands
     # (~100 ms each): do them once per session, and again only after a
     # filesystem-level partition drop invalidates the cache
     tag = f"{spark.sparkContext.applicationId}:{name}"
     if tag not in _KEYS_SYNCED:
-        spark.sql(
-            f"""CREATE TABLE IF NOT EXISTS {name} (
-                  `table` STRING, record_id STRING, record_hash INT,
-                  ts_millis BIGINT, batch STRING, day DATE)
-                USING PARQUET
-                PARTITIONED BY (batch, day)
-                CLUSTERED BY (record_hash) INTO {buckets} BUCKETS
-                LOCATION '{keys_dir}'"""
-        )
+        _create_keys_table(spark, name, keys_dir, buckets)
         os.makedirs(keys_dir, exist_ok=True)
         spark.sql(f"MSCK REPAIR TABLE {name} SYNC PARTITIONS")
         # drop any cached file listing from before a filesystem-level change
-        # (partition drop, archive compaction swap)
+        # (partition drop, archive rebuild swap)
         spark.sql(f"REFRESH TABLE {name}")
         _KEYS_SYNCED.add(tag)
     return name
@@ -314,10 +366,7 @@ _KEYS_SYNCED: set[str] = set()
 def _keys_desync(wh: Warehouse) -> None:
     """Filesystem-level keys-partition removal happened: force the next
     ``_keys_table`` call to re-sync the session catalog with the files."""
-    import hashlib
-
-    name = f"records_keys_{hashlib.md5(wh.root.encode()).hexdigest()[:10]}"
-    _KEYS_SYNCED.discard(f"{wh.spark.sparkContext.applicationId}:{name}")
+    _KEYS_SYNCED.discard(f"{wh.spark.sparkContext.applicationId}:{_keys_table_name(wh)}")
 
 
 def sweep_torn_batches(wh: Warehouse, done: set | None = None) -> list[str]:
@@ -374,75 +423,57 @@ def sweep_torn_batches(wh: Warehouse, done: set | None = None) -> list[str]:
     return swept
 
 
-def compact_keys(wh: Warehouse) -> dict | None:
-    """Merge every batch's ``records_keys`` partition into ONE
-    ``batch=archived`` partition with one file per (day, bucket) —
-    `archive`'s keys-table leg (the reference archives every segment file,
-    index files included: BigStorage.scala:338-350, Directory.scala:129-138).
+def rebuild_keys(wh: Warehouse) -> dict | None:
+    """Rewrite ``records_keys`` from the records table's ok rows (the keys
+    table is exactly their projection, ``_write_keys``, once torn batches
+    are swept): ``batch=archived`` for batches marked read-only, else the
+    batch's own id. ``archive`` calls it after marking — one file per
+    (day, bucket) instead of O(batches x days x buckets), the index-file
+    leg of archiving every segment file (BigStorage.scala:338-350) — and
+    ``archive --unmark`` after unmarking, so a writable batch owns its keys
+    again (a surviving ``batch=archived`` partition would anti-join every
+    re-ingested record away). Bucket ids are preserved by inserting
+    through a temp table with the same CLUSTERED BY spec.
 
-    Without this, keys fragment at O(batches x days x buckets) files
-    forever — the first ops pain a daily-batch warehouse hits. Bucket ids
-    are preserved by writing through a temp bucketed table with the same
-    CLUSTERED BY spec (bucket-id file naming + bucket-pruned scans keep
-    working; the Exchange-free anti-join is unaffected). Only safe once the
-    source batches are read-only (archived): the merge erases per-batch
-    attribution, and ``_drop_batch`` on an archived batch already refuses.
-
-    Crash-safe via the standard swap protocol: the merged layout is fully
+    Crash-safe via the standard swap protocol: the new layout is fully
     built in ``records_keys.compact``, verified by row count, then swapped
     in; ``Warehouse`` lock-acquisition recovery finishes or discards any
     interrupted state. Caller must hold the warehouse lock.
     """
-    import hashlib
-
-    if not wh.exists(RECORDS_KEYS):
+    if not wh.exists(RECORDS):
         return None
     spark = wh.spark
+    buckets = _keys_buckets(wh)
     keys_dir = wh.path(RECORDS_KEYS)
     tmp = keys_dir + ".compact"
     shutil.rmtree(tmp, ignore_errors=True)
-    marker = os.path.join(wh.root, "records_keys.bucketed")
-    src = wh.read(RECORDS_KEYS)
-    # COST NOTE: the row-count verify below is two full scans of the keys
-    # table (before + after) — O(total keys) at archive time. Keys rows are
-    # 4 thin columns, so this is cheap relative to the rewrite itself, and
-    # a lost row here means silent re-ingestion of committed data — but for
-    # a huge keys table where the operator accepts write-job success as
-    # proof, LSS_SKIP_COMPACT_VERIFY=1 skips both counts.
-    skip_verify = bool(os.environ.get("LSS_SKIP_COMPACT_VERIFY"))
-    rows_before = None if skip_verify else src.count()
-    files_before = len(glob.glob(os.path.join(keys_dir, "**", "*.parquet"), recursive=True))
-    merged = src.select(
-        "table", "record_id", "record_hash", "ts_millis",
-        F.lit(ARCHIVED_KEYS_BATCH).alias("batch"), "day",
+    archived = sorted(wh.archived_batches())
+    batch = F.col("batch")
+    if archived:
+        batch = F.when(batch.isin(archived), F.lit(ARCHIVED_KEYS_BATCH)).otherwise(batch)
+    keys = (
+        wh.read(RECORDS)
+        .filter(F.col("status") == "ok")
+        .select(
+            "table", "record_id", "record_hash", "ts_millis",
+            batch.alias("batch"), _ts_day(F.col("ts_millis")).alias("day"),
+        )
     )
-    if os.path.isfile(marker):
-        with open(marker) as f:
-            buckets = int(f.read().strip())
-        tmp_name = f"records_keys_compact_{hashlib.md5(wh.root.encode()).hexdigest()[:10]}"
-        spark.sql(f"DROP TABLE IF EXISTS {tmp_name}")
-        spark.sql(
-            f"""CREATE TABLE {tmp_name} (
-                  `table` STRING, record_id STRING, record_hash INT,
-                  ts_millis BIGINT, batch STRING, day DATE)
-                USING PARQUET
-                PARTITIONED BY (batch, day)
-                CLUSTERED BY (record_hash) INTO {buckets} BUCKETS
-                LOCATION '{tmp}'"""
-        )
-        (
-            merged.repartition(F.col("day"), F.pmod(F.hash("record_hash"), F.lit(buckets)))
-            .write.insertInto(tmp_name)
-        )
-        spark.sql(f"DROP TABLE {tmp_name}")  # external: files stay
-    else:  # legacy plain layout: one file per day
-        merged.repartition("day").write.partitionBy("batch", "day").parquet(tmp)
-    rows_after = None if skip_verify else read_parquet(spark, tmp).count()
-    if not skip_verify and rows_after != rows_before:
+    # COST NOTE: the row-count verify is two scans (source + rebuilt) —
+    # O(total keys) at archive time, cheap next to the rewrite itself, and
+    # a lost row here means silent re-ingestion of committed data
+    rows_before = keys.count()
+    files_before = len(glob.glob(os.path.join(keys_dir, "**", "*.parquet"), recursive=True))
+    build_name = _keys_table_name(wh) + "_build"
+    spark.sql(f"DROP TABLE IF EXISTS {build_name}")
+    _create_keys_table(spark, build_name, tmp, buckets)
+    _insert_keys(keys, build_name, buckets)
+    spark.sql(f"DROP TABLE {build_name}")  # external: files stay
+    os.makedirs(tmp, exist_ok=True)
+    rows_after = read_parquet(spark, tmp).count() if first_parquet_file(tmp) else 0
+    if rows_after != rows_before:
         shutil.rmtree(tmp)
-        raise RuntimeError(
-            f"keys compaction row mismatch: {rows_before} -> {rows_after}; aborted"
-        )
+        raise RuntimeError(f"keys rebuild row mismatch: {rows_before} -> {rows_after}; aborted")
     wh.swap_in(RECORDS_KEYS, tmp)
     _keys_desync(wh)  # force MSCK + REFRESH on next committed-keys read
     files_after = len(glob.glob(os.path.join(keys_dir, "**", "*.parquet"), recursive=True))
@@ -455,7 +486,7 @@ def compact_keys(wh: Warehouse) -> dict | None:
 
 def compact_bookkeeping(wh: Warehouse, archived_ids: set[str]) -> dict:
     """Merge the archived batches' per-batch bookkeeping files — plus any
-    legacy timestamp-named files and previous merge output — into ONE file
+    previous merge output — into ONE file
     per table (lineage / ingest counters / partials): the index-file leg of
     the reference's archive-everything (Directory.scala:129-138).
 
@@ -521,34 +552,19 @@ def _committed_keys(wh: Warehouse, ts_range: tuple | None = None) -> DataFrame |
     records table itself, whose (batch, sink) layout spans the full window
     in every file — the filter pruned nothing.
     """
-    if wh.exists(RECORDS_KEYS) or os.path.isfile(os.path.join(wh.root, "records_keys.bucketed")):
-        name = _keys_table(wh)
-        # bucketed scan when available (Exchange-free committed side);
-        # legacy warehouses fall back to the plain partitioned read
-        keys = wh.spark.table(name) if name else wh.read(RECORDS_KEYS)
-        if ts_range is not None:
-            lo, hi = int(ts_range[0]), int(ts_range[1])
-            pred = F.col("ts_millis").between(F.lit(lo), F.lit(hi))
-            if name:
-                # day-partition pruning is sound ONLY for bucketed layouts,
-                # whose day= dirs derive from ts_millis. Legacy (round-1)
-                # warehouses wrote day from warc_ts CAPTURE day, so pruning
-                # day with record-ts bounds would drop a committed duplicate
-                # captured outside the batch's header-ts window — silent
-                # re-ingest. Legacy keeps the row-level ts predicate only
-                # (sound, just less file skipping).
-                pred = pred & F.col("day").between(
-                    F.date_from_unix_date(F.lit(lo // 86_400_000)),
-                    F.date_from_unix_date(F.lit(hi // 86_400_000)),
-                )
-            keys = keys.filter(pred)
-        return keys.select(*DEDUP_KEY)
-    if not wh.exists(RECORDS):
-        return None
-    # legacy warehouses (no keys table): column-pruned scan of the sink
-    keys = wh.read(RECORDS).filter(F.col("status") == "ok")
+    if not wh.exists(RECORDS_KEYS):
+        return None  # nothing committed yet
+    # bucketed scan: the committed side of the anti-join is Exchange-free
+    keys = wh.spark.table(_keys_table(wh))
     if ts_range is not None:
-        keys = keys.filter(F.col("ts_millis").between(int(ts_range[0]), int(ts_range[1])))
+        lo, hi = int(ts_range[0]), int(ts_range[1])
+        keys = keys.filter(
+            F.col("ts_millis").between(F.lit(lo), F.lit(hi))
+            & F.col("day").between(
+                F.date_from_unix_date(F.lit(lo // 86_400_000)),
+                F.date_from_unix_date(F.lit(hi // 86_400_000)),
+            )
+        )
     return keys.select(*DEDUP_KEY)
 
 
@@ -606,18 +622,9 @@ def _sink_salts(wh: Warehouse, salt: int) -> dict[str, int] | None:
         # target-size files needs at most k shards — below that, salting
         # only fragments files and multiplies downstream scan opens. At
         # scale the cap exceeds the budget share and is a no-op.
-        cap = max(1, -(-sink_bytes[s] // _salt_target_bytes()))
+        cap = max(1, -(-sink_bytes[s] // TARGET_FILE_BYTES))
         out[s] = min(v, cap)
     return out
-
-
-def _salt_target_bytes() -> int:
-    """Target output-file size the salt aims for (pre-compression record
-    bytes roughly track input page bytes at this schema); salting past the
-    point where each shard holds ~this much data buys no skew protection
-    and costs files + open/seek overhead on every downstream scan.
-    Env-tunable (bytes) so tests can exercise the allocation at toy scale."""
-    return int(os.environ.get("LSS_TARGET_FILE_BYTES", str(96 << 20)))
 
 
 def _salt_expr(
@@ -634,7 +641,7 @@ def _salt_expr(
     salts = _sink_salts(wh, salt) if "sink" in partition_cols else None
     if not salts:
         if input_bytes is not None:
-            need = -(-int(input_bytes * 0.4) // _salt_target_bytes())
+            need = -(-int(input_bytes * 0.4) // TARGET_FILE_BYTES)
             return F.lit(max(1, min(salt, need)))
         return F.lit(salt)
     expr = F.lit(salt)  # unseen sinks fall back to the uniform salt
@@ -711,33 +718,16 @@ def _run_batch_inner(
     # — the analogous lifecycle here is a cheap codec on the ingest write
     # (zstd level 1; the session default level 3 costs ~15% of batch wall
     # for ~7% smaller files) and full-strength zstd when `archive` rewrites
-    # the partition. Env LSS_INGEST_ZSTD_LEVEL overrides; parquet-java
-    # reads the level from the hadoop conf at write time.
-    spark.sparkContext._jsc.hadoopConfiguration().set(
-        "parquet.compression.codec.zstd.level",
-        os.environ.get("LSS_INGEST_ZSTD_LEVEL", "1"),
-    )
-
-    def _cpu_now() -> float:
-        # system-wide cpu-seconds (user+sys): phase marks stay meaningful on
-        # a host whose wall-clock is storm-inflated — cpu measures the work
-        with open("/proc/stat") as f:
-            p = f.readline().split()[1:]
-        return (int(p[0]) + int(p[2])) / 100.0
-
-    _t0, _c0 = time.time(), _cpu_now()
-    _marks: list[tuple[str, float, float]] = []
-
-    def _mark(phase: str) -> None:
-        if os.environ.get("LSS_TIMING"):
-            _marks.append((phase, time.time(), _cpu_now()))
+    # the partition. parquet-java reads the level from the hadoop conf at
+    # write time.
+    spark.sparkContext._jsc.hadoopConfiguration().set("parquet.compression.codec.zstd.level", "1")
 
     if source_format == "saved":
         parsed = _saved_records(spark, files).withColumn("day", F.to_date("warc_ts"))
     else:
         pages = read_parquet(spark, *files)
         parsed = parse_pages(pages).withColumn("day", F.to_date("warc_ts"))
-    parsed.persist(getattr(StorageLevel, os.environ.get("LSS_PERSIST_LEVEL", "MEMORY_AND_DISK")))
+    parsed.persist(StorageLevel.MEMORY_AND_DISK)
 
     ok = parsed.filter(F.col("status") == "ok")
     # idempotent error sink: an exact-duplicate malformed page (same url,
@@ -764,7 +754,6 @@ def _run_batch_inner(
     ts_range = (st["lo"], st["hi"]) if st["lo"] is not None else None
     n_ok = st["n_ok"] or 0
     n_pages = st["n_pages"] or 0
-    _mark("parse+stats")
 
     kept = anti_join_committed(kept, _committed_keys(wh, ts_range))
 
@@ -796,7 +785,6 @@ def _run_batch_inner(
         F.pmod(F.hash("url"), _salt_expr(wh, salt, partition_cols, total_bytes)),
     )
     out.write.mode("append").partitionBy("batch", *partition_cols).parquet(wh.path(RECORDS))
-    _mark("write")
 
     # read the just-written batch partition back (small, column-pruned):
     # (a) append its dedup keys to the day-partitioned keys table — the
@@ -855,28 +843,10 @@ def _run_batch_inner(
         keys = (
             written.filter(F.col("status") == "ok")
             .select("table", "record_id", "record_hash", "ts_millis")
+            .withColumn("batch", F.lit(batch_id))
             .withColumn("day", _ts_day(F.col("ts_millis")))
         )
-        name = _keys_table(wh)
-        if name:
-            # bucketed insert: pre-cluster reducers on (day, bucket id) —
-            # pmod(hash(col), B) IS Spark's bucket-id function
-            # (HashPartitioning.partitionIdExpression), so each reducer
-            # holds exactly one (day, bucket) and writes ONE file into it
-            buckets = int(open(os.path.join(wh.root, "records_keys.bucketed")).read())
-            (
-                keys.withColumn("batch", F.lit(batch_id))
-                .select("table", "record_id", "record_hash", "ts_millis", "batch", "day")
-                .repartition(F.col("day"), F.pmod(F.hash("record_hash"), F.lit(buckets)))
-                .write.insertInto(name)
-            )
-        else:  # legacy (pre-bucketing) warehouse layout
-            (
-                keys.repartition("day")
-                .write.mode("append")
-                .partitionBy("day")
-                .parquet(os.path.join(wh.path(RECORDS_KEYS), f"batch={batch_id}"))
-            )
+        _insert_keys(keys, _keys_table(wh), _keys_buckets(wh))
 
     def _collect_partials():
         return (
@@ -905,7 +875,6 @@ def _run_batch_inner(
         partials = f_partials.result()
     parsed.unpersist()
     written.unpersist()
-    _mark("readbacks")
     wh.write_small(
         [
             (batch_id, r["sink"], r["window_start"], r["n_rows"], r["n_ok"],
@@ -928,16 +897,6 @@ def _run_batch_inner(
         LINEAGE,
         filename=batch_id,
     )
-    _mark("bookkeeping")
-    if os.environ.get("LSS_TIMING"):
-        import sys
-
-        prev, cprev = _t0, _c0
-        spans = []
-        for phase, at, c in _marks:
-            spans.append(f"{phase}={at - prev:.2f}s/{c - cprev:.1f}cpu")
-            prev, cprev = at, c
-        print(f"[timing] {batch_id}: " + " ".join(spans), file=sys.stderr)
     return BatchResult(batch_id, files, added, n_dups, n_errors)
 
 
@@ -1063,6 +1022,9 @@ def run_pipeline(
 
     results: list[BatchResult] = []
     with wh.lock(timeout=lock_timeout):
+        # refuses a pre-bucketing warehouse before anything is written, and
+        # marks an empty one with the only keys layout
+        _keys_buckets(wh)
         done = _committed_batches(wh)
         if not resume:
             # a fresh (non-resume) run must drop each batch's LINEAGE AND

@@ -176,11 +176,11 @@ WHERE round(shared / (x.sz + y.sz - shared)::DOUBLE, 4) >= 0.3
 
 def q_minhash_signatures(spark, sf_dir):
     """Oracle-checkable MinHash: md5-based base hash, identical math in SQL."""
-    from log_server_spark.operators.dedup_text import minhash_signatures_md5
+    from log_server_spark.operators.dedup_text import minhash_signature_frame
 
-    return minhash_signatures_md5(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", num_hashes=8, shingle_n=3
-    ).withColumnRenamed("id", "doc_id")
+    return minhash_signature_frame(
+        _t(spark, sf_dir, "documents"), "doc_id", "text", num_hashes=8, shingle_n=3, base="md5"
+    ).select(F.col("id").alias("doc_id"), *[f"mh_{i}" for i in range(8)])
 
 
 def _minhash_sql(num_hashes: int = 8) -> str:

@@ -40,7 +40,17 @@ def test_murmur3_known_vectors(data, seed, expect):
     assert _u32(murmur3_32(data, seed)) == expect
 
 
-def test_batch_matches_scalar_random():
+@pytest.mark.parametrize("kernel", ["native", "numpy"])
+def test_batch_matches_scalar_random(kernel, monkeypatch):
+    """Both row-hash kernels agree with the scalar reference: the C kernel
+    when a compiler built it, the numpy block scheme otherwise (forced here
+    by hiding the C kernel)."""
+    from log_server_spark.functions import _native
+
+    if kernel == "numpy":
+        monkeypatch.setattr(_native, "native_murmur3_rows", lambda: None)
+    elif _native.native_murmur3_rows() is None:
+        pytest.skip("no C compiler: the native kernel is unavailable")
     rng = random.Random(42)
     rows = [bytes(rng.randrange(256) for _ in range(rng.choice([0, 1, 2, 3, 4, 5, 7, 8, 13, 64, 1000, 4097]))) for _ in range(500)]
     rows.append(None)

@@ -1,5 +1,5 @@
 """Round-3 regressions: keys-day soundness, resume=False bookkeeping drop,
-legacy-row sweep alongside per-batch files, n_keys path agreement, and
+merged-row sweep alongside per-batch files, n_keys path agreement, and
 crash-recoverable bookkeeping rewrites (ADVICE.md round 2, all five items)."""
 
 import glob
@@ -229,15 +229,25 @@ def test_archived_batches_are_read_only(spark, dataset, tmp_path_factory, capsys
     """VERDICT round-2 'What's missing' #2: archive must flip compacted
     batches read-only — a later update whose remapped batch ids would
     rewrite them fails loudly (HeaderStorage.scala:242-275 semantics),
-    and --unmark restores writability."""
+    and --unmark restores writability without losing a record: the
+    unmarked batches get their own keys back, so the rebuild does not
+    anti-join its records against the archived keys partition."""
     from log_server_spark.catalog import ArchivedBatchError
     from log_server_spark.cli import main as cli_main
+    from log_server_spark.operators.dedup import DEDUP_KEY
 
     pages = os.path.join(dataset, "pages")
     wh_dir = str(tmp_path_factory.mktemp("r3_ro_wh"))
     run_pipeline(spark, pages, wh_dir, batch_files=2)
     wh = Warehouse(wh_dir, spark)
     n = wh.read(RECORDS).count()
+
+    def ok_keys():
+        ok = wh.read(RECORDS).filter(F.col("status") == "ok").select(*DEDUP_KEY)
+        return sorted(tuple(r) for r in ok.collect())
+
+    ok_before = ok_keys()
+    assert ok_before
 
     rc = cli_main(["archive", "--warehouse", wh_dir])
     assert rc == 0
@@ -259,17 +269,28 @@ def test_archived_batches_are_read_only(spark, dataset, tmp_path_factory, capsys
     rc = cli_main(["archive", "--warehouse", wh_dir, "--unmark"])
     assert rc == 0
     assert wh.archived_batches() == set()
+    keys_batches = {
+        os.path.basename(d) for d in glob.glob(os.path.join(wh.path(RECORDS_KEYS), "batch=*"))
+    }
+    assert keys_batches == {"batch=b00000", "batch=b00001"}
     r = run_pipeline(spark, pages, wh_dir, batch_files=1, resume=False)
     assert len(r) == 4  # rebuilt under the remapped layout
+    # every ok record survives the rebuild (same dedup keys, no more, no less)
+    assert ok_keys() == ok_before
+    assert sum(b.added for b in r) == len(ok_before)
+    # the rebuilt layout is committed: a follow-up resume has nothing to do
+    assert run_pipeline(spark, pages, wh_dir, batch_files=1) == []
+    counts = wh.read(METRICS_INGEST).groupBy("batch").count().collect()
+    assert sorted((c["batch"], c["count"]) for c in counts) == [
+        (f"b{i:05d}", 1) for i in range(4)
+    ]
 
 
 @pytest.mark.slow
-def test_committed_keys_bucketed_no_exchange(spark, dataset, tmp_path_factory, monkeypatch):
+def test_committed_keys_bucketed_no_exchange(spark, dataset, tmp_path_factory):
     """ROADMAP #3 / VERDICT next-round #5: the committed side of the
     per-batch anti-join must come from the BUCKETED keys table with no
-    Exchange — only the incoming batch shuffles. Also: a fresh session
-    registration (catalog dropped) must re-derive the same table, and
-    pipeline results must be identical to the legacy layout."""
+    Exchange — only the incoming batch shuffles."""
     from log_server_spark.operators.dedup import DEDUP_KEY, anti_join_committed
     from log_server_spark.plans.pipeline import _committed_keys, _keys_table
 
@@ -279,8 +300,7 @@ def test_committed_keys_bucketed_no_exchange(spark, dataset, tmp_path_factory, m
     wh = Warehouse(wh_dir, spark)
     assert os.path.isfile(os.path.join(wh_dir, "records_keys.bucketed"))
 
-    name = _keys_table(wh)
-    assert name is not None
+    assert spark.catalog.tableExists(_keys_table(wh))
     # bucket-aware file naming present (bucket id suffix in file names)
     fs = glob.glob(os.path.join(wh.path(RECORDS_KEYS), "batch=*", "day=*", "*.parquet"))
     assert fs, "keys files written through the bucketed table"
@@ -302,17 +322,6 @@ def test_committed_keys_bucketed_no_exchange(spark, dataset, tmp_path_factory, m
     # the committed (bucketed keys) side must have none
     join_part = plan.split("Join")[1] if "Join" in plan else plan
     assert plan.count("Exchange") == 1, plan
-
-    # equivalence with the legacy layout: same kept rows
-    wh2_dir = str(tmp_path_factory.mktemp("r3_bk_legacy"))
-    import log_server_spark.plans.pipeline as pl
-
-    monkeypatch.setattr(pl, "_keys_table", lambda wh: None)  # force legacy writes
-    run_pipeline(spark, pages, wh2_dir, batch_files=2)
-    monkeypatch.undo()
-    a = {tuple(r) for r in wh.read(RECORDS).select("url", "seq", "table", "record_id").collect()}
-    b = {tuple(r) for r in Warehouse(wh2_dir, spark).read(RECORDS).select("url", "seq", "table", "record_id").collect()}
-    assert a == b
 
 
 @pytest.mark.parametrize(

@@ -1,11 +1,10 @@
 """Round-4 regressions: VERDICT r3 items #3/#6/#7 and the ADVICE r3 fixes
-(legacy keys-day prune soundness, saved-format truncation errors, sliced-
-array _ascii_mask, per-user native cache)."""
+(saved-format truncation errors, sliced-array _ascii_mask, per-user native
+cache), plus the one-keys-layout refusal and the env-switch guard."""
 
 import glob
 import os
 import struct
-from datetime import datetime, timezone
 
 import numpy as np
 import pyarrow as pa
@@ -14,7 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from log_server_spark.catalog import Warehouse
-from log_server_spark.datagen import gen_domain_lookup, gen_lang_lookup
 from log_server_spark.plans.pipeline import RECORDS, RECORDS_KEYS, run_pipeline
 
 
@@ -81,84 +79,49 @@ def test_no_rdd_probe_in_query_construction():
         assert ".rdd" not in src, f"{mod.__name__} still probes df.rdd"
 
 
-# ---------------------------------------------------------------------------
-# ADVICE: legacy (pre-bucketing) warehouses must not day-prune with
-# record-ts bounds over capture-day partitions
-# ---------------------------------------------------------------------------
+def test_lss_env_switches_are_the_justified_set():
+    """Every ``LSS_*`` environment read in the package is a deployment
+    path or a setting a frozen harness sets; a new switch must be argued
+    for in review and added here, not slipped in."""
+    import pathlib
+    import re
+
+    import log_server_spark
+
+    read = re.compile(r"""os\.(?:environ(?:\.get)?|getenv)\s*[(\[]\s*["'](LSS_\w+)""")
+    pkg = pathlib.Path(log_server_spark.__file__).parent
+    found = {
+        m.group(1) for f in pkg.rglob("*.py") for m in read.finditer(f.read_text())
+    }
+    assert found == {"LSS_KEYS_BUCKETS", "LSS_NATIVE_DIR", "LSS_CHECKPOINT_DIR"}
 
 
-def _write_pages_unit(path, rows):
-    pq.write_table(
-        pa.table({
-            "url": pa.array([r[0] for r in rows], pa.string()),
-            "warc_ts": pa.array([r[1] for r in rows], pa.timestamp("us", tz="UTC")),
-            "html": pa.array([r[2].encode() for r in rows], pa.binary()),
-            "text": pa.array([r[2] for r in rows], pa.string()),
-            "lang": pa.array(["en"] * len(rows), pa.string()),
-        }),
-        path,
-    )
+# ---------------------------------------------------------------------------
+# One keys layout: a warehouse with data but no bucketed-layout marker
+# predates it and is refused before anything is written
+# ---------------------------------------------------------------------------
 
 
 @pytest.mark.slow
-def test_legacy_warehouse_skips_unsound_day_prune(spark, tmp_path_factory):
-    """Simulate a round-1 warehouse whose records_keys day= partitions were
-    written from the CAPTURE day: the committed duplicate must still be
-    caught even though its (wrong) day partition lies outside the new
-    batch's record-ts window."""
-    base = str(tmp_path_factory.mktemp("r4_legacy"))
-    pages = os.path.join(base, "pages")
-    os.makedirs(pages)
-    html = "---- 2024-03-01 10:00:00 level:INFO table:users id:7 op:create\nhello body"
-    _write_pages_unit(
-        os.path.join(pages, "part-00000.parquet"),
-        [("https://a.example.com/p/1", datetime(2024, 5, 15, tzinfo=timezone.utc), html)],
-    )
-    _write_pages_unit(
-        os.path.join(pages, "part-00001.parquet"),
-        [
-            ("https://a.example.com/p/1b", datetime(2024, 6, 20, tzinfo=timezone.utc), html),
-            (
-                "https://a.example.com/p/2",
-                datetime(2024, 6, 20, tzinfo=timezone.utc),
-                "---- 2024-03-02 11:00:00 level:INFO table:users id:8 op:create\nother body",
-            ),
-        ],
-    )
-    pq.write_table(gen_lang_lookup(), os.path.join(base, "lang_lookup.parquet"))
-    pq.write_table(gen_domain_lookup(), os.path.join(base, "domain_lookup.parquet"))
+def test_warehouse_without_keys_marker_is_refused(spark, tmp_path_factory):
+    from log_server_spark.datagen import write_dataset
+    from log_server_spark.plans.pipeline import KEYS_MARKER
 
-    wh_dir = str(tmp_path_factory.mktemp("r4_legacy_wh"))
-    r1 = run_pipeline(spark, pages, wh_dir, batch_files=1, max_batches=1)
-    assert r1[0].added == 1
+    data = str(tmp_path_factory.mktemp("r4_nomarker_data"))
+    write_dataset(data, seed=5, n=200, num_files=2)
+    pages = os.path.join(data, "pages")
+    wh_dir = str(tmp_path_factory.mktemp("r4_nomarker_wh"))
+    run_pipeline(spark, pages, wh_dir, batch_files=1, max_batches=1)
     wh = Warehouse(wh_dir, spark)
+    n = wh.read(RECORDS).count()
+    assert n > 0
 
-    # doctor the warehouse into the round-1 legacy layout: no bucketing
-    # marker, keys day= partition named by the CAPTURE day (2024-05-15),
-    # not the record-header day (2024-03-01)
-    os.remove(os.path.join(wh_dir, "records_keys.bucketed"))
-    from log_server_spark.plans.pipeline import _keys_desync
-
-    _keys_desync(wh)
-    spark.sql("DROP TABLE IF EXISTS " + _legacy_keys_name(wh_dir))
-    batch_dirs = glob.glob(os.path.join(wh.path(RECORDS_KEYS), "batch=*"))
-    assert len(batch_dirs) == 1
-    day_dirs = glob.glob(os.path.join(batch_dirs[0], "day=*"))
-    assert len(day_dirs) == 1 and day_dirs[0].endswith("day=2024-03-01")
-    os.rename(day_dirs[0], os.path.join(batch_dirs[0], "day=2024-05-15"))
-
-    r2 = run_pipeline(spark, pages, wh_dir, batch_files=1)
-    assert len(r2) == 1
-    assert r2[0].added == 1, "only the genuinely new record"
-    assert r2[0].duplicates == 1, "legacy dup caught despite capture-day partitions"
-    ok = wh.read(RECORDS).filter(F.col("status") == "ok")
-    assert ok.count() == 2
-
-
-def _legacy_keys_name(root: str) -> str:
-    import hashlib
-
-    return f"records_keys_{hashlib.md5(root.encode()).hexdigest()[:10]}"
+    os.remove(os.path.join(wh_dir, KEYS_MARKER))
+    with pytest.raises(RuntimeError, match="no records_keys.bucketed marker"):
+        run_pipeline(spark, pages, wh_dir, batch_files=1)
+    assert wh.read(RECORDS).count() == n
+    assert not os.path.isdir(os.path.join(wh.path(RECORDS), "batch=b00001"))
+    assert not os.path.isfile(os.path.join(wh_dir, KEYS_MARKER))
 
 
 # ---------------------------------------------------------------------------
@@ -340,9 +303,10 @@ def test_adaptive_salt_reallocates_files_by_sink_volume(spark, tmp_path_factory,
     REALLOCATION logic is what this test exercises — test_round5 covers
     the cap itself."""
     from log_server_spark.datagen import write_dataset
+    import log_server_spark.plans.pipeline as pl
     from log_server_spark.plans.pipeline import _sink_salts
 
-    monkeypatch.setenv("LSS_TARGET_FILE_BYTES", "64")
+    monkeypatch.setattr(pl, "TARGET_FILE_BYTES", 64)
 
     data = str(tmp_path_factory.mktemp("r4_salt_data"))
     write_dataset(data, seed=21, n=600, num_files=2)
