@@ -6,13 +6,15 @@ each expressed scale-first:
 - exact: fingerprint groupBy (one shuffle of (hash, id) pairs only);
 - n-gram Jaccard: explode distinct shingles -> self-equi-join on shingle ->
   shared-count aggregation (never a cross join; co-partitioned by shingle);
-- MinHash + LSH: k universal-hash minima per doc (one explode + one groupBy),
-  banded bucket join for candidates, exact Jaccard verify on candidates only;
+- MinHash + LSH: k universal-hash minima per doc, computed per row with
+  array expressions (no explode, no shuffle), banded bucket join for
+  candidates, exact Jaccard verify on candidates only;
 - SimHash: 64-bit signature via per-bit vote aggregation, near-dups by
   Hamming distance on bucketed signatures.
 
-All hashing uses Spark's built-in xxhash64 (deterministic across runs and
-clusters) — no Python in any hot path.
+Hashing uses Spark's built-in xxhash64 (deterministic across runs and
+clusters); MinHash and SimHash also take an ``md5`` base, the same math
+the SQL oracles compute. No Python in any hot path.
 """
 
 from __future__ import annotations
@@ -27,6 +29,16 @@ from log_server_spark.functions.text import fingerprint, word_ngrams, words
 from log_server_spark.plan_util import spread_small_input
 
 MERSENNE_P = (1 << 31) - 1
+
+# the per-shingle base ``s -> b in [0, P)`` as SQL lambda bodies; the
+# Column-API twin ``_base_hash_mod_p`` builds the same expressions
+_BASE_HASH_SQL = {
+    "xxhash64": f"pmod(xxhash64(s), {MERSENNE_P})",
+    "md5": (
+        "pmod(CAST(conv(substring(md5(encode(s, 'UTF-8')), 1, 15), 16, 10) AS BIGINT), "
+        f"{MERSENNE_P})"
+    ),
+}
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -179,13 +191,13 @@ def minhash_lsh_pairs(
     """
     # threshold validation lives in minhash_lsh_pairs_from_signatures (the
     # delegate raises synchronously, before any job runs)
-    # ONE shingle explode, period (round 5): a single groupBy computes the
-    # k minima, the distinct-shingle count, AND the doc's shingle-hash set
-    # (collect_list of xxhash64 — per-doc shingles are distinct). The
-    # resulting per-doc frame is persisted spill-safe, because it has two
-    # genuinely independent consumers — the band self-join (left + right)
-    # and the verify join — and without a persist Catalyst re-evaluates
-    # the whole explode+aggregate subplan per reference (measured in r4:
+    # ONE signature pass: a per-row projection computes the k minima, the
+    # distinct-shingle count, AND the doc's shingle-hash set (xxhash64 of
+    # each distinct shingle). The per-doc frame is persisted spill-safe,
+    # because it has two genuinely independent consumers — the band
+    # self-join (left + right) and the verify join — and without a
+    # persist Catalyst re-evaluates
+    # the whole shingle+hash subplan per reference (measured in r4:
     # the second shingle pass was ~half the operator's 37 cpu-s). Column
     # pruning on the cached relation means the band join never decodes the
     # `shs` arrays; only the verify (candidate-volume-sized) reads them.
@@ -248,18 +260,21 @@ def minhash_signature_frame(
             F.array_distinct(word_ngrams(text_col, shingle_n)).alias("g"),
         )
     )
-    d = d.select(
+    # the hash projections are SQL text: one py4j command per selectExpr,
+    # where the same lambdas built through the Column API cost hundreds
+    # of driver round trips per signature (same expressions)
+    if base not in _BASE_HASH_SQL:
+        raise ValueError(base)
+    d = d.selectExpr(
         "id",
-        F.transform("g", lambda s: _base_hash_mod_p(s, base)).alias("bs"),
-        F.transform("g", lambda s: F.xxhash64(s)).alias("shs"),
+        f"transform(g, s -> {_BASE_HASH_SQL[base]}) AS bs",
+        "transform(g, s -> xxhash64(s)) AS shs",
     )
-    cols = [
-        F.array_min(
-            F.transform("bs", lambda x: F.pmod(F.lit(a) * x + F.lit(b), F.lit(MERSENNE_P)))
-        ).alias(f"mh_{i}")
+    mins = [
+        f"array_min(transform(bs, x -> pmod({a} * x + {b}, {MERSENNE_P}))) AS mh_{i}"
         for i, (a, b) in enumerate(minhash_coefficients(num_hashes))
     ]
-    return d.select("id", *cols, F.size("bs").alias("sz"), "shs")
+    return d.selectExpr("id", *mins, "size(bs) AS sz", "shs")
 
 
 def minhash_lsh_pairs_from_signatures(
@@ -290,18 +305,15 @@ def minhash_lsh_pairs_from_signatures(
     if num_hashes == 0 or num_hashes % bands != 0:
         raise ValueError(f"{num_hashes} mh_* columns not divisible into {bands} bands")
     rows_per_band = num_hashes // bands
-    band_cols = [
-        F.struct(
-            F.lit(bi).alias("band"),
-            F.concat_ws("_", *[F.col(f"mh_{bi * rows_per_band + j}") for j in range(rows_per_band)]).alias("key"),
-        )
+    band_structs = ", ".join(
+        f"named_struct('band', {bi}, 'key', concat_ws('_', "
+        + ", ".join(f"mh_{bi * rows_per_band + j}" for j in range(rows_per_band))
+        + "))"
         for bi in range(bands)
-    ]
-    banded = sig.select("id", "sz", F.explode(F.array(*band_cols)).alias("bk")).select(
-        "id", "sz", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
-    left = banded.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"), "band", "key")
-    right = banded.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"), "band", "key")
+    banded = sig.selectExpr("id", "sz", f"inline(array({band_structs})) AS (band, key)")
+    left = banded.selectExpr("id AS id_a", "sz AS sz_a", "band", "key")
+    right = banded.selectExpr("id AS id_b", "sz AS sz_b", "band", "key")
     if delta_ids is None:
         candidates = (
             left.join(right, ["band", "key"])
@@ -317,22 +329,13 @@ def minhash_lsh_pairs_from_signatures(
         candidates = (
             left.join(right.join(d, "id_b"), ["band", "key"])
             .filter(F.col("id_a") != F.col("id_b"))
-            .select(
-                F.least("id_a", "id_b").alias("ia"),
-                F.greatest("id_a", "id_b").alias("ib"),
-                F.when(F.col("id_a") < F.col("id_b"), F.col("sz_a"))
-                .otherwise(F.col("sz_b"))
-                .alias("sa"),
-                F.when(F.col("id_a") < F.col("id_b"), F.col("sz_b"))
-                .otherwise(F.col("sz_a"))
-                .alias("sb"),
+            .selectExpr(
+                "least(id_a, id_b) AS ia",
+                "greatest(id_a, id_b) AS ib",
+                "CASE WHEN id_a < id_b THEN sz_a ELSE sz_b END AS sa",
+                "CASE WHEN id_a < id_b THEN sz_b ELSE sz_a END AS sb",
             )
-            .select(
-                F.col("ia").alias("id_a"),
-                F.col("ib").alias("id_b"),
-                F.col("sa").alias("sz_a"),
-                F.col("sb").alias("sz_b"),
-            )
+            .selectExpr("ia AS id_a", "ib AS id_b", "sa AS sz_a", "sb AS sz_b")
             .distinct()
         )
     # size-ratio prune (round 6): jaccard <= min(sz)/max(sz), so a
@@ -355,26 +358,26 @@ def minhash_lsh_pairs_from_signatures(
     # shingle rows at all. (Measured sf0.1 local[32]: 2 Exchanges + 2
     # Generates removed from the verify subplan.) Everything downstream
     # of the band join stays sized by the CANDIDATE volume.
-    a = sig.select(F.col("id").alias("id_a"), F.col("shs").alias("__shs_a"))
-    b = sig.select(F.col("id").alias("id_b"), F.col("shs").alias("__shs_b"))
+    a = sig.selectExpr("id AS id_a", "shs AS __shs_a")
+    b = sig.selectExpr("id AS id_b", "shs AS __shs_b")
     scored = (
         candidates.join(a, "id_a")
         .join(b, "id_b")
-        .select(
+        .selectExpr(
             "id_a",
             "id_b",
             "sz_a",
             "sz_b",
-            F.size(F.array_intersect("__shs_a", "__shs_b")).alias("shared"),
+            "size(array_intersect(__shs_a, __shs_b)) AS shared",
         )
     )
     return (
-        scored.withColumn(
-            "jaccard",
-            F.round(F.col("shared") / (F.col("sz_a") + F.col("sz_b") - F.col("shared")).cast("double"), 4),
+        scored.selectExpr(
+            "id_a",
+            "id_b",
+            "round(shared / CAST(sz_a + sz_b - shared AS DOUBLE), 4) AS jaccard",
         )
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -394,13 +397,16 @@ def components_from_pairs(
 
     Pointer-jumping min-label propagation: each round takes the min label
     over neighbors (one equi-join + partial-agg groupBy on node id) and
-    then jumps ``lbl <- lbl(lbl)`` (one self-equi-join), so ``rounds`` = r
-    covers components of diameter up to ~2^r; the default 6 handles
-    diameter 64 — far beyond near-dup clusters, which are near-cliques
-    (every pair of clones shares the same shingles, so diameter 1-2). For
-    general graphs of unbounded diameter raise ``rounds`` (cost is linear
-    in it) or switch to large-star/small-star; the near-dup use case never
-    needs to.
+    then jumps ``lbl <- lbl(lbl)`` (one self-equi-join). The jump
+    shortens propagation where ids increase along a path (the default 6
+    rounds close a 70-node chain numbered in order), but not in general:
+    a node learns a smaller label only from a neighbour, and a sparse
+    random 40-node graph needed 8 rounds, a shuffled 70-node chain more
+    than 12. Near-dup clusters are near-cliques (every pair of clones
+    shares the same shingles, so diameter 1-2) and close in a round or
+    two. For general graphs raise ``rounds`` — the loop stops after the
+    first round that leaves every edge inside one label, so the cap costs
+    nothing once a graph converges — or switch to large-star/small-star.
 
     Iterative-algorithm plumbing, the standard Spark idiom (GraphFrames
     does the same): every round checkpoints the label frame. Each round
@@ -424,7 +430,7 @@ def components_from_pairs(
     def _ckpt(df: DataFrame) -> DataFrame:
         if checkpoint_dir is None:
             # LAZY local checkpoint (round 6): materialization folds into
-            # the round's convergence-sum action instead of an eager job
+            # the round's convergence-test action instead of an eager job
             # per checkpoint — one Spark job per round, not three. The
             # implicit persist localCheckpoint carries means the frame
             # still computes once even when the round references it twice
@@ -451,17 +457,18 @@ def components_from_pairs(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     lab = ids.select(F.col(id_col).alias("node"), F.col(id_col).alias("lbl"))
-    # convergence detection (round 5): labels only ever DECREASE (min
-    # propagation from the node's own id), so the exact label sum strictly
-    # decreases iff any label changed this round — an unchanged sum means a
-    # fixed point, and every later round is a no-op. One cheap scan of the
-    # just-checkpointed O(V) frame per round (no join, no second pass);
-    # decimal(38,0) keeps the sum exact at any node-id/corpus scale where
-    # an int64 sum of 64-bit ids would overflow. `rounds` stays the upper
-    # bound (diameter cover); near-clique near-dup graphs exit after ~2-3
-    # rounds, paying ~half the fixed checkpoint-job cost the bench flagged.
-    prev_sum = None
-    for _ in range(rounds):
+    # convergence: stop at the FIRST round after which no edge joins two
+    # different labels. That is exactly the fixed point: edges are
+    # symmetric, so a fixed point has lbl(u) = lbl(v) on every edge; and
+    # labels are ids from the node's own component that never exceed the
+    # node's id, so a component carrying one label carries its minimum
+    # id. A graph that converges in round r stops after r rounds (an
+    # unchanged-label test needs round r+1 to see it). Edges with an
+    # endpoint outside ``ids`` drop out of the inner joins, as they do
+    # from the propagation: such a node never gets a label and no path
+    # runs through it. `rounds` stays the upper bound; the last round
+    # skips the test, its labels are returned regardless.
+    for r in range(rounds):
         nbr = (
             edges.join(lab.withColumnsRenamed({"node": "dst", "lbl": "nlbl"}), "dst")
             .groupBy("src")
@@ -476,10 +483,13 @@ def components_from_pairs(
         # and is <= lbl (labels only ever decrease from the node id)
         jump = lab.select(F.col("node").alias("lbl"), F.col("lbl").alias("jlbl"))
         lab = _ckpt(lab.join(jump, "lbl").select("node", F.col("jlbl").alias("lbl")))
-        s = lab.agg(F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s")).collect()[0]["s"]
-        if s == prev_sum:
+        if r + 1 < rounds and (
+            e.join(lab.selectExpr("node AS src", "lbl AS l1"), "src")
+            .join(lab.selectExpr("node AS dst", "lbl AS l2"), "dst")
+            .where("l1 <> l2")
+            .isEmpty()
+        ):
             break
-        prev_sum = s
     return lab
 
 

@@ -86,9 +86,17 @@ def cosine_neardup_pairs(
     floor of ``ceil(sqrt(2 * parallelism))`` keeps B(B+1)/2 pair-cells >=
     the core count, so small corpora still fan out instead of serializing
     into one task. Block count never changes results (exact operator),
-    only task granularity. At corpus sizes where even the blocked
-    quadratic is wrong, the approximate LSH path (``lsh_cosine_topk`` /
-    banded bucketing) is the operator to use — this one is the
+    only task granularity.
+
+    Row volume: every one of the N vectors is emitted once per block, so
+    the cell shuffle carries B·N rows (B·N·dim·8 bytes of vector payload),
+    and the matmuls do ~N²/2 dot products in total — both grow with the
+    corpus, since B itself is ~N / ``block_target``. At corpus sizes where
+    that is too much, the approximate paths are the operators to use, run
+    with the corpus as its own query set: ``lsh_cosine_topk`` /
+    ``ann_rademacher_topk`` (LSH buckets) or ``ann_ivf_topk``
+    (coarse-quantizer inverted lists). They key the corpus once by bucket
+    or centroid and score only vectors that share one. This one is the
     oracle-grade exact variant.
     """
     if n_blocks is None:

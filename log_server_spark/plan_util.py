@@ -21,34 +21,36 @@ def _max_partition_bytes(spark) -> int:
         return _DEFAULT_MPB
 
 
-def _scan_files_bytes(df: DataFrame) -> tuple[int | None, int | None]:
-    """(total bytes | None, file count | None) of the files backing a plan.
-    (None, None) for non-file sources; (None, count) when the files exist
-    but their sizes aren't locally stat-able (s3a://, hdfs:// — every
-    non-local URI from ``df.inputFiles()``). Driver metadata only (the
-    scan's FileIndex listing) — NO RDD conversion, no Spark job, and unlike
-    ``df.rdd.getNumPartitions()`` it does not bypass AQE on the frame."""
+def _input_files(df: DataFrame) -> list[str]:
+    """The files backing a plan ([] for non-file sources). Driver metadata
+    only (the scan's FileIndex listing) — NO RDD conversion, no Spark job,
+    and unlike ``df.rdd.getNumPartitions()`` it does not bypass AQE on the
+    frame."""
     try:
-        uris = df.inputFiles()
+        return df.inputFiles()
     except Exception:
-        return None, None
+        return []
+
+
+def _files_bytes(uris: list[str]) -> int | None:
+    """Total size of ``uris``, or None when there are none or a size is not
+    locally stat-able (s3a://, hdfs:// — every non-local URI from
+    ``df.inputFiles()`` — or a moved file)."""
     if not uris:
-        return None, None
+        return None
     total = 0
     for uri in uris:
         p = unquote(urlparse(uri).path) if "://" in uri or uri.startswith("file:") else uri
         try:
             total += os.path.getsize(p)
         except OSError:
-            # sizes unavailable (object-store URI, moved file): the caller
-            # still learns the file COUNT — a lower bound on scan splits
-            return None, len(uris)
-    return total, len(uris)
+            return None
+    return total
 
 
 def scan_bytes_estimate(df: DataFrame) -> int | None:
     """Total size of the files backing a plan, or None for non-file sources."""
-    return _scan_files_bytes(df)[0]
+    return _files_bytes(_input_files(df))
 
 
 def _open_cost_bytes(spark) -> int:
@@ -73,20 +75,25 @@ def spread_small_input(df: DataFrame) -> DataFrame:
     cost is what keeps many-small-file scans from collapsing into one
     split. Non-file sources (in-memory test frames) conservatively spread.
 
-    Only spreads when the estimate AFFIRMATIVELY says the input is small:
-    when sizes are unavailable (object-store URIs — the 100 TB case), file
-    count is a lower bound on splits, so >= target files means no-op; an
+    Only spreads when the estimate AFFIRMATIVELY says the input is small.
+    File count alone settles it first, before any per-file stat: with
+    n >= target files the packed size is >= target * openCost, so Spark's
+    maxSplitBytes = min(maxPartitionBytes, max(openCost, size / target))
+    is <= size / target and the scan already has >= target splits. That
+    keeps the driver's cost flat in file count, and it is also the answer
+    when sizes are unavailable (object-store URIs — the 100 TB case); an
     unconditional repartition there would be a full shuffle of a large
     input plus a partition-count collapse.
     """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    total, n_files = _scan_files_bytes(df)
+    uris = _input_files(df)
+    if len(uris) >= target:
+        return df
+    total = _files_bytes(uris)
     if total is not None:
         mpb = _max_partition_bytes(spark)
-        est_splits = (total + n_files * _open_cost_bytes(spark) + mpb - 1) // mpb
+        est_splits = (total + len(uris) * _open_cost_bytes(spark) + mpb - 1) // mpb
         if est_splits >= target:
             return df
-    elif n_files is not None and n_files >= target:
-        return df
     return df.repartition(target)

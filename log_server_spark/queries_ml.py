@@ -712,11 +712,12 @@ def q_dedup_clusters(spark, sf_dir):
         num_hashes=16, bands=8, shingle_n=3, threshold=0.5, base="md5",
     )
     # the oracle's recursive CTE computes the EXACT closure, so the Spark
-    # side must fully converge: keep the operator's default rounds=6
-    # (diameter 64 via pointer jumping — clone groups are near-cliques of
-    # diameter 1-2, so this is a wide safety margin, but do NOT trade it
-    # for fewer checkpoint jobs; a chain longer than the bound would label
-    # some nodes with a non-minimal keeper and break oracle parity)
+    # side must fully converge: keep the operator's default rounds=6 as
+    # the cap (clone groups are near-cliques of diameter 1-2, so this is a
+    # wide safety margin; a graph still unconverged at the cap would label
+    # some nodes with a non-minimal keeper and break oracle parity). The
+    # cap costs nothing on these graphs: the operator stops at the first
+    # round after which no edge joins two different labels
     # LSS_CHECKPOINT_DIR switches the iteration from localCheckpoint
     # (executor-block-only — fast, not node-loss-safe) to reliable
     # checkpoint() against a shared path; identical labels either way

@@ -415,17 +415,29 @@ def test_components_from_pairs_chain_and_singletons(spark):
 def test_components_from_pairs_random_graphs_vs_union_find(spark):
     """Randomized oracle: min-label components must equal a driver-side
     union-find on arbitrary sparse graphs (multiple seeds, isolated nodes,
-    self-contained chains/cycles/cliques arise naturally)."""
+    self-contained chains/cycles/cliques arise naturally). Two more
+    graphs: edges whose endpoint is missing from ``ids`` (such a node gets
+    no label and no path runs through it), and a 70-node chain that needs
+    all six default rounds to converge."""
     import random
 
     from log_server_spark.operators.dedup_text import components_from_pairs
 
     rng = random.Random(20260819)
+    graphs = []
     for _trial in range(3):
         n = rng.randint(10, 50)
         m = rng.randint(0, n)
         edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
-        edges = [(a, b) for a, b in edges if a != b]
+        graphs.append((n, [(a, b) for a, b in edges if a != b]))
+    n = 40
+    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(n // 2)]
+    # nodes n..n+4 are endpoints only, absent from ids: each bridges
+    # several nodes that would otherwise share a component through it
+    edges += [(rng.randrange(n), n + k) for k in range(5) for _ in range(3)]
+    graphs.append((n, [(a, b) for a, b in edges if a != b]))
+    graphs.append((70, [(i, i + 1) for i in range(69)]))
+    for n, edges in graphs:
         parent = list(range(n))
 
         def find(x):
@@ -435,6 +447,8 @@ def test_components_from_pairs_random_graphs_vs_union_find(spark):
             return x
 
         for a, b in edges:
+            if a >= n or b >= n:
+                continue  # an endpoint outside ids joins nothing
             ra, rb = find(a), find(b)
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
