@@ -10,23 +10,20 @@ hashing, so it is NOT byte-compatible; we need our own.
 Two implementations, one semantics:
 
 - ``murmur3_32``: scalar pure-Python, the readable reference used by tests.
-- ``murmur3_32_batch``: numpy-vectorized across rows — processes word ``i``
+- ``murmur3_32_batch`` / ``murmur3_32_offsets``: vectorized across rows
+  (the self-compiled C kernel, or a numpy scheme that processes word ``i``
   of every still-active row simultaneously, so total work is
-  O(total_bytes / 4) vector ops regardless of row-length variance. This is
-  the hot path inside the Arrow-batched pandas UDF; there is no per-row
-  Python in it.
+  O(total_bytes / 4) vector ops regardless of row-length variance). This
+  is the hot path inside the parse stage's ``mapInArrow`` body; there is no
+  per-row Python in it.
 
-Also exposes ``record_hash_udf`` — the pandas UDF used by the pipeline —
-and the Java-``String.hashCode``-style fold used for string record ids
-(reference: log-server-core/.../RecordId.scala:71), kept for parity tests.
+``record_hash_batch`` / ``record_hash_offsets`` fold the timestamp in to
+give the reference record hash.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType
 
 _C1 = 0xCC9E2D51
 _C2 = 0x1B873593
@@ -197,30 +194,3 @@ def record_hash_offsets(
     """:func:`record_hash_batch` over a flattened buffer + per-row offsets
     (zero-copy from an Arrow string array's data buffer)."""
     return murmur3_32_offsets(buf, offsets, lengths) ^ _ts_fold32(ts_millis)
-
-
-def java_string_hash(data: bytes) -> int:
-    """``fold(0)(_ * 31 + _)`` over bytes — string-id hash parity
-    (reference: RecordId.scala:71). Signed bytes, int32 wraparound."""
-    h = 0
-    for b in data:
-        sb = b - 256 if b >= 128 else b
-        h = (h * 31 + sb) & _M32
-    return h - (1 << 32) if h >= (1 << 31) else h
-
-
-def with_record_hash(df, data_col: str = "data", ts_col: str = "ts_millis", out_col: str = "record_hash"):
-    """Attach the reference-parity content hash as ``out_col``.
-
-    ``data_col`` must be binary, ``ts_col`` int64 epoch millis. Implemented
-    as one Arrow-batched pandas UDF (zip of the two columns); stays fully
-    vectorized inside the batch.
-    """
-    import pyspark.sql.functions as F  # local alias for clarity
-
-    @F.pandas_udf(IntegerType())
-    def _hash(data: pd.Series, ts: pd.Series) -> pd.Series:
-        out = record_hash_batch(data.to_numpy(), ts.to_numpy(dtype=np.int64))
-        return pd.Series(out)
-
-    return df.withColumn(out_col, _hash(F.col(data_col), F.col(ts_col)))

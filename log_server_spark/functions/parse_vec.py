@@ -18,9 +18,10 @@ runs at C speed inside the Python worker:
 - **Anything non-ASCII** routes through ``parse_ref.parse_page`` unchanged
   (the residue path), and the two outputs concatenate.
 
-Row-for-row equality of the two paths over every planted error class +
-adversarial edge pages (incl. cp1251/UTF-8/invalid-byte torture cases) is
-enforced by tests/test_parse_fastpath.py. The reference analogue of this
+Row-for-row equality with ``parse_ref.parse_page`` run in plain Python,
+over every planted error class + adversarial edge pages (incl.
+cp1251/UTF-8/invalid-byte torture cases), is enforced by
+tests/test_parse_fastpath.py. The reference analogue of this
 split is the zero-allocation Scala hot loop (OldLogReader.scala:19-61) vs
 its tolerant fallback.
 
@@ -69,20 +70,6 @@ _ID_PAT = rf" id:(?P<t>{_JAVA_NON_WS}+)"
 _TABLE_PAT = rf" table:(?P<t>{_JAVA_NON_WS}+)"
 _STATUS_LOOKUP = pa.array([OK, ERR_NO_NEWLINE, ERR_BAD_DATE, ERR_MISSING_TABLE, ERR_OVERSIZE])
 _DAYS_IN_MONTH = np.array([0, 31, 28, 31, 30, 31, 30, 31, 31, 30, 31, 30, 31], dtype=np.int64)
-
-OUT_FIELDS = [
-    ("url", None),  # type copied from input
-    ("warc_ts", None),
-    ("lang", None),
-    ("seq", pa.int32()),
-    ("status", pa.string()),
-    ("table", pa.string()),
-    ("record_id", pa.string()),
-    ("ts_millis", pa.int64()),
-    ("text", pa.string()),
-    ("n_bytes", pa.int64()),
-    ("record_hash", pa.int32()),
-]
 
 
 def _str_buf(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
@@ -340,14 +327,15 @@ def parse_pages_residue(
 
 
 def parse_record_batch(batch: pa.RecordBatch) -> pa.Table:
-    """One Arrow batch of pages -> records table (ASCII + mixed-encoding
-    vectorized paths; both end in the shared segment kernels)."""
+    """One Arrow batch of pages -> records table: pure-ASCII pages through
+    the vectorized kernels, the rest through the per-record ``parse_ref``
+    residue path, concatenated."""
     url, warc_ts, lang = batch.column(0), batch.column(1), batch.column(2)
     html = pc.fill_null(batch.column(3), b"")
     mask = _ascii_mask(html)
-    parts = []
     if mask.all():
         return parse_pages_ascii(url, warc_ts, lang, html)
+    parts = []
     a_idx = pa.array(np.nonzero(mask)[0])
     r_idx = pa.array(np.nonzero(~mask)[0])
     if len(a_idx):

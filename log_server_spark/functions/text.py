@@ -36,13 +36,6 @@ def token_count(col) -> Column:
     ).cast("long")
 
 
-def bpe_ish_token_count(col) -> Column:
-    """Rough subword token estimate: count of GPT-2-style pretokenizer
-    matches (word pieces, numbers, punctuation runs)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(F.regexp_extract_all(c, F.lit(r"[A-Za-zА-Яа-я]+|\d+|[^\sA-Za-zА-Яа-я\d]+"), 0))
-
-
 def _count_re(c: Column, pattern: str) -> Column:
     return F.length(c) - F.length(F.regexp_replace(c, pattern, ""))
 

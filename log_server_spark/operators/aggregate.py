@@ -17,41 +17,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def sink_stats(routed: DataFrame) -> DataFrame:
-    """Per-sink aggregate stats — the analogue of per-segment `info` (A3)."""
-    return routed.groupBy("sink").agg(
-        F.count("*").alias("n_rows"),
-        F.countDistinct("url").alias("n_urls"),
-        F.approx_count_distinct("url").alias("n_urls_approx"),
-        F.countDistinct("table", "record_id", "record_hash").alias("n_keys"),
-        F.min("ts_millis").alias("min_ts"),
-        F.max("ts_millis").alias("max_ts"),
-        F.sum("n_bytes").alias("total_bytes"),
-    )
-
-
-def windowed_stats(routed: DataFrame, window: str = "1 day") -> DataFrame:
-    """Tumbling event-time windows per sink over warc_ts (north_star)."""
-    return (
-        routed.groupBy(F.window("warc_ts", window).alias("w"), "sink")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.countDistinct("url").alias("n_urls"),
-            F.approx_count_distinct("url").alias("n_urls_approx"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "sink",
-            "n_rows",
-            "n_urls",
-            "n_urls_approx",
-        )
-    )
-
-
 def combined_stats(records: DataFrame, window: str = "1 day"):
-    """sink_stats + windowed_stats + ingest status counts in ONE aggregation.
+    """Per-sink stats (the analogue of per-segment `info`, A3), tumbling
+    event-time windows per sink over warc_ts, and ingest status counts in
+    ONE aggregation.
 
     Uses GROUPING SETS ((status), (sink), (window_start, sink)) so the whole
     metrics refresh is a single shuffle/scan instead of three. Returns

@@ -30,15 +30,22 @@ from log_server_spark.plan_util import spread_small_input
 
 MERSENNE_P = (1 << 31) - 1
 
-# the per-shingle base ``s -> b in [0, P)`` as SQL lambda bodies; the
-# Column-API twin ``_base_hash_mod_p`` builds the same expressions
+# the one definition of the per-token base hash, as SQL text over a column
+# (or lambda variable) name ``{c}``: ``xxhash64`` (one JVM op, the
+# production base) or ``md5`` (first 15 hex chars of md5 as an integer —
+# computable identically in any engine with md5, the same math the SQL
+# oracles compute). MinHash reduces it into [0, P); SimHash votes on its
+# bits.
 _BASE_HASH_SQL = {
-    "xxhash64": f"pmod(xxhash64(s), {MERSENNE_P})",
-    "md5": (
-        "pmod(CAST(conv(substring(md5(encode(s, 'UTF-8')), 1, 15), 16, 10) AS BIGINT), "
-        f"{MERSENNE_P})"
-    ),
+    "xxhash64": "xxhash64({c})",
+    "md5": "CAST(conv(substring(md5(encode({c}, 'UTF-8')), 1, 15), 16, 10) AS BIGINT)",
 }
+
+
+def _base_hash_sql(base: str, c: str) -> str:
+    if base not in _BASE_HASH_SQL:
+        raise ValueError(base)
+    return _BASE_HASH_SQL[base].format(c=c)
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -50,22 +57,6 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         df.select(F.col(id_col).alias("id"), fingerprint(text_col).alias("fp"))
         .groupBy("fp")
         .agg(F.min("id").alias("keeper_id"), (F.count("*") - 1).alias("dup_count"))
-    )
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Small-input / heavy-compute guard: shingling is an interpreted
-    higher-order expression (~µs/shingle), so a corpus that fits one parquet
-    split would otherwise run it on ONE core. Gated on the input-file size
-    estimate (driver metadata, no RDD conversion — see plan_util); at real
-    scale the scan already has >= cores partitions and this is a no-op."""
-    return spread_small_input(df)
-
-
-def _shingle_frame(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    return _spread(df).select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(word_ngrams(text_col, n))).alias("shingle"),
     )
 
 
@@ -100,8 +91,12 @@ def ngram_jaccard_pairs(
     # output filter applies). Measured sf0.1 local[32]: pre-aggregation
     # pair rows 1.27M -> size-compatible subset only, cpu 30.8 -> ~8,
     # and the two sizes broadcast-joins disappear from the plan.
+    # spread_small_input: shingling is an interpreted higher-order
+    # expression (~µs/shingle), so a corpus that fits one parquet split
+    # would otherwise run it on ONE core; at real scale the scan already
+    # has >= cores partitions and the guard is a no-op
     per_doc = (
-        _spread(df)
+        spread_small_input(df)
         .select(
             F.col(id_col).alias("id"),
             F.array_distinct(word_ngrams(text_col, n)).alias("g"),
@@ -253,7 +248,7 @@ def minhash_signature_frame(
     # chain on the scan's (single, at this corpus size) partition —
     # the §4.4-style duplicated-expression trap, caught in the plan
     d = (
-        _spread(df)
+        spread_small_input(df)
         .where(F.size(F.split(F.trim(F.col(text_col)), r"\s+")) >= shingle_n)
         .select(
             F.col(id_col).alias("id"),
@@ -263,11 +258,9 @@ def minhash_signature_frame(
     # the hash projections are SQL text: one py4j command per selectExpr,
     # where the same lambdas built through the Column API cost hundreds
     # of driver round trips per signature (same expressions)
-    if base not in _BASE_HASH_SQL:
-        raise ValueError(base)
     d = d.selectExpr(
         "id",
-        f"transform(g, s -> {_BASE_HASH_SQL[base]}) AS bs",
+        f"transform(g, s -> pmod({_base_hash_sql(base, 's')}, {MERSENNE_P})) AS bs",
         "transform(g, s -> xxhash64(s)) AS shs",
     )
     mins = [
@@ -493,35 +486,12 @@ def components_from_pairs(
     return lab
 
 
-def _base_hash_mod_p(col, base: str):
-    """Per-shingle universal-hash base ``b`` in [0, P): ``xxhash64`` (one
-    JVM op, the production base) or ``md5`` (first 15 hex chars of md5 as
-    an integer — the same math the SQL oracles compute)."""
-    if base == "xxhash64":
-        return F.pmod(F.xxhash64(col), F.lit(MERSENNE_P))
-    if base == "md5":
-        hex15 = F.substring(F.md5(F.encode(col, "UTF-8")), 1, 15)
-        return F.pmod(F.conv(hex15, 16, 10).cast("long"), F.lit(MERSENNE_P))
-    raise ValueError(base)
-
-
-def _base_hash_expr(col, base: str):
-    """Word/shingle base hash: ``xxhash64`` (one JVM op — the production
-    path) or ``md5`` (first 15 hex chars of md5 as an integer — computable
-    identically in any engine with md5, the SQL-oracle-checkable variant)."""
-    if base == "xxhash64":
-        return F.xxhash64(col)
-    if base == "md5":
-        return F.conv(F.substring(F.md5(F.encode(col, "UTF-8")), 1, 15), 16, 10).cast("long")
-    raise ValueError(base)
-
-
 def simhash64(df: DataFrame, id_col: str, text_col: str, base: str = "xxhash64") -> DataFrame:
     """64-bit SimHash per doc: per-bit majority vote over word hashes."""
-    w = _spread(df).select(
+    w = spread_small_input(df).select(
         F.col(id_col).alias("id"),
         F.explode(words(F.trim(F.col(text_col)))).alias("w"),
-    ).withColumn("h", _base_hash_expr(F.col("w"), base))
+    ).withColumn("h", F.expr(_base_hash_sql(base, "w")))
     votes = w.groupBy("id").agg(
         *[
             F.sum(
@@ -733,13 +703,13 @@ def substring_duplicate_pairs(
     the same key) — the standard boilerplate guard at scale; the default
     ``None`` keeps exact semantics for the oracle.
     """
-    # round 6: _spread guard (without it a corpus that fits one parquet
-    # split runs the interpreted window explode on ONE core — measured
-    # 5.6 s wall at sf0.1) + persist, because the hashed-window frame
+    # round 6: spread_small_input guard (without it a corpus that fits one
+    # parquet split runs the interpreted window explode on ONE core —
+    # measured 5.6 s wall at sf0.1) + persist, because the hashed-window frame
     # feeds BOTH sides of the self-join (and the max_df pre-aggregation):
     # without the cache each consumer re-runs the whole explode — the
     # same measured trade ngram_jaccard_pairs/minhash_lsh_pairs make.
-    wins = _spread(df).select(
+    wins = spread_small_input(df).select(
         F.col(id_col).alias("doc_id"),
         F.explode(
             F.array_distinct(word_ngrams(F.lower(F.trim(F.col(text_col))), window_n))

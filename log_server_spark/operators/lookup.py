@@ -23,12 +23,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def canonical_id(col):
-    """RecordId.parse coercion: numeric strings render as the int."""
-    as_int = col.try_cast("int")
-    return F.when(as_int.isNotNull(), as_int.cast("string")).otherwise(col)
-
-
 def get_records(records: DataFrame, table: str, record_id: str | int) -> DataFrame:
     """All stored records for (table, id), timestamp-ascending."""
     from log_server_spark.parse_ref import canonical_record_id
@@ -57,7 +51,3 @@ def to_json_records(df: DataFrame) -> DataFrame:
         ).alias("json")
     )
 
-
-def get_records_json(records: DataFrame, table: str, record_id: str | int) -> DataFrame:
-    """JSON-shaped output (S8): one `json` string column per record."""
-    return to_json_records(get_records(records, table, record_id))

@@ -1,8 +1,8 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Design: image/audio/video payloads are opaque ``binary`` columns with a
-typed metadata struct alongside; decode / feature-extract / resize /
-frame-sample run as Arrow-batched ``mapInPandas`` stages so payload bytes
+typed metadata struct alongside; decode / feature-extract / resize run
+as Arrow-batched ``mapInPandas`` stages so payload bytes
 stream through Python in bounded batches (sized by
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` — large blobs never
 accumulate on one executor).
@@ -23,11 +23,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-MEDIA_SCHEMA = (
-    "media_id string, kind string, payload binary, "
-    "width int, height int, duration_ms int"
-)
 
 FEATURES_SCHEMA = (
     "media_id string, kind string, n_bytes long, sha256 string, "
@@ -77,7 +72,8 @@ def _decode_image_batch(payloads: pd.Series, pixel: bool = True) -> np.ndarray:
 def extract_features(
     media: DataFrame, thumb: tuple[int, int] = (32, 32), pixel: bool = True
 ) -> DataFrame:
-    """media(MEDIA_SCHEMA) -> per-item features (FEATURES_SCHEMA).
+    """media(media_id string, kind string, payload binary, width int,
+    height int, duration_ms int) -> per-item features (FEATURES_SCHEMA).
 
     ``pixel=False`` forces the byte-stats feature kernel (environment-
     independent and SQL-expressible — the driver-oracle variant)."""
@@ -108,21 +104,6 @@ def extract_features(
             )
 
     return media.mapInPandas(gen, schema=FEATURES_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Frame-sampling plumbing: one output row per sampled frame offset.
-
-    JVM-side sequence explode (no Python): the per-frame decode would be a
-    downstream mapInPandas over (media_id, frame_ms, payload).
-    """
-    return media.filter(F.col("kind") == "video").select(
-        "media_id",
-        "payload",
-        F.explode(
-            F.sequence(F.lit(0), F.greatest(F.col("duration_ms") - 1, F.lit(0)), F.lit(every_ms))
-        ).alias("frame_ms"),
-    )
 
 
 def media_from_documents(docs: DataFrame) -> DataFrame:

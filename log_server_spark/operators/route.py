@@ -38,6 +38,3 @@ def with_sink(df: DataFrame) -> DataFrame:
         ),
     )
 
-
-def route_counts(df: DataFrame) -> DataFrame:
-    return with_sink(df).groupBy("sink").agg(F.count("*").alias("n_rows"))

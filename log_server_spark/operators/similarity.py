@@ -8,18 +8,17 @@ Scale notes:
 - brute force broadcasts the (small) query side and computes dot products
   JVM-side with zip_with/aggregate inside codegen — a map-only stage over
   the corpus followed by a top-k-per-query aggregation (no global sort);
-- the LSH variant buckets the corpus by random-hyperplane sign bits
-  (fixed deterministic planes), probing only matching buckets — the
-  classic SimHash-for-cosine scheme; recall is tunable via bits/probes.
+- the LSH variant (``ann_rademacher_topk``) buckets the corpus by the sign
+  bits of deterministic ±1 hyperplanes, probing only matching buckets —
+  the classic SimHash-for-cosine scheme; recall is tunable via
+  bits/probes.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
 
 def _as_double(col):
@@ -93,11 +92,10 @@ def cosine_neardup_pairs(
     and the matmuls do ~N²/2 dot products in total — both grow with the
     corpus, since B itself is ~N / ``block_target``. At corpus sizes where
     that is too much, the approximate paths are the operators to use, run
-    with the corpus as its own query set: ``lsh_cosine_topk`` /
-    ``ann_rademacher_topk`` (LSH buckets) or ``ann_ivf_topk``
-    (coarse-quantizer inverted lists). They key the corpus once by bucket
-    or centroid and score only vectors that share one. This one is the
-    oracle-grade exact variant.
+    with the corpus as its own query set: ``ann_rademacher_topk`` (LSH
+    buckets) or ``ann_ivf_topk`` (coarse-quantizer inverted lists). They
+    key the corpus once by bucket or centroid and score only vectors that
+    share one. This one is the oracle-grade exact variant.
     """
     if n_blocks is None:
         n = df.count()
@@ -251,12 +249,17 @@ def ann_rademacher_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Approximate top-k via Rademacher-plane LSH buckets + multi-probe.
+    """Approximate top-k via Rademacher-plane LSH buckets + multi-probe:
+    probe the query's bucket plus every bucket within Hamming distance
+    ``probes`` of it, exact cosine inside the probed buckets.
 
-    Same bucket equi-join shape as :func:`lsh_cosine_topk` but with
-    engine-portable deterministic buckets (see ``_rademacher_signs``), so
-    the whole operator — candidate generation included — is value-checkable
-    against a SQL oracle. Exact cosine inside the probed buckets.
+    At 10^9+ vectors this turns an all-pairs scan into an equi-join keyed by
+    bucket; expected candidate fraction = (sum_{i<=probes} C(bits,i)) /
+    2^bits — the recall/cost dial. The buckets are engine-portable and
+    deterministic (see ``_rademacher_signs``) and built from JVM
+    expressions only, so the whole operator — candidate generation
+    included — is value-checkable against a SQL oracle. Same output shape
+    as :func:`cosine_topk`.
     """
     signs = _rademacher_signs(dim, bits)
     q = queries.select(
@@ -285,82 +288,6 @@ def ann_rademacher_topk(
             F.col("rank").cast("long").alias("rank"),
             F.round("cosine", 4).alias("cosine_r"),
         )
-    )
-
-
-_LSH_SEED = 0x5EED
-
-
-def _hyperplanes(dim: int, bits: int) -> np.ndarray:
-    rng = np.random.default_rng(_LSH_SEED)
-    return rng.standard_normal((dim, bits))
-
-
-def lsh_bucket_ids(df: DataFrame, dim: int, bits: int = 12, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """Attach a random-hyperplane LSH bucket id (sign-bit signature).
-
-    The matmul runs as one Arrow-batched pandas UDF (vectorized numpy) —
-    batch_size x dim @ dim x bits per batch, no per-row Python.
-    """
-    planes = _hyperplanes(dim, bits)
-
-    @F.pandas_udf(LongType())
-    def _bucket(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy())  # (batch, dim) float32
-        signs = (m.astype(np.float64) @ planes) > 0  # (batch, bits)
-        weights = (1 << np.arange(bits)).astype(np.int64)
-        return pd.Series(signs @ weights)
-
-    return df.withColumn("lsh_bucket", _bucket(F.col(vec_col))).select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v"), "lsh_bucket"
-    )
-
-
-def lsh_cosine_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    dim: int,
-    k: int = 5,
-    bits: int = 8,
-    probes: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: probe the query's LSH bucket (plus all buckets
-    within Hamming distance ``probes``), exact cosine inside.
-
-    At 10^9+ vectors this turns an all-pairs scan into an equi-join keyed by
-    bucket; expected candidate fraction = (sum_{i<=probes} C(bits,i)) /
-    2^bits — the recall/cost dial. Same output shape as cosine_topk.
-    """
-    qb = lsh_bucket_ids(queries, dim, bits, id_col, vec_col).withColumnsRenamed(
-        {"id": "query_id", "v": "qv"}
-    )
-    flips = [0]  # xor masks for buckets within the probe radius
-    if probes >= 1:
-        flips += [1 << b for b in range(bits)]
-    if probes >= 2:
-        flips += [(1 << a) | (1 << b) for a in range(bits) for b in range(a + 1, bits)]
-    qb = qb.select(
-        "query_id",
-        "qv",
-        F.explode(
-            F.array(*[F.col("lsh_bucket").bitwiseXOR(F.lit(m).cast("long")) for m in flips])
-        ).alias("lsh_bucket"),
-    )
-    cb = lsh_bucket_ids(corpus, dim, bits, id_col, vec_col).withColumnsRenamed(
-        {"id": "neighbor_id", "v": "cv"}
-    )
-    joined = cb.join(F.broadcast(qb), "lsh_bucket").withColumn(
-        "cosine",
-        _dot(_as_double(F.col("qv")), _as_double(F.col("cv")))
-        / (_norm(_as_double(F.col("qv"))) * _norm(_as_double(F.col("cv")))),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id").asc())
-    return (
-        joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"), F.round("cosine", 4).alias("cosine_r"))
     )
 
 

@@ -7,18 +7,13 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 
-_DEFAULT_MPB = 128 << 20
 
-
-def _max_partition_bytes(spark) -> int:
-    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", str(_DEFAULT_MPB))
-    s = raw.strip().lower()
-    if s.endswith("b"):
-        s = s[:-1]
-    try:
-        return int(s)
-    except ValueError:  # "128m"-style values: fall back to the default
-        return _DEFAULT_MPB
+def _conf_bytes(spark, key: str) -> int:
+    """A byte-size SQL conf (set or default) as Spark itself reads it:
+    ``JavaUtils.byteStringAsBytes``, so "64m", "1g" and "4194304b" all
+    parse to the bytes Spark's file packing uses."""
+    raw = spark.conf.get(key)
+    return int(spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(raw))
 
 
 def _input_files(df: DataFrame) -> list[str]:
@@ -46,22 +41,6 @@ def _files_bytes(uris: list[str]) -> int | None:
         except OSError:
             return None
     return total
-
-
-def scan_bytes_estimate(df: DataFrame) -> int | None:
-    """Total size of the files backing a plan, or None for non-file sources."""
-    return _files_bytes(_input_files(df))
-
-
-def _open_cost_bytes(spark) -> int:
-    raw = spark.conf.get("spark.sql.files.openCostInBytes", str(4 << 20))
-    s = raw.strip().lower()
-    if s.endswith("b"):
-        s = s[:-1]
-    try:
-        return int(s)
-    except ValueError:
-        return 4 << 20
 
 
 def spread_small_input(df: DataFrame) -> DataFrame:
@@ -92,8 +71,9 @@ def spread_small_input(df: DataFrame) -> DataFrame:
         return df
     total = _files_bytes(uris)
     if total is not None:
-        mpb = _max_partition_bytes(spark)
-        est_splits = (total + len(uris) * _open_cost_bytes(spark) + mpb - 1) // mpb
+        mpb = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes")
+        open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes")
+        est_splits = (total + len(uris) * open_cost + mpb - 1) // mpb
         if est_splits >= target:
             return df
     return df.repartition(target)

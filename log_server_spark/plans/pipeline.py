@@ -931,15 +931,6 @@ def refresh_aggregates(spark: SparkSession, wh: Warehouse, exact: bool = False) 
         from log_server_spark.operators.aggregate import combined_stats
 
         _status, sink_rows, windowed_rows = combined_stats(wh.read(RECORDS))
-        sink_out = [
-            (r["sink"], r["n_rows"], r["n_keys"], r["n_urls_approx"],
-             r["min_ts"], r["max_ts"], r["total_bytes"])
-            for r in sink_rows
-        ]
-        win_out = [
-            (r["window_start"], r["sink"], r["n_rows"], r["n_urls_approx"])
-            for r in windowed_rows
-        ]
     else:
         # ONE grouping-sets merge job over the tiny partials table yields
         # both the per-sink and the per-(window, sink) rollups
@@ -960,15 +951,15 @@ def refresh_aggregates(spark: SparkSession, wh: Warehouse, exact: bool = False) 
         # gid bits follow (sink, window_start): 0b01 = window aggregated out
         sink_rows = [r for r in rows if r["gid"] == 0b01]
         windowed_rows = [r for r in rows if r["gid"] == 0b00]
-        sink_out = [
-            (r["sink"], r["n_rows"], r["n_keys"], r["n_urls_approx"],
-             r["min_ts"], r["max_ts"], r["total_bytes"])
-            for r in sink_rows
-        ]
-        win_out = [
-            (r["window_start"], r["sink"], r["n_rows"], r["n_urls_approx"])
-            for r in windowed_rows
-        ]
+    sink_out = [
+        (r["sink"], r["n_rows"], r["n_keys"], r["n_urls_approx"],
+         r["min_ts"], r["max_ts"], r["total_bytes"])
+        for r in sink_rows
+    ]
+    win_out = [
+        (r["window_start"], r["sink"], r["n_rows"], r["n_urls_approx"])
+        for r in windowed_rows
+    ]
     for name in (METRICS_SINK, METRICS_WINDOWED):
         wh.drop(name)
     wh.write_small(

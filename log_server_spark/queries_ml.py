@@ -38,7 +38,6 @@ from log_server_spark.operators.similarity import (
     cosine_neardup_pairs,
     cosine_topk,
     kmeans_assign,
-    lsh_cosine_topk,
 )
 
 

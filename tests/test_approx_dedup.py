@@ -11,7 +11,7 @@ from log_server_spark.operators.dedup_text import (
     simhash64,
     simhash_neardup_pairs,
 )
-from log_server_spark.operators.similarity import cosine_topk, lsh_cosine_topk
+from log_server_spark.operators.similarity import ann_rademacher_topk, cosine_topk
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -107,7 +107,7 @@ def test_ann_lsh_recall_vs_exact(emb):
     }
     approx = {
         (r["query_id"], r["neighbor_id"])
-        for r in lsh_cosine_topk(queries, corpus, dim=64, k=3, bits=6, probes=2).collect()
+        for r in ann_rademacher_topk(queries, corpus, dim=64, k=3, bits=6, probes=2).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.5, f"ANN recall {recall:.2f} too low"
@@ -117,7 +117,7 @@ def test_ann_lsh_recall_vs_exact(emb):
         (r["query_id"], r["neighbor_id"]): r["cosine_r"]
         for r in cosine_topk(queries, corpus, k=500).collect()
     }
-    for r in lsh_cosine_topk(queries, corpus, dim=64, k=3, bits=6, probes=2).collect():
+    for r in ann_rademacher_topk(queries, corpus, dim=64, k=3, bits=6, probes=2).collect():
         key = (r["query_id"], r["neighbor_id"])
         if key in exact_scores:
             assert abs(exact_scores[key] - r["cosine_r"]) < 1e-9

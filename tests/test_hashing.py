@@ -11,7 +11,6 @@ import numpy as np
 import pytest
 
 from log_server_spark.functions.hashing import (
-    java_string_hash,
     murmur3_32,
     murmur3_32_batch,
     record_hash_batch,
@@ -69,24 +68,3 @@ def test_record_hash_fold_semantics():
         want = _u32(murmur3_32(d)) ^ fold
         want = want - (1 << 32) if want >= (1 << 31) else want
         assert int(got[i]) == want
-
-
-def test_java_string_hash():
-    # Java "abc".hashCode() over ASCII bytes == 96354; byte-fold matches
-    assert java_string_hash(b"abc") == 96354
-    assert java_string_hash(b"") == 0
-    # high bytes are signed in the JVM fold
-    assert java_string_hash(bytes([200])) == -56
-
-
-def test_with_record_hash_udf(spark):
-    from log_server_spark.functions.hashing import with_record_hash
-
-    df = spark.createDataFrame(
-        [(b"payload-one", 1_400_000_000_000), (b"", 0)],
-        "data binary, ts_millis long",
-    )
-    rows = {r["ts_millis"]: r["record_hash"] for r in with_record_hash(df).collect()}
-    want = record_hash_batch([b"payload-one"], np.array([1_400_000_000_000]))[0]
-    assert rows[1_400_000_000_000] == int(want)
-    assert rows[0] == murmur3_32(b"")

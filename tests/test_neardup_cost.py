@@ -1,7 +1,8 @@
 """Driver-cost guards for the near-dup path: the MinHash/LSH plan build
 stays a bounded number of py4j commands, connected components stops at
 its fixed point, and the small-input spread never stats files when the
-file count already covers the cores."""
+file count already covers the cores and reads byte-size confs as Spark
+does."""
 
 import os
 
@@ -31,6 +32,30 @@ def test_spread_small_input_skips_stat_when_files_cover_cores(spark, tmp_path, m
     monkeypatch.setattr(pu.os.path, "getsize", counting)
     assert pu.spread_small_input(df) is df
     assert calls == []
+
+
+def test_spread_small_input_reads_suffixed_byte_confs(spark, tmp_path):
+    """Byte-size confs parse as Spark parses them ("64m" is 64 MiB, not the
+    default), and the split estimate uses them: one ~11 KB file over a 1k
+    maxPartitionBytes already has >= P splits, so it is not repartitioned."""
+    import log_server_spark.plan_util as pu
+
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set(keys[0], "64m")
+        spark.conf.set(keys[1], "1m")
+        assert pu._conf_bytes(spark, keys[0]) == 64 << 20
+        assert pu._conf_bytes(spark, keys[1]) == 1 << 20
+        p = str(tmp_path / "one.parquet")
+        pq.write_table(pa.table({"id": pa.array(range(2000), pa.int64())}), p)
+        df = spark.read.parquet(p)
+        spark.conf.set(keys[0], "1k")
+        spark.conf.set(keys[1], "0b")
+        assert pu.spread_small_input(df) is df
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
 
 def test_components_stop_at_fixed_point(spark, monkeypatch):

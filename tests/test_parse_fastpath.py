@@ -1,22 +1,45 @@
-"""ASCII-codegen parse path must be row-for-row identical to the Python
-reference path (parse_ref via mapInPandas) — over the full datagen corpus
+"""The Spark parse stage must be row-for-row identical to ``parse_ref``
+run in plain Python over the same pages — over the full datagen corpus
 (every planted error class + cp1251 residue) and adversarial edge pages."""
 
 import random
 
 import pyarrow as pa
 import pytest
-from pyspark.sql import functions as F
 
 from log_server_spark.datagen import gen_pages
+from log_server_spark.functions.hashing import murmur3_32
 from log_server_spark.functions.parse import parse_pages
+from log_server_spark.parse_ref import OK, parse_page
 
 KEY = ["url", "seq", "status", "table", "record_id", "ts_millis", "text", "n_bytes", "record_hash"]
 
 
+def _record_hash(data: bytes, ts: int) -> int:
+    """Scalar reference hash: murmur3(data) ^ int32((ts >> 32) ^ ts)."""
+    h = (murmur3_32(data) ^ (ts >> 32) ^ ts) & 0xFFFFFFFF
+    return h - (1 << 32) if h >= (1 << 31) else h
+
+
+def _reference_rows(df) -> list[tuple]:
+    """``parse_ref.parse_page`` over the collected pages, shaped like the
+    parse stage's KEY columns (empty table/id as "", hash only on ok rows)."""
+    out = []
+    for p in df.select("url", "html").collect():
+        html = bytes(p["html"]) if p["html"] is not None else None
+        for r in parse_page(html):
+            data = r.text.encode("utf-8")
+            out.append((
+                p["url"], r.seq, r.status, r.table or "", r.record_id or "",
+                r.ts_millis, r.text, len(data),
+                _record_hash(data, r.ts_millis or 0) if r.status == OK else None,
+            ))
+    return out
+
+
 def _rows(spark, df):
-    out = parse_pages(df, fast=True).select(*KEY).collect()
-    ref = parse_pages(df, fast=False).select(*KEY).collect()
+    out = [tuple(r) for r in parse_pages(df).select(*KEY).collect()]
+    ref = _reference_rows(df)
     k = lambda r: tuple((v if v is not None else "\0") for v in r)
     return sorted(out, key=k), sorted(ref, key=k)
 
@@ -95,7 +118,7 @@ def test_fast_path_matches_reference_on_edge_pages(spark):
     out, ref = _rows(spark, _pages_df(spark, EDGE_PAGES))
     assert len(out) == len(ref)
     for a, b in zip(out, ref):
-        assert a == b, f"\nfast: {a}\nref:  {b}"
+        assert a == b, f"\nspark: {a}\nref:   {b}"
 
 
 def test_fast_path_matches_reference_on_datagen_corpus(spark):
@@ -168,7 +191,7 @@ def test_fast_path_matches_reference_on_non_ascii_edge_pages(spark):
     out, ref = _rows(spark, _pages_df(spark, NON_ASCII_EDGE_PAGES))
     assert len(out) == len(ref)
     for a, b in zip(out, ref):
-        assert a == b, f"\nfast: {a}\nref:  {b}"
+        assert a == b, f"\nspark: {a}\nref:   {b}"
 
 
 def test_fast_path_matches_reference_on_non_ascii_fuzz(spark):
@@ -194,12 +217,12 @@ def test_fast_path_matches_reference_on_non_ascii_fuzz(spark):
 
 
 def test_fast_path_plan_is_single_arrow_crossing(spark):
-    """The fast path must be ONE MapInArrow node — no row-at-a-time Python
+    """The parse stage must be ONE MapInArrow node — no row-at-a-time Python
     (BatchEvalPython), no pandas conversion (MapInPandas), no second Python
     crossing for the hash."""
     tbl = gen_pages(seed=5, n=50)
     df = spark.createDataFrame(tbl.to_pandas())
-    plan = parse_pages(df, fast=True)._jdf.queryExecution().executedPlan().toString()
+    plan = parse_pages(df)._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan
     assert "MapInPandas" not in plan
     assert plan.count("MapInArrow") == 1

@@ -159,7 +159,7 @@ def test_torn_batch_reprocessed_idempotently(spark, warehouse, dataset):
 
 
 def test_point_lookup_get(spark, warehouse):
-    from log_server_spark.operators.lookup import get_records, get_records_json
+    from log_server_spark.operators.lookup import get_records, to_json_records
 
     wh, _ = warehouse
     records = wh.read(RECORDS)
@@ -168,7 +168,7 @@ def test_point_lookup_get(spark, warehouse):
     assert len(out) >= 1
     ts = [r["ts_millis"] for r in out]
     assert ts == sorted(ts)  # O1 ordering
-    js = get_records_json(records, sample["table"], int(sample["record_id"])).collect()
+    js = to_json_records(get_records(records, sample["table"], int(sample["record_id"]))).collect()
     assert all('"tableName"' in r["json"] for r in js)
 
 

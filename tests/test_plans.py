@@ -67,15 +67,6 @@ def test_aggregates_are_partial(spark):
     assert "Exchange" in plan
 
 
-def test_record_hash_udf_is_arrow(spark):
-    from log_server_spark.functions.hashing import with_record_hash
-
-    df = spark.createDataFrame([(b"x", 1)], "data binary, ts_millis long")
-    plan = plan_of(with_record_hash(df))
-    assert "ArrowEvalPython" in plan
-    assert "BatchEvalPython" not in plan
-
-
 def test_flagship_single_scan(spark):
     from log_server_spark.queries import q_flagship_route_aggregate
 

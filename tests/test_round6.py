@@ -69,14 +69,33 @@ def test_dedup_pipeline_single_agg_equals_operator_composition(spark):
 import pytest
 
 
+def _base_hash_mod_p(col, base: str):
+    """Column-API reference for the per-shingle MinHash base ``b`` in
+    [0, P): ``xxhash64``, or the first 15 hex chars of md5 as an integer."""
+    from log_server_spark.operators.dedup_text import MERSENNE_P
+
+    if base == "xxhash64":
+        return F.pmod(F.xxhash64(col), F.lit(MERSENNE_P))
+    hex15 = F.substring(F.md5(F.encode(col, "UTF-8")), 1, 15)
+    return F.pmod(F.conv(hex15, 16, 10).cast("long"), F.lit(MERSENNE_P))
+
+
+def _shingle_frame(df, id_col: str, text_col: str, n: int):
+    """One (id, shingle) row per distinct word n-gram of each doc."""
+    from log_server_spark.functions.text import word_ngrams
+
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.explode(F.array_distinct(word_ngrams(text_col, n))).alias("shingle"),
+    )
+
+
 @pytest.mark.parametrize("base", ["xxhash64", "md5"])
 def test_signature_frame_per_row_equals_aggregate_form(spark, base):
     """minhash_signature_frame's per-row build (round 6, both bases) ==
     the round-5 explode+groupBy build (shs compared as sorted sets)."""
     from log_server_spark.operators.dedup_text import (
         MERSENNE_P,
-        _base_hash_mod_p,
-        _shingle_frame,
         minhash_coefficients,
         minhash_signature_frame,
     )
