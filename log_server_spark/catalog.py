@@ -199,18 +199,6 @@ class Warehouse:
     def read(self, name: str) -> DataFrame:
         return read_parquet(self.spark, self.path(name))
 
-    def write(
-        self,
-        df: DataFrame,
-        name: str,
-        mode: str = "append",
-        partition_by: list[str] | None = None,
-    ) -> None:
-        w = df.write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.path(name))
-
     def write_small(
         self, rows: list[tuple], schema_ddl: str, name: str, filename: str | None = None
     ) -> None:

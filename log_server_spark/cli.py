@@ -8,7 +8,7 @@ their equivalents here:
 | ``update <db> <paths...>`` | ``update --warehouse W --pages-dir P`` | batched ingest with dedup + lineage resume |
 | ``get <db> <table> <id>`` | ``get --warehouse W --table T --id I`` | point lookup, ts-ordered, JSON output |
 | ``info <db>`` | ``info --warehouse W`` | per-(sink, day) segment stats |
-| ``archive <db>`` | ``archive --warehouse W`` | compact each sink partition's files (the gzip-segments analogue: fewer, larger, compressed files flipped to a read-optimized layout) |
+| ``archive <db>`` | ``archive --warehouse W`` | compact each (batch, sink) partition's files, mark every batch read-only, merge keys and bookkeeping (the gzip-and-mark-readonly analogue) |
 | ``convert-month/-year`` | the parse stage itself | legacy-format parse runs inside ``update`` (S3) |
 
 Run via ``python -m log_server_spark.cli <cmd> ...`` or spark-submit (see
@@ -43,7 +43,7 @@ def cmd_update(args) -> int:
     results = run_pipeline(
         spark, args.pages_dir, args.warehouse,
         batch_files=args.batch_files, salt=args.salt,
-        source_format=getattr(args, "format", "pages"),
+        source_format=args.format,
     )
     for r in results:
         print(f"{r.batch}: added={r.added} duplicates={r.duplicates} errors={r.errors}")
@@ -98,10 +98,13 @@ def cmd_info(args) -> int:
 
 
 def cmd_archive(args) -> int:
-    """Compact the records table: rewrite each (batch, sink) partition's
-    small files into ~target-size files. The parquet-local stand-in for
-    Iceberg ``rewrite_data_files`` / the reference's gzip-and-mark-readonly
-    (BigStorage.scala:338-350)."""
+    """Archive the whole warehouse, the reference's one archive mode (gzip
+    every segment and mark it read-only, BigStorage.scala:338-350): rewrite
+    each (batch, sink) records partition into one zstd-6 file, mark every
+    batch read-only, merge the keys to one file per (day, bucket) and the
+    bookkeeping to one file per table. ``--unmark`` makes batches writable
+    again (their keys partitions are rebuilt) and does nothing else. The
+    records layout is unchanged, so later ingests append to it."""
     import glob
     import shutil
 
@@ -117,7 +120,7 @@ def cmd_archive(args) -> int:
 
     spark, owned = _session(args.master)
     wh = Warehouse(args.warehouse, spark)
-    if getattr(args, "unmark", None) is not None:
+    if args.unmark is not None:
         with wh.lock():
             ids = args.unmark or sorted(wh.archived_batches())
             left = wh.mark_archived(ids, unmark=True)
@@ -148,7 +151,7 @@ def cmd_archive(args) -> int:
         (
             df.repartition(F.col("batch"), F.col("sink"))
             .write.mode("overwrite")
-            .partitionBy("batch", "sink", *(["day"] if "day" in df.columns and args.by_day else []))
+            .partitionBy("batch", "sink")
             .parquet(tmp_dir)
         )
         rows_after = read_parquet(spark, tmp_dir).count()
@@ -165,21 +168,17 @@ def cmd_archive(args) -> int:
         # compacted layout is history: flip every batch read-only so a later
         # update with remapped ids fails loudly instead of rewriting it
         # (the reference's archive gzips segments AND marks them readOnly)
-        archived: list[str] = []
-        keys_stats = book_stats = None
-        if not getattr(args, "no_mark", False):
-            archived = sorted(
-                os.path.basename(d).split("=", 1)[1]
-                for d in glob.glob(os.path.join(records_dir, "batch=*"))
-            )
-            wh.mark_archived(archived)
-            # archive EVERYTHING, index files included (BigStorage.scala:
-            # 338-350): merge the now-read-only batches' keys partitions to
-            # one file per (day, bucket) and their bookkeeping to one file
-            # per table. Skipped under --no-mark: merging erases per-batch
-            # attribution, which is only sound for read-only batches.
-            keys_stats = rebuild_keys(wh)
-            book_stats = compact_bookkeeping(wh, set(archived))
+        archived = sorted(
+            os.path.basename(d).split("=", 1)[1]
+            for d in glob.glob(os.path.join(records_dir, "batch=*"))
+        )
+        wh.mark_archived(archived)
+        # archive EVERYTHING, index files included (BigStorage.scala:
+        # 338-350): merge the now-read-only batches' keys partitions to one
+        # file per (day, bucket) and their bookkeeping to one file per table
+        # (merging erases per-batch attribution, sound for read-only batches)
+        keys_stats = rebuild_keys(wh)
+        book_stats = compact_bookkeeping(wh, set(archived))
     n_after = len(glob.glob(os.path.join(records_dir, "**", "*.parquet"), recursive=True))
     print(
         json.dumps(
@@ -228,13 +227,10 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--warehouse", required=True)
     p.set_defaults(fn=cmd_info)
 
-    p = sub.add_parser("archive", help="compact sink files (gzip-segments analogue)")
-    p.add_argument("--warehouse", required=True)
-    p.add_argument("--by-day", action="store_true")
-    p.add_argument(
-        "--no-mark", action="store_true",
-        help="skip marking compacted batches read-only",
+    p = sub.add_parser(
+        "archive", help="compact records, mark batches read-only (gzip-segments analogue)"
     )
+    p.add_argument("--warehouse", required=True)
     p.add_argument(
         "--unmark", nargs="*", metavar="BATCH",
         help="make batches writable again (no ids = all) and exit",

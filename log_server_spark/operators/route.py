@@ -5,8 +5,8 @@ NewLogReader.scala:78-86, OldLogReader.scala:38,51): where the reference
 throws or silently skips, we assign every row exactly one sink.
 
 Scale note: the fan-out is written as ONE pass — a ``sink`` column plus a
-single partitioned write (``partitionBy('sink', 'day')``) — not N filtered
-re-scans. One shuffle-free write produces every sink directory; Iceberg's
+single partitioned write (``partitionBy('batch', 'sink')``, the one records
+layout) — not N filtered re-scans. One shuffle-free write produces every sink directory; Iceberg's
 equivalent is a single append with a partition spec.
 """
 

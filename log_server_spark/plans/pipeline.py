@@ -37,8 +37,8 @@ never delete the immutable input, we record completion):
   batch — the directory dance is the parquet-local stand-in.
 
 Scale properties:
-- one scan per batch; the fan-out is a single ``partitionBy(sink, day)``
-  write, not N filtered re-scans;
+- one scan per batch; the fan-out is a single ``partitionBy(batch, sink)``
+  write, not N filtered re-scans. This is the only records layout;
 - cross-batch dedup anti-joins the ``records_keys`` projection, pruned by
   the batch's record-ts day range via PARTITION pruning (day= directories
   derived from ts_millis — the same column the predicate filters) plus
@@ -53,11 +53,12 @@ Scale properties:
   for a steady update of ~1k pages, AQE shuffle-map jobs included, and
   none of them is planning or bookkeeping: every parquet read pins its
   schema from one footer read driver-side (``catalog.read_parquet``, no
-  schema-inference job), and lineage plus the partials' batch ids are read
-  with pyarrow;
+  schema-inference job), and lineage plus the newest partials file are
+  read with pyarrow;
 - aggregates refresh by MERGING per-batch partials (counts/min/max/sums and
   HLL sketch registers via ``hll_union_agg``) — O(batches x sinks x days)
-  rows, never a rescan of the records table (ROADMAP #2);
+  rows, never a rescan of the records table. The partials are the only
+  aggregate source;
 - a salt column spreads the hot-domain sink across ``salt`` reducers before
   the write (north_rule skew requirement).
 """
@@ -627,23 +628,18 @@ def _sink_salts(wh: Warehouse, salt: int) -> dict[str, int] | None:
     return out
 
 
-def _salt_expr(
-    wh: Warehouse, salt: int, partition_cols: tuple[str, ...],
-    input_bytes: int | None = None,
-):
-    """Salt modulus as a Column: per-sink adaptive when history exists and
-    the layout partitions by sink, else a uniform salt SIZED TO THE BATCH
-    VOLUME — `salt` is the ceiling (skew defense at scale), but a first
-    batch small enough that even its hottest sink (assume <= ~40% of the
-    bytes) fits one target-size file gets salt 1: fewer, bigger files, and
-    every downstream scan of the batch partition opens salt-times fewer
-    footers. At 100 TB the estimate saturates at the ceiling immediately."""
-    salts = _sink_salts(wh, salt) if "sink" in partition_cols else None
+def _salt_expr(wh: Warehouse, salt: int, input_bytes: int):
+    """Salt modulus as a Column: per-sink adaptive when history exists,
+    else a uniform salt SIZED TO THE BATCH VOLUME — `salt` is the ceiling
+    (skew defense at scale), but a first batch small enough that even its
+    hottest sink (assume <= ~40% of the bytes) fits one target-size file
+    gets salt 1: fewer, bigger files, and every downstream scan of the batch
+    partition opens salt-times fewer footers. At 100 TB the estimate
+    saturates at the ceiling immediately."""
+    salts = _sink_salts(wh, salt)
     if not salts:
-        if input_bytes is not None:
-            need = -(-int(input_bytes * 0.4) // TARGET_FILE_BYTES)
-            return F.lit(max(1, min(salt, need)))
-        return F.lit(salt)
+        need = -(-int(input_bytes * 0.4) // TARGET_FILE_BYTES)
+        return F.lit(max(1, min(salt, need)))
     expr = F.lit(salt)  # unseen sinks fall back to the uniform salt
     for s, v in sorted(salts.items()):
         expr = F.when(F.col("sink") == s, F.lit(v)).otherwise(expr)
@@ -658,7 +654,6 @@ def run_batch(
     lang_lookup: DataFrame,
     domain_lookup: DataFrame,
     salt: int = 8,
-    partition_cols: tuple[str, ...] = ("sink",),
     source_format: str = "pages",
 ) -> BatchResult:
     """Ingest one batch. Wrapper: the inner body tunes two session-global
@@ -670,7 +665,7 @@ def run_batch(
     try:
         return _run_batch_inner(
             spark, wh, batch_id, files, lang_lookup, domain_lookup,
-            salt=salt, partition_cols=partition_cols, source_format=source_format,
+            salt=salt, source_format=source_format,
         )
     finally:
         for k, v in saved.items():
@@ -688,7 +683,6 @@ def _run_batch_inner(
     lang_lookup: DataFrame,
     domain_lookup: DataFrame,
     salt: int = 8,
-    partition_cols: tuple[str, ...] = ("sink",),
     source_format: str = "pages",
 ) -> BatchResult:
     # torn-write recovery FIRST: a batch dir without a lineage row is a
@@ -781,44 +775,47 @@ def _run_batch_inner(
     # hottest): the hot sink gets proportionally more reducers, cold sinks
     # collapse to one file, total reducer groups stay ~|sinks| * salt.
     out = routed.repartition(
-        *[F.col(c) for c in partition_cols],
-        F.pmod(F.hash("url"), _salt_expr(wh, salt, partition_cols, total_bytes)),
+        F.col("sink"), F.pmod(F.hash("url"), _salt_expr(wh, salt, total_bytes))
     )
-    out.write.mode("append").partitionBy("batch", *partition_cols).parquet(wh.path(RECORDS))
+    out.write.mode("append").partitionBy("batch", "sink").parquet(wh.path(RECORDS))
 
     # read the just-written batch partition back (small, column-pruned):
     # (a) append its dedup keys to the day-partitioned keys table — the
     #     .hash index file of this "segment" (HeaderStorage.scala:283-288);
     # (b) fold its partial aggregates (mergeable: sums/min/max + HLL sketch
     #     registers) into metrics_partials for incremental refresh.
+    # A zero-ROUTED batch (no rows, or every parseable record a cross-batch
+    # duplicate and no error rows) wrote nothing: it skips both, adds 0 with
+    # 0 errors, and still commits lineage below so resume skips it.
     batch_dir = os.path.join(wh.path(RECORDS), f"batch={batch_id}")
-    if not os.path.isdir(batch_dir):
-        # zero-ROUTED batch: nothing written. Reachable only when every
-        # parseable record was a cross-batch duplicate AND no error rows
-        # existed — so duplicates = n_ok, errors = 0. Still commit lineage
-        # so resume skips it.
-        parsed.unpersist()
-        wh.write_small(
-            [(batch_id, n_pages, 0, int(n_ok), 0, time.time())],
-            INGEST_SCHEMA,
-            METRICS_INGEST,
-            filename=batch_id,
-        )
-        wh.write_small(
-            [(batch_id, u, "committed", n_pages, time.time()) for u in files],
-            LINEAGE_SCHEMA,
-            LINEAGE,
-            filename=batch_id,
-        )
-        return BatchResult(batch_id, files, 0, int(n_ok), 0)
-
-    # reading the observation on a zero-row write job fails JVM-side (no
-    # metrics row) — only reached here when the batch wrote data
-    got = obs.get
-    added = int(got["n_added"] or 0)
-    n_errors = int(got["n_routed"] or 0) - added
+    added = n_errors = 0
+    if os.path.isdir(batch_dir):
+        # reading the observation on a zero-row write job fails JVM-side (no
+        # metrics row) — only read when the batch wrote data
+        got = obs.get
+        added = int(got["n_added"] or 0)
+        n_errors = int(got["n_routed"] or 0) - added
+        _write_batch_index(spark, wh, batch_id, batch_dir)
+    parsed.unpersist()
     # covers in-batch AND cross-batch dups — the reference counts both
     n_dups = int(n_ok) - added
+    wh.write_small(
+        [(batch_id, n_pages, added, n_dups, n_errors, time.time())],
+        INGEST_SCHEMA,
+        METRICS_INGEST,
+        filename=batch_id,
+    )
+    wh.write_small(
+        [(batch_id, u, "committed", n_pages, time.time()) for u in files],
+        LINEAGE_SCHEMA,
+        LINEAGE,
+        filename=batch_id,
+    )
+    return BatchResult(batch_id, files, added, n_dups, n_errors)
+
+
+def _write_batch_index(spark: SparkSession, wh: Warehouse, batch_id: str, batch_dir: str) -> None:
+    """Keys and partial aggregates of the batch partition just written."""
     # ONE scan of the batch partition feeds BOTH readbacks: project to the
     # 9 thin columns they jointly need (never the wide text) and persist —
     # without this, keys and partials each re-open every file in the
@@ -854,7 +851,7 @@ def _run_batch_inner(
             .groupBy("sink", "window_start")
             .agg(
                 F.count("*").alias("n_rows"),
-                F.sum(is_ok).alias("n_ok"),
+                F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("n_ok"),
                 F.min("ts_millis").alias("min_ts"),
                 F.max("ts_millis").alias("max_ts"),
                 F.sum("n_bytes").alias("total_bytes"),
@@ -873,7 +870,6 @@ def _run_batch_inner(
         f_partials = pool.submit(_collect_partials)
         f_keys.result()
         partials = f_partials.result()
-    parsed.unpersist()
     written.unpersist()
     wh.write_small(
         [
@@ -885,80 +881,46 @@ def _run_batch_inner(
         METRICS_PARTIALS,
         filename=batch_id,
     )
-    wh.write_small(
-        [(batch_id, n_pages, added, n_dups, n_errors, time.time())],
-        INGEST_SCHEMA,
-        METRICS_INGEST,
-        filename=batch_id,
-    )
-    wh.write_small(
-        [(batch_id, u, "committed", n_pages, time.time()) for u in files],
-        LINEAGE_SCHEMA,
-        LINEAGE,
-        filename=batch_id,
-    )
-    return BatchResult(batch_id, files, added, n_dups, n_errors)
 
 
-def refresh_aggregates(spark: SparkSession, wh: Warehouse, exact: bool = False) -> None:
-    """Rebuild the per-sink + windowed aggregate tables (A1-A3).
+def refresh_aggregates(spark: SparkSession, wh: Warehouse) -> None:
+    """Rebuild the per-sink + windowed aggregate tables (A1-A3) by MERGING
+    the per-batch partials — sums/min/max add up, distinct-url sketches
+    merge via ``hll_union_agg`` — reading only O(batches x sinks x days)
+    bookkeeping rows, never the records table. Per-sink distinct-key count
+    equals the per-sink ok-row count by the dedup invariant (every
+    committed ok row holds a globally unique key).
 
-    Default path MERGES the per-batch partials — sums/min/max add up,
-    distinct-url sketches merge via ``hll_union_agg`` — reading only
-    O(batches x sinks x days) bookkeeping rows. Per-sink distinct-key
-    count equals the per-sink ok-row count by the dedup invariant (every
-    committed ok row holds a globally unique key). ``exact=True`` is the
-    slow path: one GROUPING SETS rescan of the records table with exact
-    countDistinct (kept for audits; it is what round 1 always did).
+    The partials are the one aggregate source: every committed batch that
+    wrote records wrote its partials before its lineage, and a warehouse
+    from before the partials table also predates the keys marker, so
+    ``_keys_buckets`` refuses it.
     """
-    use_exact = exact or not wh.exists(METRICS_PARTIALS)
-    if not use_exact:
-        # merged results are only complete if EVERY committed batch with
-        # data contributed partials — a legacy (round-1) warehouse has
-        # committed batches that predate the partials table; merging would
-        # silently drop their rows from the published aggregates. The batch
-        # ids are O(batches) tiny rows: read them driver-side, no Spark job
-        import pyarrow.parquet as pq
-
-        have = set(pq.read_table(wh.path(METRICS_PARTIALS), columns=["batch"])["batch"].to_pylist())
-        with_data = {
-            os.path.basename(d).split("=", 1)[1]
-            for d in glob.glob(os.path.join(wh.path(RECORDS), "batch=*"))
-        }
-        if (set(_committed_batches(wh)) & with_data) - have:
-            use_exact = True
-    if use_exact:
-        from log_server_spark.operators.aggregate import combined_stats
-
-        _status, sink_rows, windowed_rows = combined_stats(wh.read(RECORDS))
-    else:
-        # ONE grouping-sets merge job over the tiny partials table yields
-        # both the per-sink and the per-(window, sink) rollups
-        p = wh.read(METRICS_PARTIALS)
-        rows = (
-            p.groupingSets([["sink"], ["window_start", "sink"]], "sink", "window_start")
-            .agg(
-                F.sum("n_rows").alias("n_rows"),
-                F.sum("n_ok").alias("n_keys"),
-                F.hll_sketch_estimate(F.hll_union_agg("url_sketch")).alias("n_urls_approx"),
-                F.min("min_ts").alias("min_ts"),
-                F.max("max_ts").alias("max_ts"),
-                F.sum("total_bytes").alias("total_bytes"),
-                F.grouping_id().alias("gid"),
-            )
-            .collect()
+    # ONE grouping-sets merge job over the tiny partials table yields both
+    # the per-sink and the per-(window, sink) rollups
+    rows = (
+        wh.read(METRICS_PARTIALS)
+        .groupingSets([["sink"], ["window_start", "sink"]], "sink", "window_start")
+        .agg(
+            F.sum("n_rows").alias("n_rows"),
+            F.sum("n_ok").alias("n_keys"),
+            F.hll_sketch_estimate(F.hll_union_agg("url_sketch")).alias("n_urls_approx"),
+            F.min("min_ts").alias("min_ts"),
+            F.max("max_ts").alias("max_ts"),
+            F.sum("total_bytes").alias("total_bytes"),
+            F.grouping_id().alias("gid"),
         )
-        # gid bits follow (sink, window_start): 0b01 = window aggregated out
-        sink_rows = [r for r in rows if r["gid"] == 0b01]
-        windowed_rows = [r for r in rows if r["gid"] == 0b00]
+        .collect()
+    )
+    # gid bits follow (sink, window_start): 0b01 = window aggregated out
     sink_out = [
         (r["sink"], r["n_rows"], r["n_keys"], r["n_urls_approx"],
          r["min_ts"], r["max_ts"], r["total_bytes"])
-        for r in sink_rows
+        for r in rows if r["gid"] == 0b01
     ]
     win_out = [
         (r["window_start"], r["sink"], r["n_rows"], r["n_urls_approx"])
-        for r in windowed_rows
+        for r in rows if r["gid"] == 0b00
     ]
     for name in (METRICS_SINK, METRICS_WINDOWED):
         wh.drop(name)
@@ -983,15 +945,10 @@ def run_pipeline(
     salt: int = 8,
     resume: bool = True,
     aggregates: bool = True,
-    partition_cols: tuple[str, ...] = ("sink",),
     max_batches: int | None = None,
     lock_timeout: float = 60.0,
     source_format: str = "pages",
 ) -> list[BatchResult]:
-    """``partition_cols`` is the sink-table layout. Default ``("sink",)``;
-    add ``"day"`` for date-pruned layouts when per-partition volume is large
-    enough that dir_count * salt files stay near the target file size (the
-    right call at the 100 TB design point, wasteful below ~10 GB/day)."""
     wh = Warehouse(warehouse_root, spark)
     base = os.path.dirname(pages_dir.rstrip("/"))
     # lookup dims are optional (a `.saved` migration dir has none): a
@@ -1051,11 +1008,10 @@ def run_pipeline(
             results.append(
                 run_batch(
                     spark, wh, batch_id, files, lang_lookup, domain_lookup,
-                    salt=salt, partition_cols=partition_cols,
-                    source_format=source_format,
+                    salt=salt, source_format=source_format,
                 )
             )
-        if aggregates and (results or wh.exists(RECORDS)):
+        if aggregates and wh.exists(METRICS_PARTIALS):
             refresh_aggregates(spark, wh)
     return results
 

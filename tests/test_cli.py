@@ -1,9 +1,11 @@
 """CLI parity test: update -> get -> info -> archive -> get (identical),
 mirroring the reference's end-to-end integration golden test
-(LogServerSpecInt.scala:19-106: update, get, archive, get-after-archive)."""
+(LogServerSpecInt.scala:19-106: update, get, archive, get-after-archive),
+and the lifecycle that keeps ingesting into an archived warehouse."""
 
 import json
 import os
+import shutil
 
 import pytest
 
@@ -61,3 +63,69 @@ def test_archive_preserves_get(spark, env, capsys):
     cli_main(["get", "--warehouse", env, "--table", before_sample["table"], "--id", before_sample["record_id"]])
     after = [json.loads(line) for line in capsys.readouterr().out.strip().splitlines()]
     assert after == before
+
+
+def test_archive_then_keep_ingesting(spark, tmp_path_factory, capsys):
+    """update 2 of 4 units, archive, update the other 2: the new batches
+    append under new, writable ids, and get, info and the published
+    aggregates read the whole table — the same ok records as one
+    un-archived run over all 4 units."""
+    from pyspark.sql import functions as F
+
+    from log_server_spark.catalog import Warehouse
+    from log_server_spark.operators.dedup import DEDUP_KEY
+    from log_server_spark.plans.pipeline import METRICS_SINK, RECORDS, run_pipeline
+
+    d = tmp_path_factory.mktemp("cli_lifecycle")
+    data = str(d / "data")
+    write_dataset(data, seed=5, n=400, num_files=4)
+    units = sorted(os.listdir(os.path.join(data, "pages")))
+    assert len(units) == 4
+    arrivals = os.path.join(data, "arrivals")  # next to the lookup dims
+    os.makedirs(arrivals)
+    wh_dir = str(d / "wh")
+    wh = Warehouse(wh_dir, spark)
+
+    def update(names):
+        for name in names:
+            shutil.copy(os.path.join(data, "pages", name), arrivals)
+        argv = ["update", "--warehouse", wh_dir, "--pages-dir", arrivals, "--batch-files", "1"]
+        assert cli_main(argv) == 0
+        return [line.split(":")[0] for line in capsys.readouterr().out.strip().splitlines()]
+
+    assert update(units[:2]) == ["b00000", "b00001"]
+    assert cli_main(["archive", "--warehouse", wh_dir]) == 0
+    assert json.loads(capsys.readouterr().out)["archived"] == ["b00000", "b00001"]
+    assert update(units[2:]) == ["b00002", "b00003"]
+    assert wh.archived_batches() == {"b00000", "b00001"}
+
+    records = wh.read(RECORDS)
+    n = records.count()
+    assert {r["batch"] for r in records.select("batch").distinct().collect()} == {
+        f"b{i:05d}" for i in range(4)
+    }
+    for batch in ("b00000", "b00003"):  # one archived, one appended after
+        s = (
+            records.filter(
+                (F.col("batch") == batch) & (F.col("status") == "ok") & (F.col("record_id") != "")
+            )
+            .limit(1).collect()[0]
+        )
+        cli_main(["get", "--warehouse", wh_dir, "--table", s["table"], "--id", s["record_id"]])
+        got = capsys.readouterr().out.strip().splitlines()
+        want = records.filter(
+            (F.col("table") == s["table"]) & (F.col("record_id") == s["record_id"])
+        ).count()
+        assert len(got) == want > 0
+    cli_main(["info", "--warehouse", wh_dir])
+    assert int(capsys.readouterr().out.strip().splitlines()[-1].split(":")[1]) == n
+    assert wh.read(METRICS_SINK).agg(F.sum("n_rows")).collect()[0][0] == n
+
+    ref_dir = str(d / "ref_wh")
+    run_pipeline(spark, os.path.join(data, "pages"), ref_dir, batch_files=1)
+
+    def ok_keys(root):
+        ok = Warehouse(root, spark).read(RECORDS).filter(F.col("status") == "ok")
+        return sorted(tuple(r) for r in ok.select(*DEDUP_KEY).collect())
+
+    assert ok_keys(wh_dir) == ok_keys(ref_dir)

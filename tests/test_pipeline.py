@@ -7,6 +7,7 @@ Mirrors the reference's integration golden test structure
 import os
 import shutil
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -148,7 +149,7 @@ def test_torn_batch_reprocessed_idempotently(spark, warehouse, dataset):
     keep = lineage.filter(F.col("batch") != last).collect()
     wh.drop(LINEAGE)
     if keep:
-        wh.write(spark.createDataFrame(keep, lineage.schema), LINEAGE, mode="overwrite")
+        spark.createDataFrame(keep, lineage.schema).write.parquet(wh.path(LINEAGE))
     results = run_pipeline(spark, os.path.join(dataset, "pages"), wh.root, batch_files=2)
     assert len(results) == 1 and results[0].batch == last
     records_after = sorted(
@@ -156,6 +157,25 @@ def test_torn_batch_reprocessed_idempotently(spark, warehouse, dataset):
         for r in wh.read(RECORDS).collect()
     )
     assert records_after == records_before
+
+
+def test_update_with_zero_pages(spark, tmp_path):
+    """A unit with no pages commits its batch with zero counts and writes no
+    records (so no partials: there is nothing to aggregate); a rerun has
+    nothing to do."""
+    pages = tmp_path / "pages"
+    pages.mkdir()
+    pq.write_table(gen_pages(seed=SEED, n=1).slice(0, 0), str(pages / "part-00000.parquet"))
+    wh_dir = str(tmp_path / "wh")
+    results = run_pipeline(spark, str(pages), wh_dir, batch_files=1)
+    assert [(r.batch, r.added, r.duplicates, r.errors) for r in results] == [
+        ("b00000", 0, 0, 0)
+    ]
+    wh = Warehouse(wh_dir, spark)
+    assert not wh.exists(RECORDS)
+    assert [(r["batch"], r["n_pages"]) for r in wh.read(LINEAGE).collect()] == [("b00000", 0)]
+    assert [tuple(r)[:5] for r in wh.read(METRICS_INGEST).collect()] == [("b00000", 0, 0, 0, 0)]
+    assert run_pipeline(spark, str(pages), wh_dir, batch_files=1) == []
 
 
 def test_point_lookup_get(spark, warehouse):

@@ -22,7 +22,6 @@ from log_server_spark.operators.aggregate import info
 from log_server_spark.operators.lookup import get_records
 from log_server_spark.plans.pipeline import RECORDS, run_pipeline
 
-LAYOUTS = [("sink",), ("sink", "day")]
 TABLES = [
     "records", "records_keys", "lineage", "metrics_ingest",
     "metrics_partials", "metrics_sink_stats", "metrics_windowed",
@@ -36,19 +35,11 @@ def dataset(tmp_path_factory):
     return d
 
 
-@pytest.fixture(scope="module", params=LAYOUTS, ids=lambda p: "_".join(p))
-def layout(request):
-    return request.param
-
-
 @pytest.fixture(scope="module")
-def warehouse(spark, dataset, layout, tmp_path_factory):
+def warehouse(spark, dataset, tmp_path_factory):
     """A 2-batch warehouse; the dataset's third unit is left unprocessed."""
     root = str(tmp_path_factory.mktemp("read_path_wh"))
-    run_pipeline(
-        spark, os.path.join(dataset, "pages"), root, batch_files=1,
-        partition_cols=layout, max_batches=2,
-    )
+    run_pipeline(spark, os.path.join(dataset, "pages"), root, batch_files=1, max_batches=2)
     return Warehouse(root, spark)
 
 
@@ -158,14 +149,14 @@ def test_get_and_info_job_budget(spark, warehouse):
     assert sum(r["records"] for r in out) == warehouse.read(RECORDS).count()
 
 
-def test_steady_batch_has_no_schema_inference_job(spark, dataset, layout, warehouse):
+def test_steady_batch_has_no_schema_inference_job(spark, dataset, warehouse):
     root = warehouse.root + "_steady"
     shutil.copytree(warehouse.root, root)
     got = []
     n, inference = _count_jobs(
         spark,
         lambda: got.extend(run_pipeline(
-            spark, os.path.join(dataset, "pages"), root, batch_files=1, partition_cols=layout,
+            spark, os.path.join(dataset, "pages"), root, batch_files=1,
         )),
     )
     assert [r.batch for r in got] == ["b00002"]

@@ -1,6 +1,6 @@
 """Round-3 regressions: keys-day soundness, resume=False bookkeeping drop,
-merged-row sweep alongside per-batch files, n_keys path agreement, and
-crash-recoverable bookkeeping rewrites (ADVICE.md round 2, all five items)."""
+merged-row sweep alongside per-batch files, and crash-recoverable
+bookkeeping rewrites (ADVICE.md round 2)."""
 
 import glob
 import os
@@ -18,11 +18,9 @@ from log_server_spark.plans.pipeline import (
     LINEAGE,
     METRICS_INGEST,
     METRICS_PARTIALS,
-    METRICS_SINK,
     RECORDS,
     RECORDS_KEYS,
     _drop_batch,
-    refresh_aggregates,
     run_pipeline,
 )
 
@@ -151,23 +149,6 @@ def test_drop_batch_sweeps_legacy_rows_even_with_per_batch_file(spark, dataset, 
     assert r2 == []
     units = {r["unit"] for r in wh.read(LINEAGE).collect()}
     assert "/nonexistent/poison.parquet" not in units
-
-
-@pytest.mark.slow
-def test_exact_and_merged_refresh_agree_on_n_keys(spark, dataset, tmp_path_factory):
-    """ADVICE #4: exact (GROUPING SETS rescan) and merged (partials) refresh
-    paths must publish the SAME n_keys per sink — including the error sink,
-    whose rows bypass dedup."""
-    pages = os.path.join(dataset, "pages")
-    wh_dir = str(tmp_path_factory.mktemp("r3_nkeys_wh"))
-    run_pipeline(spark, pages, wh_dir, batch_files=2)
-    wh = Warehouse(wh_dir, spark)
-    refresh_aggregates(spark, wh, exact=True)
-    exact = {r["sink"]: r["n_keys"] for r in wh.read(METRICS_SINK).collect()}
-    refresh_aggregates(spark, wh, exact=False)
-    merged = {r["sink"]: r["n_keys"] for r in wh.read(METRICS_SINK).collect()}
-    assert exact == merged
-    assert "error" in exact  # fixture plants malformed pages
 
 
 @pytest.mark.slow

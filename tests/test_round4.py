@@ -1,6 +1,7 @@
 """Round-4 regressions: VERDICT r3 items #3/#6/#7 and the ADVICE r3 fixes
 (saved-format truncation errors, sliced-array _ascii_mask, per-user native
-cache), plus the one-keys-layout refusal and the env-switch guard."""
+cache), plus the one-keys-layout refusal and the env-switch and CLI-flag
+guards."""
 
 import glob
 import os
@@ -91,6 +92,39 @@ def test_lss_env_switches_are_the_justified_set():
         m.group(1) for f in pkg.rglob("*.py") for m in read.finditer(f.read_text())
     }
     assert found == {"LSS_KEYS_BUCKETS", "LSS_NATIVE_DIR", "LSS_CHECKPOINT_DIR"}
+
+
+def test_cli_flags_are_the_justified_set(monkeypatch):
+    """Each CLI command's options, read off the parser ``cli.main`` builds:
+    a new flag is a second mode of a command, so it is added here only
+    together with the reason it is needed."""
+    import argparse
+
+    from log_server_spark import cli
+
+    built = []
+
+    def capture(self, args=None, namespace=None):
+        built.append(self)
+        raise SystemExit(0)
+
+    monkeypatch.setattr(argparse.ArgumentParser, "parse_args", capture)
+    with pytest.raises(SystemExit):
+        cli.main([])
+    (sub,) = [a for a in built[0]._actions if isinstance(a, argparse._SubParsersAction)]
+    flags = {
+        cmd: {
+            o for a in p._actions if not isinstance(a, argparse._HelpAction)
+            for o in a.option_strings
+        }
+        for cmd, p in sub.choices.items()
+    }
+    assert flags == {
+        "update": {"--warehouse", "--pages-dir", "--batch-files", "--salt", "--format"},
+        "get": {"--warehouse", "--table", "--id"},
+        "info": {"--warehouse"},
+        "archive": {"--warehouse", "--unmark"},
+    }
 
 
 # ---------------------------------------------------------------------------
