@@ -58,7 +58,9 @@ def cmd_get(args) -> int:
     """Point lookup; repeat --warehouse for the reference's multi-year
     fan-out (GetCommand.scala:29-36: years.map(get).reduce(++) — a bag
     union across databases, results globally ts-sorted): the records
-    frames are unioned first, so the one lookup sorts the whole answer."""
+    frames are unioned first, so the one lookup sorts the whole answer. A
+    warehouse without a records table (every committed batch routed zero
+    rows) adds nothing."""
     from functools import reduce
 
     from log_server_spark.catalog import Warehouse
@@ -66,12 +68,12 @@ def cmd_get(args) -> int:
     from log_server_spark.plans.pipeline import RECORDS
 
     spark, owned = _session(args.master)
-    records = reduce(
-        lambda a, b: a.unionByName(b, allowMissingColumns=True),
-        [Warehouse(w, spark).read(RECORDS) for w in args.warehouse],
-    )
-    for row in to_json_records(get_records(records, args.table, args.id)).collect():
-        print(row["json"])
+    whs = (Warehouse(w, spark) for w in args.warehouse)
+    frames = [wh.read(RECORDS) for wh in whs if wh.exists(RECORDS)]
+    if frames:
+        records = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+        for row in to_json_records(get_records(records, args.table, args.id)).collect():
+            print(row["json"])
     if owned:
         spark.stop()
     return 0
@@ -83,9 +85,11 @@ def cmd_info(args) -> int:
     from log_server_spark.plans.pipeline import RECORDS
 
     spark, owned = _session(args.master)
-    records = Warehouse(args.warehouse, spark).read(RECORDS)
+    wh = Warehouse(args.warehouse, spark)
     total = 0
-    for row in info(records).collect():
+    # no records table (every committed batch routed zero rows): no segments
+    rows = info(wh.read(RECORDS)).collect() if wh.exists(RECORDS) else []
+    for row in rows:
         total += row["records"]
         print(
             f"{row['sink']}/{row['day']}: records={row['records']} "
@@ -113,6 +117,7 @@ def cmd_archive(args) -> int:
     from log_server_spark.catalog import Warehouse, read_parquet
     from log_server_spark.plans.pipeline import (
         RECORDS,
+        ZSTD_LEVEL,
         compact_bookkeeping,
         rebuild_keys,
         sweep_torn_batches,
@@ -133,24 +138,31 @@ def cmd_archive(args) -> int:
         return 0
     records_dir = wh.path(RECORDS)
     tmp_dir = records_dir + ".compact"
-    # archive is where compression strength belongs (the reference keeps
-    # live segments uncompressed and gzips at archive time,
-    # BigStorage.scala:338-350): the ingest write uses zstd level 1 for
-    # wall speed, the compaction rewrite pays for density once
-    spark.sparkContext._jsc.hadoopConfiguration().set("parquet.compression.codec.zstd.level", "6")
     with wh.lock():
         # sweep TORN batches FIRST: a crashed run's lineage-less batch dir
         # must never be compacted into batch=archived or marked read-only —
         # its orphaned keys would anti-join the reprocessed records away
         # while the torn records themselves get deleted (data loss)
         swept = sweep_torn_batches(wh)
+        if not wh.exists(RECORDS):
+            # lineage but no records (every committed batch routed zero
+            # rows): nothing to compact, mark or merge
+            print(json.dumps({"archived": [], "swept_torn": swept}))
+            if owned:
+                spark.stop()
+            return 0
         shutil.rmtree(tmp_dir, ignore_errors=True)
         df = wh.read(RECORDS)
         n_before = len(glob.glob(os.path.join(records_dir, "**", "*.parquet"), recursive=True))
         rows_before = df.count()
+        # archive is where compression strength belongs (the reference keeps
+        # live segments uncompressed and gzips at archive time,
+        # BigStorage.scala:338-350): the ingest write uses zstd level 1 for
+        # wall speed, the compaction rewrite pays for density once
         (
             df.repartition(F.col("batch"), F.col("sink"))
             .write.mode("overwrite")
+            .option(ZSTD_LEVEL, "6")
             .partitionBy("batch", "sink")
             .parquet(tmp_dir)
         )

@@ -85,6 +85,7 @@ from log_server_spark.functions.parse import parse_pages
 from log_server_spark.operators.dedup import DEDUP_KEY, anti_join_committed, split_duplicates
 from log_server_spark.operators.enrich import enrich
 from log_server_spark.operators.route import with_sink
+from log_server_spark.sources.saved_format import SAVED_GLOB, read_saved, saved_records_projection
 
 RECORDS = "records"
 RECORDS_KEYS = "records_keys"
@@ -103,6 +104,10 @@ PARTIALS_SCHEMA = (
     "min_ts long, max_ts long, total_bytes long, url_sketch binary"
 )
 
+# parquet writer option (per write, or per table via OPTIONS) for the zstd
+# level: 1 on the ingest writes, 6 on the archive rewrites
+ZSTD_LEVEL = "parquet.compression.codec.zstd.level"
+
 # Target output-file size the salt aims for (pre-compression record bytes
 # roughly track input page bytes at this schema); salting past the point
 # where each shard holds ~this much data buys no skew protection and costs
@@ -120,7 +125,7 @@ class BatchResult:
 
 
 def _list_units(pages_dir: str, source_format: str = "pages") -> list[str]:
-    pat = "*.parquet" if source_format == "pages" else "*.saved*"
+    pat = "*.parquet" if source_format == "pages" else SAVED_GLOB
     units = sorted(glob.glob(os.path.join(pages_dir, pat)))
     if not units:
         raise FileNotFoundError(f"no {pat} files under {pages_dir}")
@@ -130,8 +135,6 @@ def _list_units(pages_dir: str, source_format: str = "pages") -> list[str]:
 def _saved_records(spark: SparkSession, files: list[str]) -> DataFrame:
     """Wire-format (`.saved`) units -> the parsed-records shape (NewLogReader
     semantics; see ``saved_records_projection`` for the column contract)."""
-    from log_server_spark.sources.saved_format import read_saved, saved_records_projection
-
     return saved_records_projection(read_saved(spark, files))
 
 
@@ -300,12 +303,17 @@ def _keys_table_name(wh: Warehouse) -> str:
     return f"records_keys_{hashlib.md5(wh.root.encode()).hexdigest()[:10]}"
 
 
-def _create_keys_table(spark: SparkSession, name: str, location: str, buckets: int) -> None:
+def _create_keys_table(
+    spark: SparkSession, name: str, location: str, buckets: int, zstd_level: int
+) -> None:
+    """Register the bucketed keys table; every insert into it writes zstd
+    at ``zstd_level`` (a table option, not session state)."""
     spark.sql(
         f"""CREATE TABLE IF NOT EXISTS {name} (
               `table` STRING, record_id STRING, record_hash INT,
               ts_millis BIGINT, batch STRING, day DATE)
             USING PARQUET
+            OPTIONS ('{ZSTD_LEVEL}' = '{zstd_level}')
             PARTITIONED BY (batch, day)
             CLUSTERED BY (record_hash) INTO {buckets} BUCKETS
             LOCATION '{location}'"""
@@ -351,7 +359,7 @@ def _keys_table(wh: Warehouse) -> str:
     # filesystem-level partition drop invalidates the cache
     tag = f"{spark.sparkContext.applicationId}:{name}"
     if tag not in _KEYS_SYNCED:
-        _create_keys_table(spark, name, keys_dir, buckets)
+        _create_keys_table(spark, name, keys_dir, buckets, zstd_level=1)
         os.makedirs(keys_dir, exist_ok=True)
         spark.sql(f"MSCK REPAIR TABLE {name} SYNC PARTITIONS")
         # drop any cached file listing from before a filesystem-level change
@@ -467,7 +475,7 @@ def rebuild_keys(wh: Warehouse) -> dict | None:
     files_before = len(glob.glob(os.path.join(keys_dir, "**", "*.parquet"), recursive=True))
     build_name = _keys_table_name(wh) + "_build"
     spark.sql(f"DROP TABLE IF EXISTS {build_name}")
-    _create_keys_table(spark, build_name, tmp, buckets)
+    _create_keys_table(spark, build_name, tmp, buckets, zstd_level=6)
     _insert_keys(keys, build_name, buckets)
     spark.sql(f"DROP TABLE {build_name}")  # external: files stay
     os.makedirs(tmp, exist_ok=True)
@@ -707,14 +715,6 @@ def _run_batch_inner(
     split = max(1 << 20, min(128 << 20, total_bytes // max(1, target_tasks)))
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(split))
     spark.conf.set("spark.sql.files.openCostInBytes", str(256 << 10))
-    # live-segment write cost: the reference keeps live segments
-    # UNcompressed and gzips only at archive time (BigStorage.scala:338-350)
-    # — the analogous lifecycle here is a cheap codec on the ingest write
-    # (zstd level 1; the session default level 3 costs ~15% of batch wall
-    # for ~7% smaller files) and full-strength zstd when `archive` rewrites
-    # the partition. parquet-java reads the level from the hadoop conf at
-    # write time.
-    spark.sparkContext._jsc.hadoopConfiguration().set("parquet.compression.codec.zstd.level", "1")
 
     if source_format == "saved":
         parsed = _saved_records(spark, files).withColumn("day", F.to_date("warc_ts"))
@@ -777,7 +777,18 @@ def _run_batch_inner(
     out = routed.repartition(
         F.col("sink"), F.pmod(F.hash("url"), _salt_expr(wh, salt, total_bytes))
     )
-    out.write.mode("append").partitionBy("batch", "sink").parquet(wh.path(RECORDS))
+    # live-segment write cost: the reference keeps live segments
+    # UNcompressed and gzips only at archive time (BigStorage.scala:338-350)
+    # — the analogous lifecycle here is a cheap codec on the ingest write
+    # (zstd level 1; the default level 3 costs ~15% of batch wall for ~7%
+    # smaller files) and zstd level 6 when `archive` rewrites the partition.
+    # The level is a per-write option, so no other write inherits it.
+    (
+        out.write.mode("append")
+        .option(ZSTD_LEVEL, "1")
+        .partitionBy("batch", "sink")
+        .parquet(wh.path(RECORDS))
+    )
 
     # read the just-written batch partition back (small, column-pruned):
     # (a) append its dedup keys to the day-partitioned keys table — the
@@ -1015,31 +1026,3 @@ def run_pipeline(
             refresh_aggregates(spark, wh)
     return results
 
-
-if __name__ == "__main__":
-    import argparse
-
-    from log_server_spark.session import get_spark
-
-    ap = argparse.ArgumentParser(description="parse→enrich→route→aggregate DAG")
-    ap.add_argument("--pages-dir", help="dir of pages parquet parts")
-    ap.add_argument("--warehouse", required=True)
-    ap.add_argument("--generate", type=int, default=0, help="generate N synthetic pages first")
-    ap.add_argument("--data-dir", default="/tmp/lss_data")
-    ap.add_argument("--batch-files", type=int, default=4)
-    ap.add_argument("--salt", type=int, default=8)
-    ap.add_argument("--master", default=None)
-    a = ap.parse_args()
-
-    pages_dir = a.pages_dir
-    if a.generate:
-        from log_server_spark.datagen import write_dataset
-
-        write_dataset(a.data_dir, n=a.generate)
-        pages_dir = os.path.join(a.data_dir, "pages")
-
-    sp = get_spark(master=a.master, app_name="lss-pipeline")
-    res = run_pipeline(sp, pages_dir, a.warehouse, batch_files=a.batch_files, salt=a.salt)
-    for r in res:
-        print(f"{r.batch}: added={r.added} duplicates={r.duplicates} errors={r.errors}")
-    sp.stop()

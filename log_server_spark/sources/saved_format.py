@@ -246,23 +246,14 @@ def _decode_batches(batches):
 SAVED_GLOB = "*.saved*"
 
 
-def decode_saved_files(files_df):
-    """(path, content) frame (batch OR streaming) -> decoded records: the
-    single place the binaryFile wiring meets ``_decode_batches``, shared by
-    ``read_saved`` and the streaming source so the two ingest paths cannot
-    silently diverge."""
+def read_saved(spark, path):
+    """Scan a directory, glob or list of ``*.saved`` / ``*.saved.gz`` files
+    into a DataFrame — one decode task per file via the binaryFile source."""
     from pyspark.sql import functions as F
 
-    return files_df.select(F.col("path"), F.col("content")).mapInArrow(
+    files = spark.read.format("binaryFile").option("pathGlobFilter", SAVED_GLOB).load(path)
+    return files.select(F.col("path"), F.col("content")).mapInArrow(
         _decode_batches, schema=SAVED_SCHEMA
-    )
-
-
-def read_saved(spark, path: str):
-    """Scan a directory (or glob) of ``*.saved`` / ``*.saved.gz`` files into
-    a DataFrame — one decode task per file via the binaryFile source."""
-    return decode_saved_files(
-        spark.read.format("binaryFile").option("pathGlobFilter", SAVED_GLOB).load(path)
     )
 
 

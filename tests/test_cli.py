@@ -12,8 +12,6 @@ import pytest
 from log_server_spark.cli import main as cli_main
 from log_server_spark.datagen import write_dataset
 
-pytestmark = pytest.mark.slow
-
 
 @pytest.fixture(scope="module")
 def env(tmp_path_factory, spark):
@@ -27,6 +25,60 @@ def env(tmp_path_factory, spark):
     return wh
 
 
+def test_commands_on_warehouse_without_records(spark, tmp_path, capsys):
+    """An update of one 0-row pages file commits lineage but writes no
+    records table: info reports a zero total, get finds nothing (and adds
+    nothing to a multi-warehouse union), archive has nothing to mark."""
+    import pyarrow.parquet as pq
+
+    from log_server_spark.datagen import gen_pages
+    from log_server_spark.sources.saved_format import write_saved
+
+    pages = tmp_path / "pages"
+    pages.mkdir()
+    pq.write_table(gen_pages(seed=1, n=1).slice(0, 0), str(pages / "part-00000.parquet"))
+    empty = str(tmp_path / "empty")
+    assert cli_main(["update", "--warehouse", empty, "--pages-dir", str(pages)]) == 0
+    capsys.readouterr()
+
+    assert cli_main(["info", "--warehouse", empty]) == 0
+    assert capsys.readouterr().out.splitlines() == ["total: 0"]
+    assert cli_main(["get", "--warehouse", empty, "--table", "users", "--id", "7"]) == 0
+    assert capsys.readouterr().out == ""
+    saved = tmp_path / "saved"
+    saved.mkdir()
+    write_saved(str(saved / "unit-00000.saved"), [("users", 7, 1_700_000_000_000, "u7")])
+    full = str(tmp_path / "full")
+    argv = ["update", "--warehouse", full, "--pages-dir", str(saved), "--format", "saved"]
+    assert cli_main(argv) == 0
+    capsys.readouterr()
+    argv = ["get", "--warehouse", empty, "--warehouse", full, "--table", "users", "--id", "7"]
+    assert cli_main(argv) == 0
+    assert [json.loads(line)["data"] for line in capsys.readouterr().out.splitlines()] == ["u7"]
+    assert cli_main(["archive", "--warehouse", empty]) == 0
+    assert json.loads(capsys.readouterr().out)["archived"] == []
+
+
+def test_writes_leave_the_session_zstd_level_alone(spark, tmp_path, capsys):
+    """The ingest and archive writes carry their zstd level as a write (or
+    table) option: an embedding session's later parquet writes keep its own
+    level."""
+    from log_server_spark.plans.pipeline import ZSTD_LEVEL, run_pipeline
+
+    def level():
+        return spark.sparkContext._jsc.hadoopConfiguration().get(ZSTD_LEVEL)
+
+    before = level()
+    data = str(tmp_path / "data")
+    write_dataset(data, seed=3, n=60, num_files=1)
+    wh = str(tmp_path / "wh")
+    assert run_pipeline(spark, os.path.join(data, "pages"), wh)[0].added > 0
+    assert level() == before
+    assert cli_main(["archive", "--warehouse", wh]) == 0
+    assert json.loads(capsys.readouterr().out)["archived"] == ["b00000"]
+    assert level() == before
+
+
 def _get_output(spark, wh, capsys):
     from pyspark.sql import functions as F
 
@@ -37,6 +89,7 @@ def _get_output(spark, wh, capsys):
     return sample, out
 
 
+@pytest.mark.slow
 def test_update_then_get(spark, env, capsys):
     sample, out = _get_output(spark, env, capsys)
     assert out
@@ -46,6 +99,7 @@ def test_update_then_get(spark, env, capsys):
     assert ts == sorted(ts)
 
 
+@pytest.mark.slow
 def test_info_totals(spark, env, capsys):
     cli_main(["info", "--warehouse", env])
     out = capsys.readouterr().out.strip().splitlines()
@@ -53,6 +107,7 @@ def test_info_totals(spark, env, capsys):
     assert total == spark.read.parquet(os.path.join(env, "records")).count()
 
 
+@pytest.mark.slow
 def test_archive_preserves_get(spark, env, capsys):
     before_sample, before = _get_output(spark, env, capsys)
     rc = cli_main(["archive", "--warehouse", env])
@@ -65,6 +120,7 @@ def test_archive_preserves_get(spark, env, capsys):
     assert after == before
 
 
+@pytest.mark.slow
 def test_archive_then_keep_ingesting(spark, tmp_path_factory, capsys):
     """update 2 of 4 units, archive, update the other 2: the new batches
     append under new, writable ids, and get, info and the published

@@ -19,11 +19,6 @@ ROOT = pathlib.Path(log_server_spark.__file__).parent
 ALLOWED_UNREFERENCED = {
     "__version__": "package version string, read by tooling",
     "murmur3_32": "scalar murmur3 reference the hash and parse tests compare against",
-    "start_ingest": "streaming ingest entry point: a long-running job its caller starts",
-    "start_saved_ingest": "streaming ingest of .saved files: a long-running job its caller starts",
-    "start_windowed_stats": "streaming windowed stats: a long-running job its caller starts",
-    "start_record_sessions": "streaming sessionize over a records sink: started by its caller",
-    "run_sessionize_stream": "bounded (availableNow) streaming sessionize run, public API",
     "write_saved": "writer for the .saved format the pipeline reads (fixtures, migration)",
     "asof_enrich_intervals": "interval-table variant of the as-of join, public API",
     "hash_sample": "single-fraction form of hash_stratified_sample, public API",

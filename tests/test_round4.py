@@ -370,55 +370,6 @@ def test_adaptive_salt_reallocates_files_by_sink_volume(spark, tmp_path_factory,
 
 
 # ---------------------------------------------------------------------------
-# VERDICT #8: streaming `.saved` source == batch `--format saved`
-# ---------------------------------------------------------------------------
-
-
-@pytest.mark.slow
-def test_streaming_saved_source_matches_batch(spark, tmp_path):
-    """Incrementally landed `.saved`/`.saved.gz` files drained by the
-    streaming source (checkpointed across two availableNow runs, dedup state
-    retained) must produce exactly the records the batch
-    ``update --format saved`` path ingests — T2/T3 for the wire-format
-    migration path (LogWriterClient.scala:26-27 rotation contract)."""
-    from log_server_spark.sources.saved_format import write_saved
-    from log_server_spark.streaming.stream_pipeline import start_saved_ingest
-
-    ts0 = 1_700_000_000_000
-    saved_dir = tmp_path / "in"
-    os.makedirs(saved_dir)
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-
-    recs_a = [("users", i, ts0 + i * 1_000, f"row a{i}") for i in range(50)]
-    write_saved(str(saved_dir / "unit-00000.saved"), recs_a)
-    q = start_saved_ingest(spark, str(saved_dir), out, ckpt, available_now=True)
-    q.awaitTermination(180)
-
-    # second rotation lands later: gz branch + one exact cross-file duplicate
-    recs_b = [("orders", f"u{i}", ts0 + i * 777, f"row b{i}") for i in range(30)]
-    recs_b.append(recs_a[0])
-    write_saved(str(saved_dir / "unit-00001.saved.gz"), recs_b)
-    q = start_saved_ingest(spark, str(saved_dir), out, ckpt, available_now=True)
-    q.awaitTermination(180)
-
-    cols = ["url", "table", "record_id", "ts_millis", "text", "record_hash"]
-    stream_rows = {tuple(r) for r in spark.read.parquet(out).select(*cols).collect()}
-
-    wh_dir = str(tmp_path / "wh")
-    run_pipeline(spark, str(saved_dir), wh_dir, batch_files=1, source_format="saved")
-    batch_rows = {
-        tuple(r)
-        for r in Warehouse(wh_dir, spark)
-        .read(RECORDS)
-        .filter(F.col("status") == "ok")
-        .select(*cols)
-        .collect()
-    }
-    assert len(stream_rows) == 50 + 30  # duplicate dropped by streaming dedup
-    assert stream_rows == batch_rows
-
-
-# ---------------------------------------------------------------------------
 # near-dup clustering: pairs -> connected components -> keepers
 # ---------------------------------------------------------------------------
 
@@ -497,51 +448,6 @@ def test_components_from_pairs_random_graphs_vs_union_find(spark):
             pdf = pdf.filter("id_a <> id_a")  # empty edge set
         got = {r["node"]: r["lbl"] for r in components_from_pairs(ids, pdf).collect()}
         assert got == want, (n, sorted(edges))
-
-
-# ---------------------------------------------------------------------------
-# Streaming parity widening: .saved -> records sink -> session stage chain
-# ---------------------------------------------------------------------------
-
-
-@pytest.mark.slow
-def test_streaming_saved_chain_to_sessions(spark, tmp_path):
-    """The wire-format stream composes with the stage-2 sessionizer through
-    a committed file sink: `.saved` files -> start_saved_ingest (records
-    sink with _spark_metadata commit log) -> start_record_sessions, all
-    availableNow, exactly-once across the chain."""
-    from log_server_spark.sources.saved_format import write_saved
-    from log_server_spark.streaming.stream_pipeline import (
-        start_record_sessions,
-        start_saved_ingest,
-    )
-
-    ts0 = 1_700_000_000_000
-    saved_dir = tmp_path / "in"
-    os.makedirs(saved_dir)
-    records_dir = str(tmp_path / "records")
-    # two "domains" (tables don't matter to the sessionizer: key is
-    # xxhash64(domain), and the saved projection sets domain="") — all
-    # records share one key here; gaps in capture ts split sessions
-    recs = [("users", i, ts0 + i * 60_000, f"r{i}") for i in range(5)]
-    recs += [("users", 100 + i, ts0 + 3_600_000 * 3 + i * 60_000, f"s{i}") for i in range(4)]
-    write_saved(str(saved_dir / "unit-00000.saved"), recs)
-    q = start_saved_ingest(spark, str(saved_dir), records_dir, str(tmp_path / "ck1"), available_now=True)
-    q.awaitTermination(180)
-
-    out_dir = str(tmp_path / "sessions")
-    q = start_record_sessions(
-        spark, records_dir, out_dir, str(tmp_path / "ck2"),
-        watermark="30 minutes", available_now=True,
-    )
-    q.awaitTermination(180)
-    sessions = spark.read.parquet(out_dir).collect()
-    # the first burst (5 events, 1-min gaps) closed in-batch when the
-    # 3-hour-later burst opened a new session past the 30-min gap
-    assert len(sessions) >= 1
-    s = min(sessions, key=lambda r: r["session_start"])
-    assert s["n_events"] == 5
-    assert s["session_end"] - s["session_start"] == 4 * 60_000
 
 
 # ---------------------------------------------------------------------------

@@ -163,3 +163,34 @@ def test_read_saved_through_spark(spark, tmp_path):
     # dedup-pipeline compatibility: the decoded frame joins on the same
     # dedup key columns with no nulls
     assert df.filter("table IS NULL OR record_id IS NULL OR record_hash IS NULL").count() == 0
+
+
+def test_saved_rotation_lands_between_updates(spark, tmp_path):
+    """A `.saved` rotation that lands after an update is ingested by the next
+    one (T2 file rotation), an exact copy of an already committed record in
+    it is dropped (T3 late duplicate), and a third update has nothing to do."""
+    from pyspark.sql import functions as F
+
+    from log_server_spark.catalog import Warehouse
+    from log_server_spark.plans.pipeline import RECORDS, run_pipeline
+
+    ts0 = 1_700_000_000_000
+    saved_dir = tmp_path / "in"
+    saved_dir.mkdir()
+    wh_dir = str(tmp_path / "wh")
+
+    def update():
+        return run_pipeline(spark, str(saved_dir), wh_dir, batch_files=1, source_format="saved")
+
+    recs_a = [("users", i, ts0 + i * 1_000, f"row a{i}") for i in range(50)]
+    write_saved(str(saved_dir / "unit-00000.saved"), recs_a)
+    assert [(r.batch, r.added) for r in update()] == [("b00000", 50)]
+
+    recs_b = [("orders", f"u{i}", ts0 + i * 777, f"row b{i}") for i in range(30)]
+    recs_b.append(recs_a[0])
+    write_saved(str(saved_dir / "unit-00001.saved.gz"), recs_b)
+    assert [(r.batch, r.added, r.duplicates) for r in update()] == [("b00001", 30, 1)]
+    records = Warehouse(wh_dir, spark).read(RECORDS)
+    assert records.filter(F.col("status") == "ok").count() == records.count() == 80
+
+    assert update() == []
