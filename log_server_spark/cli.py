@@ -105,7 +105,7 @@ def cmd_archive(args) -> int:
     """Archive the whole warehouse, the reference's one archive mode (gzip
     every segment and mark it read-only, BigStorage.scala:338-350): rewrite
     each (batch, sink) records partition into one zstd-6 file, mark every
-    batch read-only, merge the keys to one file per (day, bucket) and the
+    batch read-only, merge the keys to one file per day and the
     bookkeeping to one file per table. ``--unmark`` makes batches writable
     again (their keys partitions are rebuilt) and does nothing else. The
     records layout is unchanged, so later ingests append to it."""
@@ -187,7 +187,7 @@ def cmd_archive(args) -> int:
         wh.mark_archived(archived)
         # archive EVERYTHING, index files included (BigStorage.scala:
         # 338-350): merge the now-read-only batches' keys partitions to one
-        # file per (day, bucket) and their bookkeeping to one file per table
+        # file per day and their bookkeeping to one file per table
         # (merging erases per-batch attribution, sound for read-only batches)
         keys_stats = rebuild_keys(wh)
         book_stats = compact_bookkeeping(wh, set(archived))

@@ -219,7 +219,7 @@ def minhash_signature_frame(
     :func:`minhash_lsh_pairs_from_signatures` consumes: k minima, the
     distinct-shingle count, and the doc's shingle-hash set. This is the
     frame a stored-signatures lifecycle writes per ingested batch
-    (partitioned/bucketed like records_keys) so later dedup runs never
+    (partitioned like records_keys) so later dedup runs never
     re-explode the committed corpus.
 
     Computed entirely PER ROW with array expressions (round 6, BOTH

@@ -17,12 +17,13 @@ never delete the immutable input, we record completion):
   dedup-key projection under ``records_keys/batch=bNNNNN/day=…`` — the
   ``.record`` / ``.hash`` file split of the reference's segment layout
   (RecordStorage vs HeaderStorage);
-- there is ONE keys layout: ``records_keys`` bucketed by ``record_hash``,
-  its bucket count pinned by the ``records_keys.bucketed`` marker, which
-  an empty warehouse gets before its first write. A warehouse that holds
-  records or keys but no marker predates this layout (its keys files carry
-  no bucket ids, so a bucketed read over them would silently miss
-  duplicates): ``run_pipeline`` refuses it before writing anything;
+- there is ONE keys layout: ``records_keys`` partitioned by (batch, day),
+  one file per (batch, day) at live scale, marked by the
+  ``records_keys.bucketed`` file that an empty warehouse gets before its
+  first write (the name is kept from an earlier bucketed layout, whose
+  files read back as plain Parquet). A warehouse that holds records or
+  keys but no marker predates the marked layouts: ``run_pipeline`` refuses
+  it before writing anything;
 - per-batch bookkeeping (partial aggregates, ingest counters, lineage) is
   written driver-side as ONE file per batch named by batch id, so a
   reprocessed batch overwrites its own rows — idempotent by construction;
@@ -44,14 +45,18 @@ Scale properties:
   derived from ts_millis — the same column the predicate filters) plus
   ts_millis row-group stats — the committed side read is O(overlapping
   days), never O(history). This is the reference's per-segment ts-range
-  probe gate (BigStorage.scala:30) made real on the physical layout;
+  probe gate (BigStorage.scala:30) made real on the physical layout. The
+  batch reaches the anti-join already hash-partitioned on the dedup key by
+  the in-batch dedup aggregate, so the full-width batch shuffles once
+  there and only the thin committed-keys slice shuffles to meet it;
 - per-batch driver actions are collapsed to: one stats aggregation on the
   persisted parse output, the records write (ingest counters ride it as
   ``df.observe`` metrics — zero extra jobs), and two small read-backs of
   the just-written batch partition (keys projection + partial aggregates),
-  plus the one partials merge of ``refresh_aggregates``. That is ~18 jobs
-  for a steady update of ~1k pages, AQE shuffle-map jobs included, and
-  none of them is planning or bookkeeping: every parquet read pins its
+  plus the one partials merge of ``refresh_aggregates`` (skipped by an
+  update that changed no partials). That is ~16 jobs for a steady update
+  of ~1k pages, AQE shuffle-map jobs included, and none of them is
+  planning or bookkeeping: every parquet read pins its
   schema from one footer read driver-side (``catalog.read_parquet``, no
   schema-inference job), and lineage plus the newest partials file are
   read with pyarrow;
@@ -266,7 +271,6 @@ def _drop_batch(wh: Warehouse, batch_id: str) -> None:
             _rewrite_without_batch(wh, table, batch_id)
 
 
-KEYS_BUCKETS_DEFAULT = 32
 KEYS_MARKER = "records_keys.bucketed"
 KEYS_COLUMNS = ("table", "record_id", "record_hash", "ts_millis", "batch", "day")
 
@@ -275,39 +279,35 @@ KEYS_COLUMNS = ("table", "record_id", "record_hash", "ts_millis", "batch", "day"
 ARCHIVED_KEYS_BATCH = "archived"
 
 
-def _keys_buckets(wh: Warehouse) -> int:
-    """The warehouse's keys bucket count, read from its layout marker. An
+def _check_keys_marker(wh: Warehouse) -> None:
+    """Refuse a warehouse whose keys layout predates the layout marker; an
     empty warehouse gets the marker here, before its first write, so a
-    batch that crashes mid-write still leaves a marked warehouse. One that
-    holds records or keys without a marker predates the bucketed layout —
-    its keys files carry no bucket ids, and a bucketed read over them would
-    silently miss committed duplicates — so it is refused."""
+    batch that crashes mid-write still leaves a marked warehouse. The
+    marker's content is not read: warehouses written by the earlier
+    bucketed keys layout hold a bucket count there, and their bucket-named
+    keys files read back as plain Parquet."""
     marker = os.path.join(wh.root, KEYS_MARKER)
-    if not os.path.isfile(marker):
-        if wh.exists(RECORDS) or wh.exists(RECORDS_KEYS):
-            raise RuntimeError(
-                f"warehouse {wh.root} holds data but no {KEYS_MARKER} marker: its "
-                "records_keys layout predates bucketing and is not supported; "
-                "re-ingest its inputs into a new warehouse"
-            )
-        with open(marker, "w") as f:
-            f.write(os.environ.get("LSS_KEYS_BUCKETS", str(KEYS_BUCKETS_DEFAULT)))
-    with open(marker) as f:
-        return int(f.read().strip())
+    if os.path.isfile(marker):
+        return
+    if wh.exists(RECORDS) or wh.exists(RECORDS_KEYS):
+        raise RuntimeError(
+            f"warehouse {wh.root} holds data but no {KEYS_MARKER} marker: its "
+            "records_keys layout predates the marked layouts and is not supported; "
+            "re-ingest its inputs into a new warehouse"
+        )
+    open(marker, "w").close()
 
 
 def _keys_table_name(wh: Warehouse) -> str:
-    """Session-catalog name of the warehouse's bucketed keys table."""
+    """Session-catalog name of the warehouse's keys table."""
     import hashlib
 
     return f"records_keys_{hashlib.md5(wh.root.encode()).hexdigest()[:10]}"
 
 
-def _create_keys_table(
-    spark: SparkSession, name: str, location: str, buckets: int, zstd_level: int
-) -> None:
-    """Register the bucketed keys table; every insert into it writes zstd
-    at ``zstd_level`` (a table option, not session state)."""
+def _create_keys_table(spark: SparkSession, name: str, location: str, zstd_level: int) -> None:
+    """Register the (batch, day)-partitioned keys table; every insert into
+    it writes zstd at ``zstd_level`` (a table option, not session state)."""
     spark.sql(
         f"""CREATE TABLE IF NOT EXISTS {name} (
               `table` STRING, record_id STRING, record_hash INT,
@@ -315,42 +315,34 @@ def _create_keys_table(
             USING PARQUET
             OPTIONS ('{ZSTD_LEVEL}' = '{zstd_level}')
             PARTITIONED BY (batch, day)
-            CLUSTERED BY (record_hash) INTO {buckets} BUCKETS
             LOCATION '{location}'"""
     )
 
 
-def _insert_keys(keys: DataFrame, name: str, buckets: int) -> None:
-    """Bucketed insert of ``KEYS_COLUMNS`` rows: pre-cluster reducers on
-    (day, bucket id) — pmod(hash(col), B) IS Spark's bucket-id function
-    (HashPartitioning.partitionIdExpression), so each reducer holds every
-    row of its (day, bucket) and writes ONE file per batch into it."""
-    (
-        keys.select(*KEYS_COLUMNS)
-        .repartition(F.col("day"), F.pmod(F.hash("record_hash"), F.lit(buckets)))
-        .write.insertInto(name)
+def _dir_bytes(path: str) -> int:
+    return sum(
+        os.path.getsize(os.path.join(d, f)) for d, _, fs in os.walk(path) for f in fs
     )
 
 
 def _keys_table(wh: Warehouse) -> str:
-    """Register (or re-register) the warehouse's ``records_keys`` as a
-    BUCKETED external table and return its session-catalog name.
+    """Register (or re-register) the warehouse's ``records_keys`` as an
+    external table partitioned by (batch, day) and return its
+    session-catalog name.
 
-    Bucketing by ``record_hash`` makes the committed side of the per-batch
-    anti-join Exchange-free: the bucketed scan reports
-    HashPartitioning(record_hash, B), which satisfies the join's clustered
-    distribution (subset co-partitioning,
-    ``spark.sql.requireAllClusterKeysForCoPartition=false`` in session.py),
-    so only the small incoming batch shuffles — the committed overlap slice
-    never does. This is ROADMAP #3: the parquet-dir equivalent of an
-    Iceberg bucket-partitioned index table.
+    A catalog table, not a path read: the catalog prunes the committed-side
+    scan to the batch's ``day`` partitions, where a path-based read would
+    list every ``batch=*/day=*`` directory on each batch. The table is not
+    bucketed: the incoming batch arrives at the anti-join already
+    hash-partitioned on the dedup key by the in-batch dedup aggregate, so
+    only the thin committed-keys slice shuffles to meet it.
 
     The catalog entry is session-scoped (in-memory catalog): CREATE TABLE
     IF NOT EXISTS + ``MSCK REPAIR ... SYNC PARTITIONS`` re-derives it from
     the files on every call, so any session — and any filesystem-level
-    batch drop — self-heals. The marker file pins the bucket count.
+    batch drop — self-heals.
     """
-    buckets = _keys_buckets(wh)
+    _check_keys_marker(wh)
     keys_dir = wh.path(RECORDS_KEYS)
     name = _keys_table_name(wh)
     spark = wh.spark
@@ -359,7 +351,7 @@ def _keys_table(wh: Warehouse) -> str:
     # filesystem-level partition drop invalidates the cache
     tag = f"{spark.sparkContext.applicationId}:{name}"
     if tag not in _KEYS_SYNCED:
-        _create_keys_table(spark, name, keys_dir, buckets, zstd_level=1)
+        _create_keys_table(spark, name, keys_dir, zstd_level=1)
         os.makedirs(keys_dir, exist_ok=True)
         spark.sql(f"MSCK REPAIR TABLE {name} SYNC PARTITIONS")
         # drop any cached file listing from before a filesystem-level change
@@ -436,13 +428,14 @@ def rebuild_keys(wh: Warehouse) -> dict | None:
     """Rewrite ``records_keys`` from the records table's ok rows (the keys
     table is exactly their projection, ``_write_keys``, once torn batches
     are swept): ``batch=archived`` for batches marked read-only, else the
-    batch's own id. ``archive`` calls it after marking — one file per
-    (day, bucket) instead of O(batches x days x buckets), the index-file
-    leg of archiving every segment file (BigStorage.scala:338-350) — and
-    ``archive --unmark`` after unmarking, so a writable batch owns its keys
-    again (a surviving ``batch=archived`` partition would anti-join every
-    re-ingested record away). Bucket ids are preserved by inserting
-    through a temp table with the same CLUSTERED BY spec.
+    batch's own id. ``archive`` calls it after marking — one file per day
+    instead of O(batches x days), the index-file leg of archiving every
+    segment file (BigStorage.scala:338-350) — and ``archive --unmark``
+    after unmarking, so a writable batch owns its keys again (a surviving
+    ``batch=archived`` partition would anti-join every re-ingested record
+    away). A day whose on-disk keys exceed ``TARGET_FILE_BYTES`` is spread
+    over ``ceil(bytes / TARGET_FILE_BYTES)`` files by a ``record_hash``
+    modulus.
 
     Crash-safe via the standard swap protocol: the new layout is fully
     built in ``records_keys.compact``, verified by row count, then swapped
@@ -451,8 +444,8 @@ def rebuild_keys(wh: Warehouse) -> dict | None:
     """
     if not wh.exists(RECORDS):
         return None
+    _check_keys_marker(wh)
     spark = wh.spark
-    buckets = _keys_buckets(wh)
     keys_dir = wh.path(RECORDS_KEYS)
     tmp = keys_dir + ".compact"
     shutil.rmtree(tmp, ignore_errors=True)
@@ -468,17 +461,29 @@ def rebuild_keys(wh: Warehouse) -> dict | None:
             batch.alias("batch"), _ts_day(F.col("ts_millis")).alias("day"),
         )
     )
+    day_bytes: dict[str, int] = {}
+    for d in glob.glob(os.path.join(keys_dir, "batch=*", "day=*")):
+        day = os.path.basename(d).split("=", 1)[1]
+        day_bytes[day] = day_bytes.get(day, 0) + _dir_bytes(d)
+    spread = F.lit(0)
+    big = [
+        (d, -(-n // TARGET_FILE_BYTES)) for d, n in sorted(day_bytes.items())
+        if n > TARGET_FILE_BYTES
+    ]
+    if big:
+        files = F.create_map(*[F.lit(x) for pair in big for x in pair])[F.col("day").cast("string")]
+        spread = F.pmod(F.hash("record_hash"), F.coalesce(files, F.lit(1)))
     # COST NOTE: the row-count verify is two scans (source + rebuilt) —
     # O(total keys) at archive time, cheap next to the rewrite itself, and
     # a lost row here means silent re-ingestion of committed data
     rows_before = keys.count()
     files_before = len(glob.glob(os.path.join(keys_dir, "**", "*.parquet"), recursive=True))
-    build_name = _keys_table_name(wh) + "_build"
-    spark.sql(f"DROP TABLE IF EXISTS {build_name}")
-    _create_keys_table(spark, build_name, tmp, buckets, zstd_level=6)
-    _insert_keys(keys, build_name, buckets)
-    spark.sql(f"DROP TABLE {build_name}")  # external: files stay
-    os.makedirs(tmp, exist_ok=True)
+    (
+        keys.repartition(F.col("day"), spread)
+        .write.option(ZSTD_LEVEL, "6")
+        .partitionBy("batch", "day")
+        .parquet(tmp)
+    )
     rows_after = read_parquet(spark, tmp).count() if first_parquet_file(tmp) else 0
     if rows_after != rows_before:
         shutil.rmtree(tmp)
@@ -563,7 +568,8 @@ def _committed_keys(wh: Warehouse, ts_range: tuple | None = None) -> DataFrame |
     """
     if not wh.exists(RECORDS_KEYS):
         return None  # nothing committed yet
-    # bucketed scan: the committed side of the anti-join is Exchange-free
+    # catalog read: the day filter below prunes partitions before listing;
+    # this thin slice is the only side of the anti-join that shuffles
     keys = wh.spark.table(_keys_table(wh))
     if ts_range is not None:
         lo, hi = int(ts_range[0]), int(ts_range[1])
@@ -853,8 +859,12 @@ def _write_batch_index(spark: SparkSession, wh: Warehouse, batch_id: str, batch_
             .select("table", "record_id", "record_hash", "ts_millis")
             .withColumn("batch", F.lit(batch_id))
             .withColumn("day", _ts_day(F.col("ts_millis")))
+            .select(*KEYS_COLUMNS)
         )
-        _insert_keys(keys, _keys_table(wh), _keys_buckets(wh))
+        # one task per TARGET_FILE_BYTES of the batch's records writes one
+        # file per day it holds: one file per (batch, day) at live scale
+        n_files = max(1, -(-_dir_bytes(batch_dir) // TARGET_FILE_BYTES))
+        keys.coalesce(n_files).write.insertInto(_keys_table(wh))
 
     def _collect_partials():
         return (
@@ -905,8 +915,14 @@ def refresh_aggregates(spark: SparkSession, wh: Warehouse) -> None:
     The partials are the one aggregate source: every committed batch that
     wrote records wrote its partials before its lineage, and a warehouse
     from before the partials table also predates the keys marker, so
-    ``_keys_buckets`` refuses it.
+    ``_check_keys_marker`` refuses it.
+
+    Written last, a hidden fingerprint of the partials files it merged
+    (``_aggregates_current``) lets a later update that commits nothing skip
+    the refresh; a crash before it is written leaves none, so the next
+    update refreshes.
     """
+    source = _partials_fingerprint(wh)
     # ONE grouping-sets merge job over the tiny partials table yields both
     # the per-sink and the per-(window, sink) rollups
     rows = (
@@ -946,6 +962,31 @@ def refresh_aggregates(spark: SparkSession, wh: Warehouse) -> None:
         "window_start timestamp, sink string, n_rows long, n_urls_approx long",
         METRICS_WINDOWED,
     )
+    with open(os.path.join(wh.path(METRICS_WINDOWED), AGGREGATES_SOURCE), "w") as f:
+        f.write(source)
+
+
+# ``_``-prefixed, so no Parquet read of the windowed table sees it
+AGGREGATES_SOURCE = "_partials_fingerprint"
+
+
+def _partials_fingerprint(wh: Warehouse) -> str:
+    """Name, size and mtime of every partials file: any batch commit, drop
+    or archive merge changes at least one."""
+    lines = []
+    for f in sorted(glob.glob(os.path.join(wh.path(METRICS_PARTIALS), "*.parquet"))):
+        st = os.stat(f)
+        lines.append(f"{os.path.basename(f)} {st.st_size} {st.st_mtime_ns}\n")
+    return "".join(lines)
+
+
+def _aggregates_current(wh: Warehouse) -> bool:
+    """Whether the published aggregates were merged from today's partials."""
+    try:
+        with open(os.path.join(wh.path(METRICS_WINDOWED), AGGREGATES_SOURCE)) as f:
+            return f.read() == _partials_fingerprint(wh)
+    except FileNotFoundError:
+        return False
 
 
 def run_pipeline(
@@ -981,9 +1022,9 @@ def run_pipeline(
 
     results: list[BatchResult] = []
     with wh.lock(timeout=lock_timeout):
-        # refuses a pre-bucketing warehouse before anything is written, and
+        # refuses an unmarked warehouse before anything is written, and
         # marks an empty one with the only keys layout
-        _keys_buckets(wh)
+        _check_keys_marker(wh)
         done = _committed_batches(wh)
         if not resume:
             # a fresh (non-resume) run must drop each batch's LINEAGE AND
@@ -1022,7 +1063,11 @@ def run_pipeline(
                     salt=salt, source_format=source_format,
                 )
             )
-        if aggregates and wh.exists(METRICS_PARTIALS):
+        # a no-op update (nothing committed, partials unchanged since the
+        # last refresh) submits no Spark job at all
+        if aggregates and wh.exists(METRICS_PARTIALS) and (
+            results or not _aggregates_current(wh)
+        ):
             refresh_aggregates(spark, wh)
     return results
 

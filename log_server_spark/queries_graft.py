@@ -407,7 +407,7 @@ FROM documents
 
 def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REAL ``run_pipeline`` protocol — lineage, advisory lock, torn-write
-    sweep, day-partitioned bucketed keys, anti-join, observe metrics,
+    sweep, day-partitioned keys, anti-join, observe metrics,
     routing, partitioned write — run over two batches of synthesized legacy
     pages into a scratch warehouse, returning the final records projection.
 

@@ -87,10 +87,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # bucketed-scan co-partitioning on a SUBSET of join keys: the
-        # records_keys table is bucketed by record_hash alone, and the
-        # dedup anti-join clusters on (table, record_id, record_hash) —
-        # allowing the subset keeps the committed side Exchange-free
+        # co-partitioning on a SUBSET of join keys: a join side already
+        # hash-partitioned on some of the keys is not re-shuffled. Kept for
+        # the near-dup pair and component joins, whose plans were built and
+        # measured with it on
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
         # ship the malloc tuning to cluster executors too (local workers
         # already inherit the driver env set above)

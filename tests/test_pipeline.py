@@ -237,3 +237,80 @@ def test_salting_does_not_change_results(spark, dataset, tmp_path_factory):
     def nfiles(wh):
         return len(glob.glob(os.path.join(wh, RECORDS, "**", "*.parquet"), recursive=True))
     assert nfiles(whs[16]) >= nfiles(whs[1])
+
+
+def test_dedup_anti_join_shuffles_batch_once(spark, anti_join_plan):
+    """Fast plan check on in-memory frames: the in-batch dedup aggregate's
+    shuffle is the only one the batch pays; the anti-join reuses its hash
+    partitioning on the dedup key, and only the committed keys shuffle."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 3, 1, tzinfo=dt.timezone.utc)
+    ok = spark.createDataFrame(
+        [
+            ("u/1", t0, 0, "users", "1", 11, "a"),
+            ("u/0", t0, 0, "users", "1", 11, "a"),  # in-batch duplicate, wins on url
+            ("u/2", t0, 0, "users", "2", 22, "b"),  # committed earlier
+            ("u/3", t0, 0, "users", "3", 33, "c"),
+        ],
+        "url string, warc_ts timestamp, seq int, table string, record_id string, "
+        "record_hash int, text string",
+    )
+    committed = spark.createDataFrame(
+        [("users", "2", 22), ("users", "2", 22), ("users", "3", 34)],
+        "table string, record_id string, record_hash int",
+    )
+    anti_join_plan(ok, committed)
+    from log_server_spark.operators.dedup import anti_join_committed, split_duplicates
+
+    assert split_duplicates(ok)[0].columns == ok.columns
+    kept = anti_join_committed(split_duplicates(ok)[0], committed)
+    assert sorted((r["url"], r["record_id"]) for r in kept.collect()) == [("u/0", "1"), ("u/3", "3")]
+
+
+def test_keys_one_file_per_batch_day_and_replay_is_cross_batch_dup(spark, tmp_path):
+    """Two batches over hand-made pages: the keys table holds exactly one
+    file per (batch, day), and a page replayed in batch 2 is counted as a
+    cross-batch duplicate, not added again."""
+    import datetime as dt
+    import glob
+
+    import pyarrow as pa
+
+    from log_server_spark.plans.pipeline import RECORDS_KEYS
+
+    def page(url, day, rid):
+        html = f"---- 2024-03-0{day} 10:00:00 level:INFO table:users id:{rid} op:create\nbody {rid}"
+        return url, dt.datetime(2024, 3, day, 12, tzinfo=dt.timezone.utc), html
+
+    def unit(path, rows):
+        pq.write_table(pa.table({
+            "url": pa.array([r[0] for r in rows], pa.string()),
+            "warc_ts": pa.array([r[1] for r in rows], pa.timestamp("us", tz="UTC")),
+            "html": pa.array([r[2].encode() for r in rows], pa.binary()),
+            "text": pa.array([r[2] for r in rows], pa.string()),
+            "lang": pa.array(["en"] * len(rows), pa.string()),
+        }), path)
+
+    pages = tmp_path / "pages"
+    pages.mkdir()
+    unit(str(pages / "part-00000.parquet"), [page("https://a.example/1", 1, 1), page("https://a.example/2", 2, 2)])
+    unit(str(pages / "part-00001.parquet"), [
+        page("https://a.example/1", 1, 1),  # replay of batch 1's first page
+        page("https://a.example/3", 2, 3),
+        page("https://a.example/4", 3, 4),
+    ])
+    wh_dir = str(tmp_path / "wh")
+    results = run_pipeline(spark, str(pages), wh_dir, batch_files=1)
+    assert [(r.batch, r.added, r.duplicates, r.errors) for r in results] == [
+        ("b00000", 2, 0, 0), ("b00001", 2, 1, 0),
+    ]
+    wh = Warehouse(wh_dir, spark)
+    day_dirs = glob.glob(os.path.join(wh.path(RECORDS_KEYS), "batch=*", "day=*"))
+    assert sorted(os.path.relpath(d, wh.path(RECORDS_KEYS)) for d in day_dirs) == [
+        "batch=b00000/day=2024-03-01", "batch=b00000/day=2024-03-02",
+        "batch=b00001/day=2024-03-02", "batch=b00001/day=2024-03-03",
+    ]
+    for d in day_dirs:
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+    assert sorted(r["record_id"] for r in wh.read(RECORDS).collect()) == ["1", "2", "3", "4"]

