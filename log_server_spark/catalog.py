@@ -78,6 +78,54 @@ def read_parquet(spark: SparkSession, path: str, *more: str) -> DataFrame:
     return reader.parquet(path, *more)
 
 
+def scan_roots(df: DataFrame) -> list[str]:
+    """Local root paths of the file scans ``df`` is a bag union of — a plain
+    ``read_parquet`` of one directory, or a ``unionByName`` of such reads —
+    from its analyzed plan, with O(1) py4j calls per scan (no file
+    listing). Raises ``ValueError`` for any other frame (filtered,
+    projected, joined, in-memory, ...): a reader that answers from the
+    files themselves must not silently drop what the frame says."""
+    roots: list[str] = []
+    stack = [(df._jdf.queryExecution().analyzed(), False)]
+    while stack:
+        node, in_union = stack.pop()
+        name = node.nodeName()
+        if name == "Union":
+            children = node.children()
+            stack.extend((children.apply(i), True) for i in range(children.size()))
+        elif name == "Project" and in_union and _aligns_columns(node.projectList()):
+            stack.append((node.child(), False))
+        elif (
+            name == "LogicalRelation"
+            and node.relation().getClass().getSimpleName() == "HadoopFsRelation"
+        ):
+            paths = node.relation().location().rootPaths()
+            if paths.size() != 1:
+                raise ValueError(f"expected a scan of one directory, got {paths.size()} paths")
+            roots.append(paths.head().toUri().getPath())
+        else:
+            raise ValueError(
+                f"expected a plain warehouse table read (or a union of them), got a {name} "
+                "plan node; read the table with Warehouse.read and pass it unchanged"
+            )
+    return roots
+
+
+def _aligns_columns(exprs) -> bool:
+    """Whether a union input's Project only reorders columns and pads
+    missing ones with NULL, the shape ``unionByName(...,
+    allowMissingColumns=True)`` adds."""
+    for i in range(exprs.size()):
+        e = exprs.apply(i)
+        if e.nodeName() == "Alias":
+            e = e.child()
+            if e.nodeName() != "Literal" or e.value() is not None:
+                return False
+        elif e.nodeName() != "AttributeReference":
+            return False
+    return True
+
+
 class WarehouseLockTimeout(TimeoutError):
     pass
 

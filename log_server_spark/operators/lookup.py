@@ -1,53 +1,63 @@
 """Point lookup — the reference `get <table> <id>` command (SURVEY.md §3.2).
 
-``get(table, id)`` ≡ filter on the key + sort by ts (F1, O1) with id
-coercion (F7: RecordId.parse tries Int first — "123" and 123 are the same
-id, RecordId.scala:61-62). Catalyst pushes the equality predicates into the
-parquet scan, where row-group min/max stats skip the row groups that cannot
-hold the key. That is NOT file pruning: ``table`` and ``record_id`` are not
-partition columns, so in the ``(batch, sink)`` layout a get still lists and
-opens every records file (``lookup.files_listed`` was 42 after 4 benchmark
-batches) — the reference's sorted-array header index went straight to the
-segment. A key-sorted or key-bucketed layout is what would prune files.
+``get(table, id)`` returns every stored record of the key, ts-ascending
+(F1, O1), with id coercion (F7: RecordId.parse tries Int first — "123" and
+123 are the same id, RecordId.scala:61-62).
 
-The answer is 0-3 rows, so it is ordered by a single-partition
-``sortWithinPartitions`` rather than a global ``orderBy``: the global sort
-would add a range-partition sampling job for a result that fits one task.
+The reference answers a get on the calling thread through each segment's
+sorted header index. So does this one: ``plans.pipeline.lookup_records``
+probes the ``records_keys`` index for the batches that hold the key and
+reads only those batches' records files, driver-side with pyarrow. The
+answer (0-3 rows) becomes a local relation, so building and collecting it
+submits no Spark job; Spark's own ``to_json`` still renders the JSON,
+folded into that relation by the optimizer.
+
+The frame passed in names the warehouse: it must be a ``Warehouse.read``
+of the records table, or a ``unionByName`` of several (the multi-warehouse
+fan-out). Any other frame raises ``ValueError`` (see ``catalog.scan_roots``).
 
 Output shape mirrors JsRecord JSON (S8: GetCommand.scala:38-40).
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from log_server_spark.catalog import Warehouse, scan_roots
+
+
+def records_warehouses(records: DataFrame) -> list[Warehouse]:
+    """The warehouses whose records tables ``records`` reads, each once
+    (the same root read twice is one warehouse)."""
+    from log_server_spark.plans.pipeline import RECORDS
+
+    roots: list[str] = []
+    for path in scan_roots(records):
+        path = os.path.normpath(path)
+        if os.path.basename(path) != RECORDS:
+            raise ValueError(f"{path} is not a warehouse {RECORDS} table")
+        if os.path.dirname(path) not in roots:
+            roots.append(os.path.dirname(path))
+    return [Warehouse(root, records.sparkSession) for root in roots]
 
 
 def get_records(records: DataFrame, table: str, record_id: str | int) -> DataFrame:
     """All stored records for (table, id), timestamp-ascending."""
     from log_server_spark.parse_ref import canonical_record_id
+    from log_server_spark.plans.pipeline import lookup_records
 
     rid = canonical_record_id(str(record_id))
-    return (
-        records.filter(
-            (F.col("table") == table) & (F.col("record_id") == rid)
-        )
-        .repartition(1)
-        .sortWithinPartitions("ts_millis")
-        .select("table", "record_id", "ts_millis", "text", "url")
-    )
+    rows = lookup_records(records_warehouses(records), table, rid)
+    return records.sparkSession.createDataFrame(rows)
 
 
 def to_json_records(df: DataFrame) -> DataFrame:
-    """JSON-shaped output (S8) for an already-filtered record frame."""
-    return df.select(
-        F.to_json(
-            F.struct(
-                F.col("table").alias("tableName"),
-                F.col("record_id").alias("id"),
-                F.col("ts_millis").alias("timestamp"),
-                F.col("text").alias("data"),
-            )
-        ).alias("json")
+    """JSON-shaped output (S8) for an already-filtered record frame. One SQL
+    expression, so building it is one py4j call rather than one per column
+    reference and alias."""
+    return df.selectExpr(
+        "to_json(named_struct('tableName', `table`, 'id', record_id, "
+        "'timestamp', ts_millis, 'data', text)) AS json"
     )
-

@@ -64,6 +64,10 @@ Scale properties:
   HLL sketch registers via ``hll_union_agg``) — O(batches x sinks x days)
   rows, never a rescan of the records table. The partials are the only
   aggregate source;
+- the read path answers from the same two indexes, driver-side with
+  pyarrow and no Spark job: ``lookup_records`` (get) probes the keys for
+  the batches holding a key and reads only those, ``segment_stats`` (info)
+  groups the partials by (sink, day);
 - a salt column spreads the hot-domain sink across ``salt`` reducers before
   the write (north_rule skew requirement).
 """
@@ -76,6 +80,7 @@ import shutil
 import time
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
@@ -108,6 +113,17 @@ PARTIALS_SCHEMA = (
     "batch string, sink string, window_start timestamp, n_rows long, n_ok long, "
     "min_ts long, max_ts long, total_bytes long, url_sketch binary"
 )
+# the answers of the read path, built driver-side (``lookup_records``,
+# ``segment_stats``): a get's stored records, and info's per-(sink, day)
+# segment stats
+GET_SCHEMA = pa.schema([
+    ("table", pa.string()), ("record_id", pa.string()), ("ts_millis", pa.int64()),
+    ("text", pa.string()), ("url", pa.string()),
+])
+INFO_SCHEMA = pa.schema([
+    ("sink", pa.string()), ("day", pa.date32()), ("records", pa.int64()),
+    ("hashes", pa.int64()), ("min_ts", pa.int64()), ("max_ts", pa.int64()),
+])
 
 # parquet writer option (per write, or per table via OPTIONS) for the zstd
 # level: 1 on the ingest writes, 6 on the archive rewrites
@@ -420,7 +436,16 @@ def sweep_torn_batches(wh: Warehouse, done: set | None = None) -> list[str]:
     for d, bid in candidates:
         os.rename(d, os.path.join(os.path.dirname(d), f"_torn-{bid}-{time.time_ns()}"))
         _keys_desync(wh)
-        swept.append(bid)
+        if bid not in swept:
+            swept.append(bid)
+    # a batch that crashed after ``_write_batch_index`` left its partials
+    # (and maybe its ingest counters): they describe rows no records file
+    # holds any more, and ``info`` and the aggregates read the partials
+    for bid in swept:
+        for table in (METRICS_PARTIALS, METRICS_INGEST):
+            f = os.path.join(wh.path(table), f"part-{bid}.parquet")
+            if os.path.isfile(f):
+                os.remove(f)
     return swept
 
 
@@ -583,6 +608,53 @@ def _committed_keys(wh: Warehouse, ts_range: tuple | None = None) -> DataFrame |
     return keys.select(*DEDUP_KEY)
 
 
+def lookup_records(whs: list[Warehouse], table: str, record_id: str):
+    """The stored (ok) records of ``(table, record_id)`` in ``whs`` as a
+    pyarrow table of the ``get`` columns, stable-sorted by ``ts_millis``:
+    the reference's get through each segment's sorted header index
+    (SURVEY.md §3.2), on the calling thread, with no Spark job.
+
+    ``records_keys`` is the header index: its hits name the batches that
+    hold the key (a ``batch=archived`` hit stands for every archived batch,
+    whose keys ``rebuild_keys`` merged), and only those batches' records
+    directories are opened, with the key and ``status = 'ok'`` pushed into
+    the row-group scan. Error rows are not stored records: an
+    ``err_oversize`` row carries a table and an id, but the reference
+    rejects that record at write time (Storage.scala:19).
+
+    CEILING: the probe reads the key columns of every keys file on the
+    driver — O(committed keys) per get. ``archive`` merges the keys to one
+    file per day, which bounds the file count but not the bytes. The next
+    step at larger scale is a key-sorted keys layout whose row-group stats
+    prune the probe (ROADMAP 4b).
+    """
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    key = (pc.field("table") == table) & (pc.field("record_id") == record_id)
+    keys_layout = ds.partitioning(
+        pa.schema([("batch", pa.string()), ("day", pa.string())]), flavor="hive"
+    )
+    parts = [GET_SCHEMA.empty_table()]
+    for wh in whs:
+        if not wh.exists(RECORDS_KEYS):
+            continue
+        keys = ds.dataset(wh.path(RECORDS_KEYS), format="parquet", partitioning=keys_layout)
+        batches = set(keys.to_table(columns=["batch"], filter=key).column("batch").to_pylist())
+        if ARCHIVED_KEYS_BATCH in batches:
+            batches = (batches - {ARCHIVED_KEYS_BATCH}) | wh.archived_batches()
+        for b in sorted(batches):
+            d = os.path.join(wh.path(RECORDS), f"batch={b}")
+            if os.path.isdir(d):
+                parts.append(
+                    ds.dataset(d, format="parquet").to_table(
+                        columns=GET_SCHEMA.names, filter=key & (pc.field("status") == "ok")
+                    )
+                )
+    t = pa.concat_tables(parts)
+    return t.take(pc.sort_indices(t, [("ts_millis", "ascending")]))
+
+
 def _sink_salts(wh: Warehouse, salt: int) -> dict[str, int] | None:
     """Per-sink salt sized by the sink-volume distribution OBSERVED in the
     newest committed batch's partials — the north_rule's skew-adaptive salt
@@ -723,10 +795,12 @@ def _run_batch_inner(
     spark.conf.set("spark.sql.files.openCostInBytes", str(256 << 10))
 
     if source_format == "saved":
-        parsed = _saved_records(spark, files).withColumn("day", F.to_date("warc_ts"))
+        parsed = _saved_records(spark, files)
     else:
-        pages = read_parquet(spark, *files)
-        parsed = parse_pages(pages).withColumn("day", F.to_date("warc_ts"))
+        parsed = parse_pages(read_parquet(spark, *files))
+    # the UTC day of warc_ts, whatever the session time zone: the day the
+    # partials' 1-day window starts on, which ``info`` reports
+    parsed = parsed.withColumn("day", _ts_day(F.unix_millis("warc_ts")))
     parsed.persist(StorageLevel.MEMORY_AND_DISK)
 
     ok = parsed.filter(F.col("status") == "ok")
@@ -878,6 +952,9 @@ def _write_batch_index(spark: SparkSession, wh: Warehouse, batch_id: str, batch_
                 F.sum("n_bytes").alias("total_bytes"),
                 F.hll_sketch_agg("url").alias("url_sketch"),
             )
+            # epoch micros, not a datetime: collect() renders timestamps in
+            # the driver process's local zone, which pyarrow would read as UTC
+            .withColumn("window_start", F.unix_micros("window_start"))
             .collect()
         )
 
@@ -964,6 +1041,46 @@ def refresh_aggregates(spark: SparkSession, wh: Warehouse) -> None:
     )
     with open(os.path.join(wh.path(METRICS_WINDOWED), AGGREGATES_SOURCE), "w") as f:
         f.write(source)
+
+
+def segment_stats(whs: list[Warehouse]):
+    """``info``'s per-(sink, UTC day) segment stats of ``whs`` as a pyarrow
+    table (``INFO_SCHEMA``), ordered by (sink, day): the reference's stored
+    per-segment head stats (SURVEY.md §3.3: running min/max ts and count,
+    RecordStorage.scala:93-100; hash-index entry count, HeaderStorage :175),
+    read driver-side from the per-batch partials, with no Spark job and no
+    rescan of the records.
+
+    A partials row covers the rows one batch wrote into one (sink, 1-day
+    window) — every row, error rows included — and a window starts on a
+    UTC day boundary, the same day the records' ``day`` column holds. So
+    ``records = Σ n_rows``, ``min_ts``/``max_ts`` fold, and ``hashes``, the
+    non-null ``record_hash`` count, is ``Σ n_ok``: every stored ok row holds
+    a unique dedup key, and error rows have a null hash. A torn batch's
+    partials go with its records (``sweep_torn_batches``), and ``archive``
+    merges the partials without changing a row."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    cols = ["sink", "window_start", "n_rows", "n_ok", "min_ts", "max_ts"]
+    parts = [
+        pq.read_table(wh.path(METRICS_PARTIALS), columns=cols)
+        for wh in whs if wh.exists(METRICS_PARTIALS)
+    ]
+    if not parts:
+        return INFO_SCHEMA.empty_table()
+    t = pa.concat_tables(parts)
+    # window starts are whole UTC days: exact integer division
+    micros = t.column("window_start").cast(pa.int64())
+    day = pc.divide(micros, 86_400_000_000).cast(pa.int32()).cast(pa.date32())
+    g = t.append_column("day", day).group_by(["sink", "day"]).aggregate(
+        [("n_rows", "sum"), ("n_ok", "sum"), ("min_ts", "min"), ("max_ts", "max")]
+    )
+    out = pa.table(
+        [g["sink"], g["day"], g["n_rows_sum"], g["n_ok_sum"], g["min_ts_min"], g["max_ts_max"]],
+        schema=INFO_SCHEMA,
+    )
+    return out.sort_by([("sink", "ascending"), ("day", "ascending")], null_placement="at_start")
 
 
 # ``_``-prefixed, so no Parquet read of the windowed table sees it

@@ -2,8 +2,8 @@
 
 Round 1 verified the legacy-format parser (S3/C6-C9), record-id coercion
 (F7), and first-wins dedup (J1/A5) only through pytest goldens. These
-queries put the SAME code paths (``functions/parse.py`` mapInPandas over
-``parse_ref``, ``operators/dedup.py``) under the driver's DuckDB value
+queries put the SAME code paths (``functions/parse.py`` mapInArrow over
+``parse_vec``, ``operators/dedup.py``) under the driver's DuckDB value
 check:
 
 - ``parse_records``: synthesize legacy-format pages (the OldLogReader wire

@@ -242,7 +242,8 @@ def test_multimodal_decode_with_and_without_pil(monkeypatch):
 
 @pytest.mark.slow
 def test_multi_warehouse_get_fan_out(spark, dataset, warehouse, tmp_path_factory, capsys):
-    """CLI `get` unions results across warehouses (GetCommand.scala:29-36)."""
+    """CLI `get` unions results across warehouses (GetCommand.scala:29-36).
+    The same root given twice is one warehouse, so the second is a copy."""
     from log_server_spark.cli import main as cli_main
 
     sample = (
@@ -251,10 +252,12 @@ def test_multi_warehouse_get_fan_out(spark, dataset, warehouse, tmp_path_factory
         .limit(1)
         .collect()[0]
     )
+    copy = str(tmp_path_factory.mktemp("fan_out") / "wh")
+    shutil.copytree(warehouse.root, copy)
     rc = cli_main([
         "get",
         "--warehouse", warehouse.root,
-        "--warehouse", warehouse.root,  # same wh twice = bag union, 2x rows
+        "--warehouse", copy,  # two warehouses with the same rows = bag union, 2x rows
         "--table", sample["table"],
         "--id", sample["record_id"],
     ])
