@@ -92,6 +92,13 @@ def get_spark(
         # the near-dup pair and component joins, whose plans were built and
         # measured with it on
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
+        # the codegen cache holds 100 generated classes by default; one
+        # ingest batch generates ~95, so the cache's LRU evicted and
+        # recompiled 30-50 of them on every batch (~0.3-0.4 s of Janino per
+        # live batch, and the JIT then compiles each new class again). At
+        # 1000 a batch recompiles only the plans whose inlined literals
+        # changed (its ts-range filter on the keys)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # ship the malloc tuning to cluster executors too (local workers
         # already inherit the driver env set above)
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", os.environ["MALLOC_MMAP_THRESHOLD_"])

@@ -314,3 +314,20 @@ def test_keys_one_file_per_batch_day_and_replay_is_cross_batch_dup(spark, tmp_pa
     for d in day_dirs:
         assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
     assert sorted(r["record_id"] for r in wh.read(RECORDS).collect()) == ["1", "2", "3", "4"]
+
+
+def test_repeated_batch_compiles_no_generated_code(spark, tmp_path):
+    """A batch whose plans were all compiled before compiles no class again:
+    the codegen cache holds every class one ingest batch generates. (At
+    Spark's 100-entry default it evicted and recompiled dozens per batch.)"""
+    write_dataset(str(tmp_path / "data"), seed=SEED, n=300, num_files=1)
+    pages = str(tmp_path / "data" / "pages")
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles_of_one_ingest(wh_dir):
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        assert len(run_pipeline(spark, pages, wh_dir, batch_files=1)) == 1
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    compiles_of_one_ingest(str(tmp_path / "wh1"))  # compiles what the cache lacks
+    assert compiles_of_one_ingest(str(tmp_path / "wh2")) == 0
