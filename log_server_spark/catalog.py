@@ -130,16 +130,6 @@ class WarehouseLockTimeout(TimeoutError):
     pass
 
 
-class ArchivedBatchError(RuntimeError):
-    """Write attempted against an archived (read-only) batch.
-
-    The reference flips archived segments read-only and refuses subsequent
-    writes (HeaderStorage readOnly byte, HeaderStorage.scala:242-275;
-    enforcement BigStorage.scala:267-273). Anything that would rewrite an
-    archived batch's history — id-remap reprocessing, resume=False sweeps —
-    must fail loudly instead of silently rewriting compacted data."""
-
-
 class Warehouse:
     def __init__(self, root: str, spark: SparkSession):
         self.root = root
@@ -292,9 +282,10 @@ class Warehouse:
 
     # -- archived (read-only) batches ------------------------------------
     # One id per line in <root>/archived_batches; `archive` marks every
-    # compacted batch, and _drop_batch refuses to touch marked batches
-    # (the parquet-dir stand-in for the reference's readOnly header byte,
-    # HeaderStorage.scala:242-275).
+    # compacted batch (the parquet-dir stand-in for the reference's readOnly
+    # header byte, HeaderStorage.scala:242-275). Nothing rewrites a marked
+    # batch: `update` only ever writes new batch ids. `get` reads the set
+    # to resolve the keys that `archive` merged into `batch=archived`.
 
     def archived_batches(self) -> set[str]:
         p = os.path.join(self.root, "archived_batches")
@@ -303,13 +294,11 @@ class Warehouse:
         with open(p) as f:
             return {line.strip() for line in f if line.strip()}
 
-    def mark_archived(self, batch_ids, unmark: bool = False) -> set[str]:
-        """Add (or remove) batch ids in the read-only set; atomic replace."""
-        ids = self.archived_batches()
-        ids = ids - set(batch_ids) if unmark else ids | set(batch_ids)
+    def mark_archived(self, batch_ids) -> None:
+        """Add batch ids to the read-only set; atomic replace."""
+        ids = self.archived_batches() | set(batch_ids)
         p = os.path.join(self.root, "archived_batches")
         tmp = f"{p}.tmp{os.getpid()}"
         with open(tmp, "w") as f:
             f.write("".join(f"{i}\n" for i in sorted(ids)))
         os.replace(tmp, p)
-        return ids

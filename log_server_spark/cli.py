@@ -106,9 +106,10 @@ def cmd_archive(args) -> int:
     every segment and mark it read-only, BigStorage.scala:338-350): rewrite
     each (batch, sink) records partition into one zstd-6 file, mark every
     batch read-only, merge the keys to one file per day and the
-    bookkeeping to one file per table. ``--unmark`` makes batches writable
-    again (their keys partitions are rebuilt) and does nothing else. The
-    records layout is unchanged, so later ingests append to it."""
+    bookkeeping to one file per table. There is no way back: ``update``
+    never writes a committed batch id, so an archived batch stays as it is.
+    The records layout is unchanged, so later ingests append new batches
+    to it."""
     import glob
     import shutil
 
@@ -125,17 +126,6 @@ def cmd_archive(args) -> int:
 
     spark, owned = _session(args.master)
     wh = Warehouse(args.warehouse, spark)
-    if args.unmark is not None:
-        with wh.lock():
-            ids = args.unmark or sorted(wh.archived_batches())
-            left = wh.mark_archived(ids, unmark=True)
-            # the unmarked batches get their per-batch keys partitions back,
-            # so a later drop or rebuild of one removes its keys too
-            rebuild_keys(wh)
-        print(json.dumps({"unmarked": sorted(ids), "still_archived": sorted(left)}))
-        if owned:
-            spark.stop()
-        return 0
     records_dir = wh.path(RECORDS)
     tmp_dir = records_dir + ".compact"
     with wh.lock():
@@ -177,9 +167,9 @@ def cmd_archive(args) -> int:
         # records.old present, and the next lock acquisition restores or
         # discards records.old
         wh.swap_in(RECORDS, tmp_dir)
-        # compacted layout is history: flip every batch read-only so a later
-        # update with remapped ids fails loudly instead of rewriting it
-        # (the reference's archive gzips segments AND marks them readOnly)
+        # compacted layout is history: mark every batch read-only (the
+        # reference's archive gzips segments AND marks them readOnly); get
+        # resolves the merged batch=archived keys through this set
         archived = sorted(
             os.path.basename(d).split("=", 1)[1]
             for d in glob.glob(os.path.join(records_dir, "batch=*"))
@@ -218,7 +208,10 @@ def main(argv: list[str] | None = None) -> int:
     p = sub.add_parser("update", help="ingest pages: parse, dedup, enrich, route, aggregate")
     p.add_argument("--warehouse", required=True)
     p.add_argument("--pages-dir", required=True)
-    p.add_argument("--batch-files", type=int, default=4)
+    p.add_argument(
+        "--batch-files", type=int, default=4,
+        help="units per new batch; committed batches keep the units they hold",
+    )
     p.add_argument("--salt", type=int, default=8)
     p.add_argument(
         "--format", choices=["pages", "saved"], default="pages",
@@ -243,10 +236,6 @@ def main(argv: list[str] | None = None) -> int:
         "archive", help="compact records, mark batches read-only (gzip-segments analogue)"
     )
     p.add_argument("--warehouse", required=True)
-    p.add_argument(
-        "--unmark", nargs="*", metavar="BATCH",
-        help="make batches writable again (no ids = all) and exit",
-    )
     p.set_defaults(fn=cmd_archive)
 
     args = ap.parse_args(argv)

@@ -11,8 +11,13 @@ never delete the immutable input, we record completion):
 - the warehouse is advisory-locked for the whole run (db.lock with a 60 s
   wait, Directory.scala:140-170, RecordStorage.scala:40) so concurrent
   updates cannot interleave torn-write cleanup with live writes;
-- input files are processed in sorted path order (O4 determinism,
-  NewLogReader.scala:44-48) in batches of ``batch_files``;
+- a unit is an input file, known by its absolute path. Each run plans only
+  the units no committed lineage row holds, in sorted path order (O4
+  determinism, NewLogReader.scala:44-48), in batches of ``batch_files``
+  numbered on from the highest committed id. A committed batch is never
+  compared with the listing again: deleting an ingested unit (as the
+  reference does) loses nothing, and a late, early-sorting unit is one new
+  batch;
 - each batch writes records under ``records/batch=bNNNNN/sink=…`` and its
   dedup-key projection under ``records_keys/batch=bNNNNN/day=…`` — the
   ``.record`` / ``.hash`` file split of the reference's segment layout
@@ -27,10 +32,10 @@ never delete the immutable input, we record completion):
 - per-batch bookkeeping (partial aggregates, ingest counters, lineage) is
   written driver-side as ONE file per batch named by batch id, so a
   reprocessed batch overwrites its own rows — idempotent by construction;
-- the lineage rows are written ONLY after every data write succeeds. On
-  resume a batch is skipped iff its lineage unit list EQUALS the planned
-  unit list (a changed --batch-files or a newly landed early-sorting file
-  remaps ids; such batches are reprocessed, not silently skipped);
+- the lineage rows are written ONLY after every data write succeeds, so
+  a unit is committed exactly when its batch's data is; ``update`` never
+  writes a committed batch id, which is what keeps archived batches
+  read-only;
 - a batch directory without a matching lineage row is a torn write (the
   reference's truncated-tail recovery, RecordStorage.scala:161-177): both
   its records and keys partitions are dropped and the batch reruns. With
@@ -85,12 +90,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from log_server_spark.catalog import (
-    ArchivedBatchError,
-    Warehouse,
-    first_parquet_file,
-    read_parquet,
-)
+from log_server_spark.catalog import Warehouse, first_parquet_file, read_parquet
 from log_server_spark.functions.parse import parse_pages
 from log_server_spark.operators.dedup import DEDUP_KEY, anti_join_committed, split_duplicates
 from log_server_spark.operators.enrich import enrich
@@ -146,11 +146,15 @@ class BatchResult:
 
 
 def _list_units(pages_dir: str, source_format: str = "pages") -> list[str]:
+    """The units under ``pages_dir`` as sorted absolute paths: a unit's
+    identity, so one dir named relatively and absolutely is one set of
+    units, and two dirs holding equally named files are two. An existing
+    dir with no unit is the reference's state after it deletes its ingested
+    sources and plans nothing; a missing dir is a wrong path."""
+    if not os.path.isdir(pages_dir):
+        raise FileNotFoundError(f"no input directory {pages_dir}")
     pat = "*.parquet" if source_format == "pages" else SAVED_GLOB
-    units = sorted(glob.glob(os.path.join(pages_dir, pat)))
-    if not units:
-        raise FileNotFoundError(f"no {pat} files under {pages_dir}")
-    return units
+    return sorted(glob.glob(os.path.join(os.path.abspath(pages_dir), pat)))
 
 
 def _saved_records(spark: SparkSession, files: list[str]) -> DataFrame:
@@ -166,10 +170,8 @@ def _opt_lookup(spark: SparkSession, path: str, schema: str) -> DataFrame:
 
 
 def _committed_batches(wh: Warehouse) -> dict[str, frozenset]:
-    """batch id -> the exact unit set its lineage committed. Resume must
-    compare unit LISTS, not ids: ids are positional in the sorted file list,
-    so a changed batching or a newly landed early-sorting file silently
-    remaps ids to different file sets.
+    """batch id -> the unit set its lineage committed: the units a run
+    does not plan again, and the ids new batches are numbered after.
 
     Read driver-side with pyarrow (hidden ``_``/``.`` files skipped, as a
     Spark read skips them): the table is one tiny file per batch, and a
@@ -202,89 +204,6 @@ def _committed_batches(wh: Warehouse) -> dict[str, frozenset]:
     for b, u in zip(t.column("batch").to_pylist(), t.column("unit").to_pylist()):
         out.setdefault(b, set()).add(u)
     return {b: frozenset(u) for b, u in out.items()}
-
-
-def _rewrite_without_batch(wh: Warehouse, table: str, batch_id: str) -> None:
-    """Drop one batch's rows from the bookkeeping files NOT named by batch
-    id — in practice ``archive``'s merged ``part-archive-*`` file. A batch
-    made writable again by ``archive --unmark`` still has its lineage,
-    ingest and partials rows in that merged file; dropping the batch must
-    remove them there, or a rebuilt batch would count twice and its stale
-    lineage would fail unit-list validation on every later resume.
-    Driver-side pyarrow rewrite — these tables are O(batches) rows.
-
-    Only merged files (not ``part-b*.parquet``) are read and rewritten:
-    folding per-batch files into the merged rewrite file would break
-    ``write_small``'s overwrite-idempotence — a reprocessed batch would
-    overwrite its own per-batch file while its old rows also lived on in the
-    merged file, double-counting forever.
-
-    Crash-recoverable: the filtered replacement is fully built in a sibling
-    ``<table>.rewrite`` dir (per-batch files hardlinked across unchanged),
-    then swapped in with the same rename protocol as ``archive`` (table ->
-    table.old; .rewrite -> table; rm table.old). A crash at any point leaves
-    either the old table intact or the swap completable — ``Warehouse``
-    recovery on lock acquisition finishes it. The pre-fix ordering (delete
-    every old file, then write the filtered one) wiped the whole table if
-    the process died in between.
-    """
-    import re
-
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    d = wh.path(table)
-    files = sorted(glob.glob(os.path.join(d, "*.parquet")))
-    per_batch_re = re.compile(r"part-b\d{5}\.parquet$")
-    merged = [f for f in files if not per_batch_re.search(os.path.basename(f))]
-    if not merged:
-        return
-    t = pq.read_table(merged)
-    kept = t.filter(pc.field("batch") != batch_id)
-    if kept.num_rows == t.num_rows:
-        return
-    tmp = d + ".rewrite"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
-    for f in files:
-        if f not in merged:
-            os.link(f, os.path.join(tmp, os.path.basename(f)))
-    if kept.num_rows or len(merged) == len(files):
-        # an empty filtered table still gets a (0-row, schema-bearing) file
-        # when it would otherwise leave the dir empty, so readers see a
-        # valid parquet dir rather than a vanished table
-        pq.write_table(kept, os.path.join(tmp, f"part-rewrite-{time.time_ns():020d}.parquet"))
-    wh.swap_in(table, tmp)
-
-
-def _drop_batch(wh: Warehouse, batch_id: str) -> None:
-    """Remove every trace of a batch: data partitions + per-batch bookkeeping
-    files. Used for torn writes and for batches whose lineage no longer
-    matches the planned unit layout (e.g. --batch-files changed).
-
-    Archived batches are read-only: dropping one (an id-remap rebuild or a
-    resume=False sweep would follow) must fail loudly rather than rewrite
-    compacted history (HeaderStorage.scala:242-275 semantics)."""
-    if batch_id in wh.archived_batches():
-        raise ArchivedBatchError(
-            f"batch {batch_id} is archived (read-only); refusing to rewrite it."
-            " Run `archive --unmark` on this warehouse to make it writable again."
-        )
-    for table in (RECORDS, RECORDS_KEYS):
-        d = os.path.join(wh.path(table), f"batch={batch_id}")
-        if os.path.isdir(d):
-            shutil.rmtree(d)
-    _keys_desync(wh)
-    for table in (LINEAGE, METRICS_PARTIALS, METRICS_INGEST):
-        f = os.path.join(wh.path(table), f"part-{batch_id}.parquet")
-        if os.path.isfile(f):
-            os.remove(f)
-        if os.path.isdir(wh.path(table)):
-            # ALSO sweep the batch's rows out of merged bookkeeping files
-            # (an unmarked archived batch lives in archive's merged file):
-            # stale rows would re-poison unit-list validation (and
-            # double-count ingest metrics) on every subsequent resume
-            _rewrite_without_batch(wh, table, batch_id)
 
 
 KEYS_MARKER = "records_keys.bucketed"
@@ -367,8 +286,10 @@ def _keys_table(wh: Warehouse) -> str:
     # filesystem-level partition drop invalidates the cache
     tag = f"{spark.sparkContext.applicationId}:{name}"
     if tag not in _KEYS_SYNCED:
-        _create_keys_table(spark, name, keys_dir, zstd_level=1)
+        # the location exists first, or the table's creation logs a
+        # FileNotFoundException trace on a new warehouse
         os.makedirs(keys_dir, exist_ok=True)
+        _create_keys_table(spark, name, keys_dir, zstd_level=1)
         spark.sql(f"MSCK REPAIR TABLE {name} SYNC PARTITIONS")
         # drop any cached file listing from before a filesystem-level change
         # (partition drop, archive rebuild swap)
@@ -410,10 +331,8 @@ def sweep_torn_batches(wh: Warehouse, done: set | None = None) -> list[str]:
       every query but hand-recoverable after an operator mistake. They are
       tiny (torn batches are rare) and can be purged manually."""
     # the missing-lineage rail below applies only when WE derived the
-    # committed set: a caller handing in `done` explicitly (run_pipeline)
-    # has already reasoned about lineage — e.g. a batch-id remap just
-    # _drop_batch'ed every committed batch, legitimately emptying the
-    # lineage table right before this sweep
+    # committed set: run_pipeline hands in `done` because a torn FIRST
+    # batch leaves batch dirs and no lineage table, and must be swept
     derived_done = done is None
     if done is None:
         done = set(_committed_batches(wh))
@@ -449,41 +368,33 @@ def sweep_torn_batches(wh: Warehouse, done: set | None = None) -> list[str]:
     return swept
 
 
-def rebuild_keys(wh: Warehouse) -> dict | None:
+def rebuild_keys(wh: Warehouse) -> dict:
     """Rewrite ``records_keys`` from the records table's ok rows (the keys
     table is exactly their projection, ``_write_keys``, once torn batches
-    are swept): ``batch=archived`` for batches marked read-only, else the
-    batch's own id. ``archive`` calls it after marking — one file per day
-    instead of O(batches x days), the index-file leg of archiving every
-    segment file (BigStorage.scala:338-350) — and ``archive --unmark``
-    after unmarking, so a writable batch owns its keys again (a surviving
-    ``batch=archived`` partition would anti-join every re-ingested record
-    away). A day whose on-disk keys exceed ``TARGET_FILE_BYTES`` is spread
-    over ``ceil(bytes / TARGET_FILE_BYTES)`` files by a ``record_hash``
-    modulus.
+    are swept) into the one ``batch=archived`` partition. ``archive`` calls
+    it after marking every batch of the records read-only — one file per
+    day instead of O(batches x days), the index-file leg of archiving every
+    segment file (BigStorage.scala:338-350). A day whose on-disk keys
+    exceed ``TARGET_FILE_BYTES`` is spread over ``ceil(bytes /
+    TARGET_FILE_BYTES)`` files by a ``record_hash`` modulus.
 
     Crash-safe via the standard swap protocol: the new layout is fully
     built in ``records_keys.compact``, verified by row count, then swapped
     in; ``Warehouse`` lock-acquisition recovery finishes or discards any
     interrupted state. Caller must hold the warehouse lock.
     """
-    if not wh.exists(RECORDS):
-        return None
     _check_keys_marker(wh)
     spark = wh.spark
     keys_dir = wh.path(RECORDS_KEYS)
     tmp = keys_dir + ".compact"
     shutil.rmtree(tmp, ignore_errors=True)
-    archived = sorted(wh.archived_batches())
-    batch = F.col("batch")
-    if archived:
-        batch = F.when(batch.isin(archived), F.lit(ARCHIVED_KEYS_BATCH)).otherwise(batch)
     keys = (
         wh.read(RECORDS)
         .filter(F.col("status") == "ok")
         .select(
             "table", "record_id", "record_hash", "ts_millis",
-            batch.alias("batch"), _ts_day(F.col("ts_millis")).alias("day"),
+            F.lit(ARCHIVED_KEYS_BATCH).alias("batch"),
+            _ts_day(F.col("ts_millis")).alias("day"),
         )
     )
     day_bytes: dict[str, int] = {}
@@ -529,11 +440,13 @@ def compact_bookkeeping(wh: Warehouse, archived_ids: set[str]) -> dict:
     per table (lineage / ingest counters / partials): the index-file leg of
     the reference's archive-everything (Directory.scala:129-138).
 
-    Per-batch file granularity exists so a REPROCESSED batch overwrites its
-    own rows; archived batches are read-only and can never be reprocessed,
-    so their rows can fold into a single merged file. Live (unarchived)
-    batches keep their per-batch files. Same .rewrite + swap protocol as
-    ``_rewrite_without_batch`` (crash-recoverable). Caller holds the lock.
+    Per-batch file granularity exists so a torn batch's rerun overwrites
+    its own partials and counters; a committed batch never reruns, so the
+    archived batches' rows can fold into a single merged file. Live
+    (unarchived) batches keep their per-batch files. Crash-recoverable: the
+    merged table is built in ``<table>.rewrite`` (the kept files
+    hardlinked across) and swapped in with ``Warehouse.swap_in``, which
+    lock acquisition finishes or rolls back. Caller holds the lock.
     """
     import re
 
@@ -1119,7 +1032,9 @@ def run_pipeline(
     source_format: str = "pages",
 ) -> list[BatchResult]:
     wh = Warehouse(warehouse_root, spark)
-    base = os.path.dirname(pages_dir.rstrip("/"))
+    # absolute, like the units: the JVM resolves a relative path against its
+    # own working directory, not this process's
+    base = os.path.dirname(os.path.abspath(pages_dir))
     # lookup dims are optional (a `.saved` migration dir has none): a
     # missing file becomes an empty dim, and the left joins keep NULLs
     lang_lookup = _opt_lookup(
@@ -1131,49 +1046,33 @@ def run_pipeline(
         "domain string, category string, country string, is_error_prone boolean",
     )
 
-    units = _list_units(pages_dir, source_format)
-    batches = [
-        (f"b{bi:05d}", units[i : i + batch_files])
-        for bi, i in enumerate(range(0, len(units), batch_files))
-    ]
+    listed = _list_units(pages_dir, source_format)
 
     results: list[BatchResult] = []
     with wh.lock(timeout=lock_timeout):
+        done = _committed_batches(wh)
+        if done and not resume:
+            raise RuntimeError(
+                f"warehouse {wh.root} holds {len(done)} committed batches and resume=False "
+                "asks for a fresh ingest: committed batches are never rewritten, "
+                "so ingest into a new warehouse"
+            )
         # refuses an unmarked warehouse before anything is written, and
         # marks an empty one with the only keys layout
         _check_keys_marker(wh)
-        done = _committed_batches(wh)
-        if not resume:
-            # a fresh (non-resume) run must drop each batch's LINEAGE AND
-            # METRICS along with its data, batch by batch — if it only swept
-            # the data dirs, a crash (or max_batches cutoff) mid-rerun would
-            # leave later batches lineage-committed with no data, and a
-            # subsequent resume run would skip them forever (silent loss)
-            for bid in sorted(done):
-                _drop_batch(wh, bid)
-            done = {}
-        # batch ids are positional in the sorted file list: a changed
-        # --batch-files or a newly landed early-sorting file remaps them.
-        # Every lineage batch that is absent from the plan OR committed a
-        # different unit set must be dropped ENTIRELY and UP FRONT — before
-        # any reprocessing, or an earlier batch would anti-join against the
-        # stale keys of a later mismatched batch and lose those records
-        # when the stale batch is subsequently removed.
-        planned = dict(batches)
-        for bid in sorted(done):
-            if bid not in planned or done[bid] != frozenset(planned[bid]):
-                _drop_batch(wh, bid)
-                done.pop(bid)
-        # sweep TORN batch dirs (no lineage row at all) up front too: left
-        # in place, an earlier batch would anti-join against the stale
-        # uncommitted keys and drop rows that vanish for good when the torn
-        # batch is later rebuilt — silent data loss under id remapping
+        # a committed unit never moves: plan only the units no lineage row
+        # holds, numbered on from the highest committed id
+        held = set().union(*done.values())
+        units = [u for u in listed if u not in held]
+        first = 1 + max((int(b[1:]) for b in done), default=-1)
+        batches = [
+            (f"b{first + k:05d}", units[i : i + batch_files])
+            for k, i in enumerate(range(0, len(units), batch_files))
+        ]
+        # sweep TORN batch dirs (no lineage row) before any batch runs, so no
+        # anti-join reads their uncommitted keys
         sweep_torn_batches(wh, set(done))
-        for batch_id, files in batches:
-            if batch_id in done:
-                continue
-            if max_batches is not None and len(results) >= max_batches:
-                break
+        for batch_id, files in batches[:max_batches]:
             results.append(
                 run_batch(
                     spark, wh, batch_id, files, lang_lookup, domain_lookup,

@@ -40,3 +40,33 @@ def anti_join_plan(spark):
         return text
 
     return plan
+
+
+@pytest.fixture
+def lineage_invariants():
+    """Checks a warehouse's lineage against its data dirs, read with pyarrow
+    rather than through the pipeline: no unit is held by two committed
+    batches, the committed ids run b00000, b00001, ... with no gap, and
+    every ``batch=`` dir of records and records_keys other than
+    ``archived`` belongs to a committed batch. Returns batch -> units."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    def check(root):
+        lineage = os.path.join(root, "lineage")
+        rows = pq.read_table(lineage).to_pylist() if os.path.isdir(lineage) else []
+        batches: dict[str, list[str]] = {}
+        for r in rows:
+            assert r["status"] == "committed", r
+            batches.setdefault(r["batch"], []).append(r["unit"])
+        units = [u for us in batches.values() for u in us]
+        assert len(units) == len(set(units)), batches
+        assert sorted(batches) == [f"b{i:05d}" for i in range(len(batches))], sorted(batches)
+        for table in ("records", "records_keys"):
+            for d in glob.glob(os.path.join(root, table, "batch=*")):
+                bid = os.path.basename(d).split("=", 1)[1]
+                assert bid == "archived" or bid in batches, d
+        return batches
+
+    return check

@@ -331,3 +331,24 @@ def test_repeated_batch_compiles_no_generated_code(spark, tmp_path):
 
     compiles_of_one_ingest(str(tmp_path / "wh1"))  # compiles what the cache lacks
     assert compiles_of_one_ingest(str(tmp_path / "wh2")) == 0
+
+
+def test_keys_table_location_exists_before_it_is_created(spark, tmp_path, monkeypatch):
+    """The first ingest into a new warehouse creates the keys directory
+    before it registers the table there: a table created on a missing
+    location logs a FileNotFoundException trace."""
+    from log_server_spark.plans import pipeline as pl
+
+    created = []
+    create = pl._create_keys_table
+
+    def checked(spark, name, location, zstd_level):
+        assert os.path.isdir(location), location
+        created.append(location)
+        create(spark, name, location, zstd_level)
+
+    monkeypatch.setattr(pl, "_create_keys_table", checked)
+    write_dataset(str(tmp_path / "data"), seed=SEED, n=50, num_files=1)
+    wh_dir = str(tmp_path / "wh")
+    assert len(run_pipeline(spark, str(tmp_path / "data" / "pages"), wh_dir, batch_files=1)) == 1
+    assert created == [os.path.join(wh_dir, "records_keys")]

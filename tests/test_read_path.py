@@ -318,10 +318,10 @@ def test_read_path_refuses_frames_it_cannot_answer(spark, warehouse):
     assert info(both).collect() == info(records).collect()
 
 
-def test_get_and_info_through_archive_and_unmark(spark, warehouse, capsys):
-    """After ``archive`` the keys of every batch sit in ``batch=archived``;
-    after ``archive --unmark`` each batch owns its keys again. get answers
-    the same rows at each step, and info equals a records rescan."""
+def test_get_and_info_through_archive(spark, warehouse, capsys):
+    """After ``archive`` the keys of every batch sit in ``batch=archived``.
+    get answers the same rows as before, and info equals a records
+    rescan."""
     import json
 
     from log_server_spark.cli import main as cli_main
@@ -341,11 +341,6 @@ def test_get_and_info_through_archive_and_unmark(spark, warehouse, capsys):
     assert cli_main(["archive", "--warehouse", root]) == 0
     assert json.loads(capsys.readouterr().out)["archived"] == ["b00000", "b00001"]
     assert [d for d in os.listdir(wh.path("records_keys")) if "=" in d] == ["batch=archived"]
-    assert answers() == before
-    assert info(wh.read(RECORDS)).collect() == _info_rescan(wh)
-    assert cli_main(["archive", "--warehouse", root, "--unmark"]) == 0
-    capsys.readouterr()
-    assert wh.archived_batches() == set()
     assert answers() == before
     assert info(wh.read(RECORDS)).collect() == _info_rescan(wh)
 

@@ -1,5 +1,6 @@
 """Round-2 pipeline hardening: keys-table pruning, incremental aggregates,
-warehouse lock, resume unit-validation, archive crash recovery, PIL branch."""
+warehouse lock, resume from committed unit lists, archive crash recovery,
+PIL branch."""
 
 import glob
 import os
@@ -153,25 +154,24 @@ def test_stale_lock_from_dead_pid_is_stolen(spark, dataset, warehouse):
 
 @pytest.mark.slow
 def test_resume_revalidates_unit_lists(spark, dataset, warehouse):
-    """Changing --batch-files remaps positional batch ids; resume must
-    reprocess (and drop orphans) instead of silently skipping remapped
-    batches — ending in the exact same record set."""
+    """Resume plans from the committed unit lists, not from positions: a
+    changed --batch-files on a fully committed warehouse has nothing to
+    do, and the record set, the batches and their keys stay as they were."""
     key = lambda r: (r["table"], r["record_id"], r["ts_millis"] or -1, r["seq"], r["url"])
     before = sorted(key(r) for r in warehouse.read(RECORDS).collect())
     results = run_pipeline(
         spark, os.path.join(dataset, "pages"), warehouse.root, batch_files=4
     )
-    assert results, "remapped batches must be reprocessed"
+    assert results == []
     after = sorted(key(r) for r in warehouse.read(RECORDS).collect())
     assert after == before
-    # no orphan batch dirs: records batches == lineage batches == plan
+    # records batches == lineage batches == the original plan
     batches = {os.path.basename(d) for d in glob.glob(os.path.join(warehouse.path(RECORDS), "batch=*"))}
-    assert batches == {"batch=b00000", "batch=b00001"}
+    assert batches == {"batch=b00000", "batch=b00001", "batch=b00002"}
     # keys table stays 1:1 with records
     assert warehouse.read(RECORDS_KEYS).count() == warehouse.read(RECORDS).filter(F.col("status") == "ok").count()
-    # partials carry no stale batches either
     pb = {r["batch"] for r in warehouse.read(METRICS_PARTIALS).select("batch").distinct().collect()}
-    assert pb == {"b00000", "b00001"}
+    assert pb == {"b00000", "b00001", "b00002"}
 
 
 @pytest.mark.slow
@@ -268,9 +268,9 @@ def test_multi_warehouse_get_fan_out(spark, dataset, warehouse, tmp_path_factory
 
 @pytest.mark.slow
 def test_torn_batch_under_remap_loses_nothing(spark, dataset, tmp_path_factory):
-    """Review finding: a TORN batch's keys dirs must be swept before any
-    earlier batch runs, or under a batch-id remap the earlier batch
-    anti-joins against stale uncommitted keys and those rows vanish."""
+    """A TORN batch's dirs are swept before any batch runs, so no batch
+    anti-joins against its stale uncommitted keys; its units rerun as one
+    new batch under the changed --batch-files."""
     from pyspark.sql import functions as F  # noqa: F811
 
     pages = os.path.join(dataset, "pages")
@@ -282,8 +282,9 @@ def test_torn_batch_under_remap_loses_nothing(spark, dataset, tmp_path_factory):
     # torn state: last batch has data + keys but NO lineage row
     os.remove(os.path.join(wh.path("lineage"), "part-b00002.parquet"))
     os.remove(os.path.join(wh.path(METRICS_PARTIALS), "part-b00002.parquet"))
-    # remap: 6 units -> 2 batches; torn b00002's dirs must not poison b00000/1
-    run_pipeline(spark, pages, wh_dir, batch_files=4)
+    # the torn batch's 2 units rerun as one batch of up to 4 units
+    results = run_pipeline(spark, pages, wh_dir, batch_files=4)
+    assert [(r.batch, len(r.files)) for r in results] == [("b00002", 2)]
     got = sorted(key(r) for r in wh.read(RECORDS).collect())
     assert got == want
     assert wh.read(RECORDS_KEYS).count() == wh.read(RECORDS).filter(F.col("status") == "ok").count()
