@@ -23,6 +23,8 @@ from pyspark.sql.types import StructType
 
 # footer key where Spark's parquet writer stores the exact data StructType
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+# suffix of the hidden temp file ``Warehouse.write_small`` renames into place
+_SMALL_TMP = ".tmp"
 
 
 def _visible(name: str) -> bool:
@@ -136,13 +138,16 @@ class Warehouse:
         self.spark = spark
         os.makedirs(root, exist_ok=True)
 
-    def _recover_interrupted_archive(self) -> None:
+    def _recover_interrupted_writes(self) -> None:
         """Finish any crashed table swap (``archive``'s records compaction or
         a bookkeeping rewrite, see ``swap_in``): the swap protocol is
         rename(T -> T.old); rename(T.<tmp> -> T); rm(T.old) — a crash leaves
         either both T and T.old (drop the old copy) or only T.old (restore
         it). Stale build dirs (``*.rewrite``/``*.compact`` next to a live
         table) are incomplete builds and are discarded.
+
+        A hidden ``write_small`` temp file is a small-table write that
+        crashed before its rename: the table never held it, so it goes.
 
         Runs on LOCK ACQUISITION, never unlocked: an unlocked recovery could
         "finish" a swap another process is legitimately mid-way through
@@ -158,6 +163,8 @@ class Warehouse:
             for tmp in glob.glob(os.path.join(self.root, "*" + suffix)):
                 if os.path.isdir(tmp[: -len(suffix)]):
                     shutil.rmtree(tmp)
+        for tmp in glob.glob(os.path.join(self.root, "*", ".*" + _SMALL_TMP)):
+            os.remove(tmp)
 
     def swap_in(self, name: str, build_dir: str) -> None:
         """Atomically-enough replace table ``name`` with the fully-built
@@ -221,7 +228,7 @@ class Warehouse:
                     ) from None
                 time.sleep(poll)
         try:
-            self._recover_interrupted_archive()
+            self._recover_interrupted_writes()
             yield self
         finally:
             with contextlib.suppress(FileNotFoundError):
@@ -249,6 +256,13 @@ class Warehouse:
         Pass ``filename`` (e.g. the batch id) to make the write idempotent:
         a reprocessed batch overwrites its own bookkeeping file instead of
         appending a duplicate row.
+
+        Crash-atomic: the file is written under a hidden temp name in the
+        same directory (skipped by Spark, pyarrow and ``_visible``) and
+        renamed into place, so a crash leaves either no file or the whole
+        one, never a torn file under the final name. The lineage file is
+        a batch's commit record, so a crash before its rename leaves an
+        uncommitted batch, which the torn-batch sweep reruns.
         """
         import time as _time
 
@@ -273,7 +287,10 @@ class Warehouse:
         d = self.path(name)
         os.makedirs(d, exist_ok=True)
         tag = filename if filename is not None else f"{_time.time_ns():020d}"
-        pq.write_table(tbl, os.path.join(d, f"part-{tag}.parquet"))
+        final = os.path.join(d, f"part-{tag}.parquet")
+        tmp = os.path.join(d, f".part-{tag}.parquet{_SMALL_TMP}")
+        pq.write_table(tbl, tmp)
+        os.replace(tmp, final)
 
     def drop(self, name: str) -> None:
         p = self.path(name)

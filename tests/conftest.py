@@ -43,6 +43,21 @@ def anti_join_plan(spark):
 
 
 @pytest.fixture
+def scan_root_dirs():
+    """Sorted local root paths of the one file scan at the bottom of a
+    frame's optimized plan (a chain of one-child nodes over the scan)."""
+
+    def roots(df):
+        node = df._jdf.queryExecution().optimizedPlan()
+        while node.children().size():
+            node = node.children().apply(0)
+        paths = node.relation().location().rootPaths()
+        return sorted(paths.apply(i).toUri().getPath() for i in range(paths.size()))
+
+    return roots
+
+
+@pytest.fixture
 def lineage_invariants():
     """Checks a warehouse's lineage against its data dirs, read with pyarrow
     rather than through the pipeline: no unit is held by two committed

@@ -173,3 +173,73 @@ def test_resume_false_refuses_a_committed_warehouse(spark, tmp_path, lineage_inv
         run_pipeline(spark, feed.pages, root, batch_files=1, resume=False)
     assert _tree(root) == before
     lineage_invariants(root)
+
+
+def test_a_session_sees_batches_another_process_committed(spark, tmp_path, lineage_invariants):
+    """The committed side of the anti-join is read from the files on every
+    update: a long-lived session dedups against a batch that another
+    process committed into the same warehouse after the session's first
+    update (the reference reads its hash indexes from disk under the
+    warehouse lock, Directory.scala:140-170)."""
+    feed = _Feed(tmp_path / "data")
+    root, other = str(tmp_path / "wh"), str(tmp_path / "wh_other")
+    feed.land(0)
+    assert len(run_pipeline(spark, feed.pages, root, batch_files=1)) == 1
+    shutil.copytree(root, other)
+    unit = feed.land(1)
+    (first,) = run_pipeline(spark, feed.pages, other, batch_files=1)
+    assert first.batch == "b00001"
+    # what the other process's commit of b00001 leaves in the warehouse
+    for table in ("records", "records_keys"):
+        shutil.copytree(
+            os.path.join(other, table, "batch=b00001"), os.path.join(root, table, "batch=b00001")
+        )
+    for table in ("lineage", "metrics_ingest", "metrics_partials"):
+        shutil.copy(os.path.join(other, table, "part-b00001.parquet"), os.path.join(root, table))
+    shutil.copyfile(unit, os.path.join(feed.pages, "arrival-000002.parquet"))
+    feed.model.apply(feed.history[-1])
+    (replay,) = run_pipeline(spark, feed.pages, root, batch_files=1)
+    n_ok = first.added + first.duplicates
+    assert (replay.batch, replay.added, replay.duplicates) == ("b00002", 0, n_ok)
+    lineage_invariants(root)
+    _assert_records_match(root, feed.model)
+
+
+@pytest.mark.parametrize("mode", ["before_write", "half_written"])
+def test_a_crash_in_the_lineage_write_reruns_the_batch(
+    spark, tmp_path, monkeypatch, lineage_invariants, mode
+):
+    """A crash while a batch's lineage file is written leaves the batch
+    uncommitted, never a torn lineage file: the next update reruns it."""
+    import pyarrow.parquet as pq
+
+    feed = _Feed(tmp_path / "data")
+    root = str(tmp_path / "wh")
+    feed.land(0)
+    assert len(run_pipeline(spark, feed.pages, root, batch_files=1)) == 1
+    unit = feed.land(1)
+    write_table = pq.write_table
+
+    def crash_in_lineage(table, where, **kw):
+        if os.path.basename(os.path.dirname(where)) == "lineage":
+            if mode == "half_written":
+                write_table(table, where, **kw)
+                with open(where, "r+b") as f:
+                    f.truncate(40)
+            raise OSError("crashed while writing lineage")
+        write_table(table, where, **kw)
+
+    monkeypatch.setattr(pq, "write_table", crash_in_lineage)
+    with pytest.raises(OSError, match="crashed"):
+        run_pipeline(spark, feed.pages, root, batch_files=1)
+    monkeypatch.undo()
+
+    results = run_pipeline(spark, feed.pages, root, batch_files=1)
+    assert [(r.batch, r.files) for r in results] == [("b00001", [unit])]
+    lineage_invariants(root)
+    _assert_records_match(root, feed.model)
+    hidden = [
+        os.path.join(d, f) for d, _, fs in os.walk(root) for f in fs
+        if f.startswith(".") and not f.endswith(".crc")
+    ]
+    assert hidden == []

@@ -212,28 +212,30 @@ def test_archived_batches_are_read_only(spark, dataset, tmp_path_factory, lineag
 
 @pytest.mark.slow
 def test_committed_keys_anti_join_shuffles_batch_once(
-    spark, dataset, tmp_path_factory, anti_join_plan
+    spark, dataset, tmp_path_factory, anti_join_plan, scan_root_dirs
 ):
-    """The per-batch anti-join reads the committed keys through the catalog
-    table, pruned to the batch's days by PartitionFilters, and the batch
-    reaches the join still hash-partitioned by the dedup aggregate: the
-    only other Exchange is the thin committed-keys slice's."""
-    from log_server_spark.plans.pipeline import _committed_keys, _keys_table
+    """The per-batch anti-join reads the committed keys from the batch's
+    day directories, and the batch reaches the join still hash-partitioned
+    by the dedup aggregate: the only other Exchange is the thin
+    committed-keys slice's."""
+    from log_server_spark.plans.pipeline import _committed_keys
 
     pages = os.path.join(dataset, "pages")
     wh_dir = str(tmp_path_factory.mktemp("r3_bk_wh"))
     run_pipeline(spark, pages, wh_dir, batch_files=2)
     wh = Warehouse(wh_dir, spark)
     assert os.path.isfile(os.path.join(wh_dir, "records_keys.bucketed"))
-    assert spark.catalog.tableExists(_keys_table(wh))
 
     lo = wh.read(RECORDS_KEYS).agg(F.min("ts_millis")).collect()[0][0]
     hi = wh.read(RECORDS_KEYS).agg(F.max("ts_millis")).collect()[0][0]
+    committed = _committed_keys(wh, (lo, hi))
+    # the range spans every committed day: every day directory is scanned
+    assert scan_root_dirs(committed) == sorted(
+        glob.glob(os.path.join(wh.path(RECORDS_KEYS), "batch=*", "day=*"))
+    )
     ok = wh.read(RECORDS).filter(F.col("status") == "ok").drop("batch", "sink")
-    plan = anti_join_plan(ok, _committed_keys(wh, (lo, hi)))
-    (scan,) = [line for line in plan.splitlines() if "FileScan" in line and "records_keys" in line]
-    assert "PartitionFilters: [isnotnull(day#" in scan, scan
-    assert ">= " in scan.split("PartitionFilters:")[1].split("]")[0], scan
+    plan = anti_join_plan(ok, committed)
+    assert len([line for line in plan.splitlines() if "FileScan" in line and "records_keys" in line]) == 1
 
 
 @pytest.mark.parametrize(

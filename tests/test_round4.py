@@ -262,7 +262,7 @@ def test_keys_written_through_a_bucketed_table_still_dedup_and_archive(spark, tm
 
     from log_server_spark.cli import main as cli_main
     from log_server_spark.datagen import write_dataset
-    from log_server_spark.plans.pipeline import KEYS_MARKER, _keys_desync
+    from log_server_spark.plans.pipeline import KEYS_MARKER
 
     data = str(tmp_path_factory.mktemp("r4_legacy_data"))
     write_dataset(data, seed=17, n=300, num_files=2)
@@ -294,7 +294,6 @@ def test_keys_written_through_a_bucketed_table_still_dedup_and_archive(spark, tm
     os.rename(legacy, wh.path(RECORDS_KEYS))
     with open(os.path.join(wh_dir, KEYS_MARKER), "w") as f:
         f.write("4")
-    _keys_desync(wh)
     files = glob.glob(os.path.join(wh.path(RECORDS_KEYS), "**", "*.parquet"), recursive=True)
     assert files and all(re.search(r"_0000[0-3]\.c000", f) for f in files), files
     assert {tuple(r) for r in wh.read(RECORDS_KEYS).select(*keys_cols).collect()} == want_keys
