@@ -244,18 +244,16 @@ class Warehouse:
     def read(self, name: str) -> DataFrame:
         return read_parquet(self.spark, self.path(name))
 
-    def write_small(
-        self, rows: list[tuple], schema_ddl: str, name: str, filename: str | None = None
-    ) -> None:
+    def write_small(self, rows: list[tuple], schema_ddl: str, name: str, filename: str) -> None:
         """Append a tiny table (lineage/metrics rows) driver-side via pyarrow.
 
         A 2-row bookkeeping append costs ~3 s as a Spark job in local mode
         (job scheduling + committer); pyarrow writes it in milliseconds. The
         files are plain parquet parts, so ``read`` sees them like any other.
 
-        Pass ``filename`` (e.g. the batch id) to make the write idempotent:
-        a reprocessed batch overwrites its own bookkeeping file instead of
-        appending a duplicate row.
+        The file is named by ``filename`` (the batch id), which makes the
+        write idempotent: a reprocessed batch overwrites its own bookkeeping
+        file instead of appending a duplicate row.
 
         Crash-atomic: the file is written under a hidden temp name in the
         same directory (skipped by Spark, pyarrow and ``_visible``) and
@@ -264,8 +262,6 @@ class Warehouse:
         a batch's commit record, so a crash before its rename leaves an
         uncommitted batch, which the torn-batch sweep reruns.
         """
-        import time as _time
-
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -286,16 +282,10 @@ class Warehouse:
         tbl = pa.table({f.name: pa.array(list(c), f.type) for f, c in zip(schema, cols)})
         d = self.path(name)
         os.makedirs(d, exist_ok=True)
-        tag = filename if filename is not None else f"{_time.time_ns():020d}"
-        final = os.path.join(d, f"part-{tag}.parquet")
-        tmp = os.path.join(d, f".part-{tag}.parquet{_SMALL_TMP}")
+        final = os.path.join(d, f"part-{filename}.parquet")
+        tmp = os.path.join(d, f".part-{filename}.parquet{_SMALL_TMP}")
         pq.write_table(tbl, tmp)
         os.replace(tmp, final)
-
-    def drop(self, name: str) -> None:
-        p = self.path(name)
-        if os.path.isdir(p):
-            shutil.rmtree(p)
 
     # -- archived (read-only) batches ------------------------------------
     # One id per line in <root>/archived_batches; `archive` marks every

@@ -5,9 +5,10 @@ Mirrors the reference's per-segment stats (SURVEY.md A3: LogServerDb.info
 entry count HeaderStorage :175). The reference reads each segment's stored
 head stats rather than its records; ``plans.pipeline.segment_stats`` does
 the same with the per-batch partials, driver-side with pyarrow, and the
-answer becomes a local relation: no Spark job. The published per-sink and
-windowed aggregates (A1, A2) are not computed here:
-``plans.pipeline.refresh_aggregates`` merges the same partials into them.
+answer becomes a local relation: no Spark job. The per-sink and windowed
+aggregates (A1, A2) are not computed here, and no update publishes them:
+``plans.pipeline.refresh_aggregates`` merges the same partials into one
+lazy frame when they are asked for.
 """
 
 from __future__ import annotations

@@ -59,18 +59,17 @@ Scale properties:
 - per-batch driver actions are collapsed to: one stats aggregation on the
   persisted parse output, the records write (ingest counters ride it as
   ``df.observe`` metrics — zero extra jobs), and two small read-backs of
-  the just-written batch partition (keys projection + partial aggregates),
-  plus the one partials merge of ``refresh_aggregates`` (skipped by an
-  update that changed no partials). That is ~16 jobs for a steady update
-  of ~1k pages, AQE shuffle-map jobs included, and none of them is
-  planning or bookkeeping: every parquet read pins its
-  schema from one footer read driver-side (``catalog.read_parquet``, no
-  schema-inference job), and lineage plus the newest partials file are
-  read with pyarrow;
-- aggregates refresh by MERGING per-batch partials (counts/min/max/sums and
-  HLL sketch registers via ``hll_union_agg``) — O(batches x sinks x days)
-  rows, never a rescan of the records table. The partials are the only
-  aggregate source;
+  the just-written batch partition (keys projection + partial aggregates).
+  That is ~14 jobs for a steady update of ~1k pages, AQE shuffle-map jobs
+  included, and none of them is planning or bookkeeping: every parquet
+  read pins its schema from one footer read driver-side
+  (``catalog.read_parquet``, no schema-inference job), and lineage plus
+  the newest partials file are read with pyarrow;
+- no rollup is published: the per-sink and windowed aggregates are ONE
+  lazy merge of the per-batch partials (counts/min/max/sums and HLL sketch
+  registers via ``hll_union_agg``), built on demand by
+  ``refresh_aggregates`` — O(batches x sinks x days) rows, never a rescan
+  of the records table. The partials are the only aggregate source;
 - the read path answers from the same two indexes, driver-side with
   pyarrow and no Spark job: ``lookup_records`` (get) probes the keys for
   the batches holding a key and reads only those, ``segment_stats`` (info)
@@ -105,8 +104,6 @@ RECORDS_KEYS = "records_keys"
 LINEAGE = "lineage"
 METRICS_INGEST = "metrics_ingest"
 METRICS_PARTIALS = "metrics_partials"
-METRICS_SINK = "metrics_sink_stats"
-METRICS_WINDOWED = "metrics_windowed"
 
 LINEAGE_SCHEMA = "batch string, unit string, status string, n_pages long, committed_at double"
 INGEST_SCHEMA = (
@@ -292,7 +289,8 @@ def sweep_torn_batches(wh: Warehouse, done: set | None = None) -> list[str]:
             swept.append(bid)
     # a batch that crashed after ``_write_batch_index`` left its partials
     # (and maybe its ingest counters): they describe rows no records file
-    # holds any more, and ``info`` and the aggregates read the partials
+    # holds any more, and ``info`` and ``refresh_aggregates`` read the
+    # partials
     for bid in swept:
         for table in (METRICS_PARTIALS, METRICS_INGEST):
             f = os.path.join(wh.path(table), f"part-{bid}.parquet")
@@ -655,92 +653,93 @@ def _run_batch_inner(
     # partials' 1-day window starts on, which ``info`` reports
     parsed = parsed.withColumn("day", _ts_day(F.unix_millis("warc_ts")))
     parsed.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        ok = parsed.filter(F.col("status") == "ok")
+        # idempotent error sink: an exact-duplicate malformed page (same url,
+        # same bytes — datagen's i%13==6 class) parses to byte-identical error
+        # rows; re-ingesting it must not double the error sink any more than
+        # the hash dedup lets it double the ok sink. Full-row distinct is the
+        # deterministic rule: only identical rows collapse, so two DIFFERENT
+        # malformed versions of one url (same (url, seq), different text) both
+        # survive. Cheap at scale: errors are a thin slice and the all-column
+        # HashAggregate collapses duplicates map-side before the shuffle.
+        errors = parsed.filter(F.col("status") != "ok").dropDuplicates()
+        kept, _ = split_duplicates(ok)
 
-    ok = parsed.filter(F.col("status") == "ok")
-    # idempotent error sink: an exact-duplicate malformed page (same url,
-    # same bytes — datagen's i%13==6 class) parses to byte-identical error
-    # rows; re-ingesting it must not double the error sink any more than
-    # the hash dedup lets it double the ok sink. Full-row distinct is the
-    # deterministic rule: only identical rows collapse, so two DIFFERENT
-    # malformed versions of one url (same (url, seq), different text) both
-    # survive. Cheap at scale: errors are a thin slice and the all-column
-    # HashAggregate collapses duplicates map-side before the shuffle.
-    errors = parsed.filter(F.col("status") != "ok").dropDuplicates()
-    kept, _ = split_duplicates(ok)
+        # ONE aggregation materializes the persist and yields every driver-side
+        # number the rest of the batch needs (ts-range gate + ingest counters);
+        # page count = rows with seq 0 (the parser emits >= 1 record per page)
+        is_ok = F.when(F.col("status") == "ok", 1).otherwise(0)
+        st = parsed.agg(
+            F.min(F.when(F.col("status") == "ok", F.col("ts_millis"))).alias("lo"),
+            F.max(F.when(F.col("status") == "ok", F.col("ts_millis"))).alias("hi"),
+            F.sum(is_ok).alias("n_ok"),
+            F.sum(F.when(F.col("seq") == 0, 1).otherwise(0)).alias("n_pages"),
+        ).collect()[0]
+        ts_range = (st["lo"], st["hi"]) if st["lo"] is not None else None
+        n_ok = st["n_ok"] or 0
+        n_pages = st["n_pages"] or 0
 
-    # ONE aggregation materializes the persist and yields every driver-side
-    # number the rest of the batch needs (ts-range gate + ingest counters);
-    # page count = rows with seq 0 (the parser emits >= 1 record per page)
-    is_ok = F.when(F.col("status") == "ok", 1).otherwise(0)
-    st = parsed.agg(
-        F.min(F.when(F.col("status") == "ok", F.col("ts_millis"))).alias("lo"),
-        F.max(F.when(F.col("status") == "ok", F.col("ts_millis"))).alias("hi"),
-        F.sum(is_ok).alias("n_ok"),
-        F.sum(F.when(F.col("seq") == 0, 1).otherwise(0)).alias("n_pages"),
-    ).collect()[0]
-    ts_range = (st["lo"], st["hi"]) if st["lo"] is not None else None
-    n_ok = st["n_ok"] or 0
-    n_pages = st["n_pages"] or 0
+        kept = anti_join_committed(kept, _committed_keys(wh, ts_range))
 
-    kept = anti_join_committed(kept, _committed_keys(wh, ts_range))
+        routed = with_sink(
+            enrich(kept.unionByName(errors), lang_lookup, domain_lookup)
+        ).withColumn("batch", F.lit(batch_id))
 
-    routed = with_sink(
-        enrich(kept.unionByName(errors), lang_lookup, domain_lookup)
-    ).withColumn("batch", F.lit(batch_id))
+        # ingest counters (A4) ride the write job as observed metrics — the
+        # reference counts added/duplicates on the ingest pass itself
+        # (MemoryWiseLogWrapper.scala:97-111); no extra job, no read-back
+        obs = Observation(f"ingest_{batch_id}")
+        routed = routed.observe(
+            obs,
+            F.count(F.lit(1)).alias("n_routed"),
+            F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("n_added"),
+        )
 
-    # ingest counters (A4) ride the write job as observed metrics — the
-    # reference counts added/duplicates on the ingest pass itself
-    # (MemoryWiseLogWrapper.scala:97-111); no extra job, no read-back
-    obs = Observation(f"ingest_{batch_id}")
-    routed = routed.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_routed"),
-        F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("n_added"),
-    )
+        # defuse hot-sink skew: spread each output partition across `salt`
+        # reducers. Keeping reducer keys aligned with the output partition
+        # columns bounds the file count at |dirs| * salt (a hash-partitioned
+        # shuffle that ignores the output layout would make every reducer write
+        # every directory — thousands of tiny files). When previous batches'
+        # partials exist, the salt adapts to the OBSERVED per-sink volume
+        # (uniform salt gives the coldest sink as many file slots as the
+        # hottest): the hot sink gets proportionally more reducers, cold sinks
+        # collapse to one file, total reducer groups stay ~|sinks| * salt.
+        out = routed.repartition(
+            F.col("sink"), F.pmod(F.hash("url"), _salt_expr(wh, salt, total_bytes))
+        )
+        # live-segment write cost: the reference keeps live segments
+        # UNcompressed and gzips only at archive time (BigStorage.scala:338-350)
+        # — the analogous lifecycle here is a cheap codec on the ingest write
+        # (zstd level 1; the default level 3 costs ~15% of batch wall for ~7%
+        # smaller files) and zstd level 6 when `archive` rewrites the partition.
+        # The level is a per-write option, so no other write inherits it.
+        (
+            out.write.mode("append")
+            .option(ZSTD_LEVEL, "1")
+            .partitionBy("batch", "sink")
+            .parquet(wh.path(RECORDS))
+        )
 
-    # defuse hot-sink skew: spread each output partition across `salt`
-    # reducers. Keeping reducer keys aligned with the output partition
-    # columns bounds the file count at |dirs| * salt (a hash-partitioned
-    # shuffle that ignores the output layout would make every reducer write
-    # every directory — thousands of tiny files). When previous batches'
-    # partials exist, the salt adapts to the OBSERVED per-sink volume
-    # (uniform salt gives the coldest sink as many file slots as the
-    # hottest): the hot sink gets proportionally more reducers, cold sinks
-    # collapse to one file, total reducer groups stay ~|sinks| * salt.
-    out = routed.repartition(
-        F.col("sink"), F.pmod(F.hash("url"), _salt_expr(wh, salt, total_bytes))
-    )
-    # live-segment write cost: the reference keeps live segments
-    # UNcompressed and gzips only at archive time (BigStorage.scala:338-350)
-    # — the analogous lifecycle here is a cheap codec on the ingest write
-    # (zstd level 1; the default level 3 costs ~15% of batch wall for ~7%
-    # smaller files) and zstd level 6 when `archive` rewrites the partition.
-    # The level is a per-write option, so no other write inherits it.
-    (
-        out.write.mode("append")
-        .option(ZSTD_LEVEL, "1")
-        .partitionBy("batch", "sink")
-        .parquet(wh.path(RECORDS))
-    )
-
-    # read the just-written batch partition back (small, column-pruned):
-    # (a) append its dedup keys to the day-partitioned keys table — the
-    #     .hash index file of this "segment" (HeaderStorage.scala:283-288);
-    # (b) fold its partial aggregates (mergeable: sums/min/max + HLL sketch
-    #     registers) into metrics_partials for incremental refresh.
-    # A zero-ROUTED batch (no rows, or every parseable record a cross-batch
-    # duplicate and no error rows) wrote nothing: it skips both, adds 0 with
-    # 0 errors, and still commits lineage below so resume skips it.
-    batch_dir = os.path.join(wh.path(RECORDS), f"batch={batch_id}")
-    added = n_errors = 0
-    if os.path.isdir(batch_dir):
-        # reading the observation on a zero-row write job fails JVM-side (no
-        # metrics row) — only read when the batch wrote data
-        got = obs.get
-        added = int(got["n_added"] or 0)
-        n_errors = int(got["n_routed"] or 0) - added
-        _write_batch_index(spark, wh, batch_id, batch_dir)
-    parsed.unpersist()
+        # read the just-written batch partition back (small, column-pruned):
+        # (a) append its dedup keys to the day-partitioned keys table — the
+        #     .hash index file of this "segment" (HeaderStorage.scala:283-288);
+        # (b) fold its partial aggregates (mergeable: sums/min/max + HLL sketch
+        #     registers) into metrics_partials, which info and the rollups read.
+        # A zero-ROUTED batch (no rows, or every parseable record a cross-batch
+        # duplicate and no error rows) wrote nothing: it skips both, adds 0 with
+        # 0 errors, and still commits lineage below so resume skips it.
+        batch_dir = os.path.join(wh.path(RECORDS), f"batch={batch_id}")
+        added = n_errors = 0
+        if os.path.isdir(batch_dir):
+            # reading the observation on a zero-row write job fails JVM-side (no
+            # metrics row) — only read when the batch wrote data
+            got = obs.get
+            added = int(got["n_added"] or 0)
+            n_errors = int(got["n_routed"] or 0) - added
+            _write_batch_index(spark, wh, batch_id, batch_dir)
+    finally:
+        parsed.unpersist()
     # covers in-batch AND cross-batch dups — the reference counts both
     n_dups = int(n_ok) - added
     wh.write_small(
@@ -820,12 +819,14 @@ def _write_batch_index(spark: SparkSession, wh: Warehouse, batch_id: str, batch_
     # thread-safe), halving this leg of the per-batch serial floor
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(2) as pool:
-        f_keys = pool.submit(_write_keys)
-        f_partials = pool.submit(_collect_partials)
-        f_keys.result()
-        partials = f_partials.result()
-    written.unpersist()
+    try:
+        with ThreadPoolExecutor(2) as pool:
+            f_keys = pool.submit(_write_keys)
+            f_partials = pool.submit(_collect_partials)
+            f_keys.result()
+            partials = f_partials.result()
+    finally:
+        written.unpersist()
     wh.write_small(
         [
             (batch_id, r["sink"], r["window_start"], r["n_rows"], r["n_ok"],
@@ -838,30 +839,27 @@ def _write_batch_index(spark: SparkSession, wh: Warehouse, batch_id: str, batch_
     )
 
 
-def refresh_aggregates(spark: SparkSession, wh: Warehouse) -> None:
-    """Rebuild the per-sink + windowed aggregate tables (A1-A3) by MERGING
-    the per-batch partials — sums/min/max add up, distinct-url sketches
-    merge via ``hll_union_agg`` — reading only O(batches x sinks x days)
-    bookkeeping rows, never the records table. Per-sink distinct-key count
-    equals the per-sink ok-row count by the dedup invariant (every
-    committed ok row holds a globally unique key).
+def refresh_aggregates(wh: Warehouse) -> DataFrame:
+    """The per-sink and windowed aggregates (A1, A2) of ``wh`` as ONE lazy
+    frame that merges the per-batch partials — sums/min/max add up,
+    distinct-url sketches merge via ``hll_union_agg`` — over O(batches x
+    sinks x days) bookkeeping rows, never the records table. It writes
+    nothing; its one grouping-sets job runs when the frame is collected.
+    Per-sink distinct-key count equals the per-sink ok-row count by the
+    dedup invariant (every committed ok row holds a globally unique key).
 
-    The partials are the one aggregate source: every committed batch that
-    wrote records wrote its partials before its lineage, and a warehouse
-    from before the partials table also predates the keys marker, so
-    ``_check_keys_marker`` refuses it.
-
-    Written last, a hidden fingerprint of the partials files it merged
-    (``_aggregates_current``) lets a later update that commits nothing skip
-    the refresh; a crash before it is written leaves none, so the next
-    update refreshes.
-    """
-    source = _partials_fingerprint(wh)
-    # ONE grouping-sets merge job over the tiny partials table yields both
-    # the per-sink and the per-(window, sink) rollups
-    rows = (
-        wh.read(METRICS_PARTIALS)
-        .groupingSets([["sink"], ["window_start", "sink"]], "sink", "window_start")
+    A ``per_sink`` row (window aggregated out) carries ``sink, n_rows,
+    n_keys, n_urls_approx, min_ts, max_ts, total_bytes``; every other row
+    is one (``window_start``, ``sink``) 1-day window. The partials are the
+    one aggregate source: every committed batch that wrote records wrote
+    its partials before its lineage. The name is kept from when ``update``
+    published these rows as tables on every commit."""
+    partials = (
+        wh.read(METRICS_PARTIALS) if wh.exists(METRICS_PARTIALS)
+        else wh.spark.createDataFrame([], PARTIALS_SCHEMA)
+    )
+    return (
+        partials.groupingSets([["sink"], ["window_start", "sink"]], "sink", "window_start")
         .agg(
             F.sum("n_rows").alias("n_rows"),
             F.sum("n_ok").alias("n_keys"),
@@ -869,35 +867,9 @@ def refresh_aggregates(spark: SparkSession, wh: Warehouse) -> None:
             F.min("min_ts").alias("min_ts"),
             F.max("max_ts").alias("max_ts"),
             F.sum("total_bytes").alias("total_bytes"),
-            F.grouping_id().alias("gid"),
+            (F.grouping("window_start") == 1).alias("per_sink"),
         )
-        .collect()
     )
-    # gid bits follow (sink, window_start): 0b01 = window aggregated out
-    sink_out = [
-        (r["sink"], r["n_rows"], r["n_keys"], r["n_urls_approx"],
-         r["min_ts"], r["max_ts"], r["total_bytes"])
-        for r in rows if r["gid"] == 0b01
-    ]
-    win_out = [
-        (r["window_start"], r["sink"], r["n_rows"], r["n_urls_approx"])
-        for r in rows if r["gid"] == 0b00
-    ]
-    for name in (METRICS_SINK, METRICS_WINDOWED):
-        wh.drop(name)
-    wh.write_small(
-        sink_out,
-        "sink string, n_rows long, n_keys long, n_urls_approx long, "
-        "min_ts long, max_ts long, total_bytes long",
-        METRICS_SINK,
-    )
-    wh.write_small(
-        win_out,
-        "window_start timestamp, sink string, n_rows long, n_urls_approx long",
-        METRICS_WINDOWED,
-    )
-    with open(os.path.join(wh.path(METRICS_WINDOWED), AGGREGATES_SOURCE), "w") as f:
-        f.write(source)
 
 
 def segment_stats(whs: list[Warehouse]):
@@ -940,29 +912,6 @@ def segment_stats(whs: list[Warehouse]):
     return out.sort_by([("sink", "ascending"), ("day", "ascending")], null_placement="at_start")
 
 
-# ``_``-prefixed, so no Parquet read of the windowed table sees it
-AGGREGATES_SOURCE = "_partials_fingerprint"
-
-
-def _partials_fingerprint(wh: Warehouse) -> str:
-    """Name, size and mtime of every partials file: any batch commit, drop
-    or archive merge changes at least one."""
-    lines = []
-    for f in sorted(glob.glob(os.path.join(wh.path(METRICS_PARTIALS), "*.parquet"))):
-        st = os.stat(f)
-        lines.append(f"{os.path.basename(f)} {st.st_size} {st.st_mtime_ns}\n")
-    return "".join(lines)
-
-
-def _aggregates_current(wh: Warehouse) -> bool:
-    """Whether the published aggregates were merged from today's partials."""
-    try:
-        with open(os.path.join(wh.path(METRICS_WINDOWED), AGGREGATES_SOURCE)) as f:
-            return f.read() == _partials_fingerprint(wh)
-    except FileNotFoundError:
-        return False
-
-
 def run_pipeline(
     spark: SparkSession,
     pages_dir: str,
@@ -975,6 +924,13 @@ def run_pipeline(
     lock_timeout: float = 60.0,
     source_format: str = "pages",
 ) -> list[BatchResult]:
+    """Ingest the uncommitted units under ``pages_dir`` into the warehouse
+    at ``warehouse_root`` (the protocol in the module docstring); returns
+    one ``BatchResult`` per committed batch.
+
+    ``aggregates`` is not read: an update publishes no rollup (see
+    ``refresh_aggregates``). It stays in the signature because existing
+    callers still pass it."""
     wh = Warehouse(warehouse_root, spark)
     # absolute, like the units: the JVM resolves a relative path against its
     # own working directory, not this process's
@@ -1023,11 +979,5 @@ def run_pipeline(
                     salt=salt, source_format=source_format,
                 )
             )
-        # a no-op update (nothing committed, partials unchanged since the
-        # last refresh) submits no Spark job at all
-        if aggregates and wh.exists(METRICS_PARTIALS) and (
-            results or not _aggregates_current(wh)
-        ):
-            refresh_aggregates(spark, wh)
     return results
 

@@ -123,14 +123,14 @@ def test_archive_preserves_get(spark, env, capsys):
 @pytest.mark.slow
 def test_archive_then_keep_ingesting(spark, tmp_path_factory, capsys):
     """update 2 of 4 units, archive, update the other 2: the new batches
-    append under new, writable ids, and get, info and the published
+    append under new, writable ids, and get, info and the on-demand
     aggregates read the whole table — the same ok records as one
     un-archived run over all 4 units."""
     from pyspark.sql import functions as F
 
     from log_server_spark.catalog import Warehouse
     from log_server_spark.operators.dedup import DEDUP_KEY
-    from log_server_spark.plans.pipeline import METRICS_SINK, RECORDS, run_pipeline
+    from log_server_spark.plans.pipeline import RECORDS, refresh_aggregates, run_pipeline
 
     d = tmp_path_factory.mktemp("cli_lifecycle")
     data = str(d / "data")
@@ -175,7 +175,7 @@ def test_archive_then_keep_ingesting(spark, tmp_path_factory, capsys):
         assert len(got) == want > 0
     cli_main(["info", "--warehouse", wh_dir])
     assert int(capsys.readouterr().out.strip().splitlines()[-1].split(":")[1]) == n
-    assert wh.read(METRICS_SINK).agg(F.sum("n_rows")).collect()[0][0] == n
+    assert sum(r["n_rows"] for r in refresh_aggregates(wh).collect() if r["per_sink"]) == n
 
     ref_dir = str(d / "ref_wh")
     run_pipeline(spark, os.path.join(data, "pages"), ref_dir, batch_files=1)

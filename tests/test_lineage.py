@@ -205,6 +205,32 @@ def test_a_session_sees_batches_another_process_committed(spark, tmp_path, linea
     _assert_records_match(root, feed.model)
 
 
+def test_a_failed_batch_releases_its_cache(spark, tmp_path, monkeypatch, lineage_invariants):
+    """A batch that fails after caching its parse output and its written
+    partition unpersists both, so a long-lived session keeps no block of
+    it; the next update reruns the batch."""
+    from log_server_spark.plans import pipeline
+
+    feed = _Feed(tmp_path / "data")
+    root = str(tmp_path / "wh")
+    feed.land(0)
+    cached = lambda: spark.sparkContext._jsc.getPersistentRDDs().size()  # noqa: E731
+    before = cached()
+
+    def crash(path):  # called by ``_write_batch_index`` once its read-back is cached
+        raise OSError("crashed while indexing the batch")
+
+    monkeypatch.setattr(pipeline, "_dir_bytes", crash)
+    with pytest.raises(OSError, match="crashed"):
+        run_pipeline(spark, feed.pages, root, batch_files=1)
+    monkeypatch.undo()
+    assert cached() == before
+
+    assert [r.batch for r in run_pipeline(spark, feed.pages, root, batch_files=1)] == ["b00000"]
+    lineage_invariants(root)
+    _assert_records_match(root, feed.model)
+
+
 @pytest.mark.parametrize("mode", ["before_write", "half_written"])
 def test_a_crash_in_the_lineage_write_reruns_the_batch(
     spark, tmp_path, monkeypatch, lineage_invariants, mode

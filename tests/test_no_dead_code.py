@@ -9,7 +9,9 @@ this finds names nothing mentions; it does not prove reachability. An
 import the importing module never uses is not a use."""
 
 import ast
+import contextlib
 import pathlib
+import types
 
 import log_server_spark
 
@@ -22,6 +24,9 @@ ALLOWED_UNREFERENCED = {
     "write_saved": "writer for the .saved format the pipeline reads (fixtures, migration)",
     "asof_enrich_intervals": "interval-table variant of the as-of join, public API",
     "hash_sample": "single-fraction form of hash_stratified_sample, public API",
+    "refresh_aggregates": (
+        "public rollup API, read on demand; perfbench's traced runs wrap it by name"
+    ),
 }
 
 
@@ -85,3 +90,30 @@ def test_every_top_level_name_is_used():
     assert unexplained == []
     # a stale entry (renamed, deleted, or now used) leaves the allowlist
     assert sorted(set(ALLOWED_UNREFERENCED) - set(unreferenced)) == []
+
+
+def test_traced_benchmark_wraps_the_pipeline_by_name(monkeypatch):
+    """``perfbench``'s traced runs look up ``run_batch`` and
+    ``refresh_aggregates`` on the pipeline module by name and wrap each in
+    a span; a rename must fail here, not only in a traced run."""
+    from perfbench.workloads import _trace_pipeline
+
+    from log_server_spark.plans import pipeline
+
+    # stubs stand in for the entry points (setattr raises on a missing
+    # name) and are restored, with the wrappers, when the test ends
+    monkeypatch.setattr(pipeline, "run_batch", lambda *a, **k: ("batch", a, k))
+    monkeypatch.setattr(pipeline, "refresh_aggregates", lambda *a, **k: ("rollup", a, k))
+    spans = []
+
+    @contextlib.contextmanager
+    def span(name, op):
+        spans.append((name, op))
+        yield
+
+    run = types.SimpleNamespace(tr=types.SimpleNamespace(span=span), current_op=None)
+    _trace_pipeline(run, pipeline)
+    assert run.current_op == -1
+    assert pipeline.run_batch(1, salt=2) == ("batch", (1,), {"salt": 2})
+    assert pipeline.refresh_aggregates(3) == ("rollup", (3,), {})
+    assert spans == [("pipeline.batch", -1), ("pipeline.refresh", -1)]

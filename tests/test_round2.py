@@ -13,8 +13,6 @@ from log_server_spark.catalog import Warehouse, WarehouseLockTimeout
 from log_server_spark.datagen import write_dataset
 from log_server_spark.plans.pipeline import (
     METRICS_PARTIALS,
-    METRICS_SINK,
-    METRICS_WINDOWED,
     RECORDS,
     RECORDS_KEYS,
     _committed_keys,
@@ -83,9 +81,10 @@ def test_keys_match_records(spark, warehouse):
 
 @pytest.mark.slow
 def test_incremental_refresh_never_rescans_records(spark, warehouse):
-    """Aggregate refresh must read ONLY the per-batch partials: it still
-    works — and reproduces the same numbers — with the records table gone."""
-    sink_before = {r["sink"]: r for r in warehouse.read(METRICS_SINK).collect()}
+    """The per-sink and windowed aggregates read ONLY the per-batch
+    partials: the frame still collects — to the same rows — with the
+    records table gone, and its numbers match a rescan of the records."""
+    before = sorted(map(tuple, refresh_aggregates(warehouse).collect()), key=str)
     records = warehouse.read(RECORDS)
     want = {
         r["sink"]: (r["n"], r["lo"], r["hi"], r["b"])
@@ -105,14 +104,15 @@ def test_incremental_refresh_never_rescans_records(spark, warehouse):
     hidden = warehouse.path(RECORDS) + ".hidden"
     os.rename(warehouse.path(RECORDS), hidden)
     try:
-        refresh_aggregates(spark, warehouse)
-        got = {r["sink"]: r for r in warehouse.read(METRICS_SINK).collect()}
+        rows = refresh_aggregates(warehouse).collect()
     finally:
         os.rename(hidden, warehouse.path(RECORDS))
+    assert sorted(map(tuple, rows), key=str) == before
+    got = {r["sink"]: r for r in rows if r["per_sink"]}
     assert set(got) == set(want)
     assert "error" in want  # the fixture plants malformed pages
     for sink, (n, lo, hi, b) in want.items():
-        assert got[sink]["n_rows"] == n == sink_before[sink]["n_rows"]
+        assert got[sink]["n_rows"] == n
         assert got[sink]["min_ts"] == lo
         assert got[sink]["max_ts"] == hi
         assert got[sink]["total_bytes"] == b
@@ -121,8 +121,8 @@ def test_incremental_refresh_never_rescans_records(spark, warehouse):
         # merged HLL sketches track the exact distinct-url count
         exact = n_urls[sink]
         assert abs(got[sink]["n_urls_approx"] - exact) <= max(1, 0.02 * exact), sink
-    win = warehouse.read(METRICS_WINDOWED)
-    assert win.agg(F.sum("n_rows")).collect()[0][0] == records.count()
+    win = [r for r in rows if not r["per_sink"]]
+    assert sum(r["n_rows"] for r in win) == records.count()
 
 
 @pytest.mark.slow
